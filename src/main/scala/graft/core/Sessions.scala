@@ -27,10 +27,8 @@ object Sessions {
     // the stage (measured: d2's per-doc set aggregate 0.58 s in one
     // task). 64 KiB keeps such stages parallel; at cluster scale the
     // floor is irrelevant (real partitions are orders of magnitude
-    // larger — parallelism and advisory size govern). Env-overridable
-    // for cluster postures where tiny partitions are undesirable.
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+    // larger — parallelism and advisory size govern).
+    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.ui.enabled", "false")
     // TypedImperativeAggregates (topk_pairs and friends) plan as
@@ -42,8 +40,7 @@ object Sessions {
     // map-side hash truncation without). The engine's object-aggregate
     // buffers are all O(k) (k = a neighbor/explainer count), so a
     // million hashed keys per partition is ~100 MB, not a spill risk.
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OBJ_FALLBACK", "1048576"))
+    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
     .config("spark.sql.parquet.compression.codec", "zstd")
     // pyarrow-written TIMESTAMP(NANOS) columns (events.ts) are otherwise
     // unreadable; Tables.events converts the long back to a timestamp.

@@ -278,8 +278,9 @@ object Encoding {
     * across the range sort like any other rows. Exactness: the target
     * rides as integer thousandths (exact in double), the prefix sums
     * are therefore exact integers, and the final encode is one fixed
-    * double tree. Nulls in the target are not supported (document-level
-    * contract — filter or impute first). */
+    * double tree. Rows that repeat a `tieCols` tuple are ordered by the
+    * remaining input columns. Nulls in the target are not supported
+    * (document-level contract — filter or impute first). */
   case class OrderedTargetEncode(c: String, target: String,
                                  m: Double = 10.0, seed: Long = 42L,
                                  tieCols: Seq[String]) extends TableOp {
@@ -299,8 +300,14 @@ object Encoding {
         .withColumn("__ok", okey)
         .withColumn("__ts", round(col(target).cast("double") * 1000, 0))
         .withColumn("__one", lit(1.0))
+      // every other input column breaks what ties remain, so the order
+      // is total up to rows equal in every column (interchangeable):
+      // repeated tieCols tuples then encode the same under any
+      // partitioning or input order. Project before calling to keep the
+      // sort key narrow.
+      val rest = df.columns.toSeq.filterNot((c +: tieCols).contains)
       val order = (col(c).asc +: col("__ok").asc +:
-        tieCols.map(col(_).asc))
+        tieCols.map(col(_).asc)) ++ rest.map(col(_).asc)
       val cum = Ordinals.withRunningTotals(keyed, order,
         Seq("__ts" -> "__cs", "__one" -> "__cn"))
       // per-category offsets: totals of all categories BEFORE this one

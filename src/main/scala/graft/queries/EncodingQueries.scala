@@ -69,11 +69,14 @@ object EncodingQueries {
       // tieCols include the TARGET: (orderkey, linenumber) is not
       // unique in the fixture (11k planted dup keys), and rows tying on
       // the full (key..., quantity) tuple are interchangeable — the
-      // output multiset is order-invariant, so the oracle stays exact
+      // output multiset is order-invariant, so the oracle stays exact.
+      // The projection keeps the operator's final tie-breaker (every
+      // other input column) empty.
       Encoding.OrderedTargetEncode("l_returnflag", "l_quantity",
           m = 10.0, seed = 42L,
           tieCols = Seq("l_orderkey", "l_linenumber", "l_quantity"))(
-          Tables.lineitem(s, dir))
+          Tables.lineitem(s, dir).select("l_orderkey", "l_linenumber",
+            "l_returnflag", "l_quantity"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           round(col("l_returnflag_ord_encoded"), 6)
             .as("l_returnflag_ord_encoded"))),

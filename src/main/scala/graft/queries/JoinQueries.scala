@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.core.Tables
 import Q.QueryFn
@@ -31,7 +32,8 @@ object JoinQueries {
       li.join(ord, li("l_orderkey") === ord("o_orderkey"))
         .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+        .agg(round(sum(Q.money("l_extendedprice") * (lit(1) - Q.money("l_discount"))), 2)
+          .cast(DoubleType).as("revenue"))
         .orderBy(desc("revenue"), asc("l_orderkey"))
         .limit(10)
     }),
@@ -49,7 +51,8 @@ object JoinQueries {
         .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
         .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey"))
         .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
+        .agg(round(sum(Q.money("l_extendedprice") * (lit(1) - Q.money("l_discount"))), 2)
+            .cast(DoubleType).as("revenue"),
           count(lit(1)).as("n_items"))
     }),
 
@@ -149,9 +152,10 @@ object JoinQueries {
     }))
 
   val oracles: Map[String, String] = Map(
-    "q3_shipping_priority" -> """
+    "q3_shipping_priority" -> s"""
       SELECT l_orderkey, o_orderdate, o_orderpriority,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+             CAST(round(sum(${Q.moneySql("l_extendedprice")}
+                 * (1 - ${Q.moneySql("l_discount")})), 2) AS DOUBLE) AS revenue
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
@@ -162,9 +166,10 @@ object JoinQueries {
       ORDER BY revenue DESC, l_orderkey ASC
       LIMIT 10""",
 
-    "q5_local_supplier_volume" -> """
+    "q5_local_supplier_volume" -> s"""
       SELECT n_name, year(o_orderdate) AS o_year,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+             CAST(round(sum(${Q.moneySql("l_extendedprice")}
+                 * (1 - ${Q.moneySql("l_discount")})), 2) AS DOUBLE) AS revenue,
              count(*) AS n_items
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Shared plumbing for the driver-checked query packs. Every pack exposes
   * `queries` (name -> (spark, sfDir) => DataFrame) and `oracles`
@@ -25,6 +26,15 @@ object Q {
 
   val NullifiedQtySql: String =
     "CASE WHEN l_linenumber = 3 THEN NULL ELSE l_quantity END"
+
+  /** A money column as exact decimal cents. A double sum rounded to
+    * cents lets the row order decide an exact half cent (q5 read
+    * 8183223.96 or .97 on one seed), so money sums and averages run in
+    * decimal and cast to double only after the round, which keeps the
+    * output schema. [[moneySql]] is the oracle's form. */
+  def money(c: String): Column = col(c).cast(DecimalType(15, 2))
+
+  def moneySql(c: String): String = s"CAST($c AS DECIMAL(15,2))"
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

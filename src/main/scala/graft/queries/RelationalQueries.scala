@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -14,19 +15,25 @@ import Q.QueryFn
 object RelationalQueries {
 
   val queries: Map[String, QueryFn] = Map(
-    "q1_pricing_summary" -> ((s, dir) =>
+    "q1_pricing_summary" -> ((s, dir) => {
+      // exact decimal sums (Q.money); an average is the decimal sum over
+      // the count, exact to 15 places before the round to 4
+      def total(e: Column) = round(sum(e), 2).cast(DoubleType)
+      def mean(c: String) = round(sum(Q.money(c)) / count(c), 4).cast(DoubleType)
+      val disc = Q.money("l_extendedprice") * (lit(1) - Q.money("l_discount"))
       Tables.lineitem(s, dir)
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))),
+          total(Q.money("l_quantity")).as("sum_qty"),
+          total(Q.money("l_extendedprice")).as("sum_base_price"),
+          total(disc).as("sum_disc_price"),
+          total(disc * (lit(1) + Q.money("l_tax"))).as("sum_charge"),
+          mean("l_quantity").as("avg_qty"),
+          mean("l_extendedprice").as("avg_price"),
+          mean("l_discount").as("avg_disc"),
+          count(lit(1)).as("count_order"))
+    }),
 
     "p1_drop_column" -> ((s, dir) =>
       DropColumns("l_comment_none", "l_tax", "l_discount", "l_extendedprice",
@@ -223,19 +230,33 @@ object RelationalQueries {
              CAST(s_flag AS DOUBLE) / CAST(n_total AS DOUBLE) >= 1.0 - 1e-12
       FROM m""",
 
-    "q1_pricing_summary" -> """
+    // Exact decimal money on both sides (Q.money). DuckDB's `/` on
+    // decimals returns DOUBLE, so an average is rounded half up in
+    // integers: floor((200 * cents + n) / (2 * n)) / 10^4, n non-null.
+    "q1_pricing_summary" -> s"""
+      WITH g AS (
+        SELECT l_returnflag, l_linestatus,
+               sum(${Q.moneySql("l_quantity")}) AS q,
+               sum(${Q.moneySql("l_extendedprice")}) AS p,
+               sum(${Q.moneySql("l_discount")}) AS d,
+               sum(${Q.moneySql("l_extendedprice")} * (1 - ${Q.moneySql("l_discount")})) AS dp,
+               sum(${Q.moneySql("l_extendedprice")} * (1 - ${Q.moneySql("l_discount")})
+                   * (1 + ${Q.moneySql("l_tax")})) AS ch,
+               count(l_quantity) AS nq, count(l_extendedprice) AS np,
+               count(l_discount) AS nd, count(*) AS n
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        GROUP BY l_returnflag, l_linestatus)
       SELECT l_returnflag, l_linestatus,
-             round(sum(l_quantity), 2) AS sum_qty,
-             round(sum(l_extendedprice), 2) AS sum_base_price,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-             round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-             round(avg(l_quantity), 4) AS avg_qty,
-             round(avg(l_extendedprice), 4) AS avg_price,
-             round(avg(l_discount), 4) AS avg_disc,
-             count(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      GROUP BY l_returnflag, l_linestatus""",
+             CAST(round(q, 2) AS DOUBLE) AS sum_qty,
+             CAST(round(p, 2) AS DOUBLE) AS sum_base_price,
+             CAST(round(dp, 2) AS DOUBLE) AS sum_disc_price,
+             CAST(round(ch, 2) AS DOUBLE) AS sum_charge,
+             CAST((CAST(q * 100 AS HUGEINT) * 200 + nq) // (2 * nq) AS DOUBLE) / 10000 AS avg_qty,
+             CAST((CAST(p * 100 AS HUGEINT) * 200 + np) // (2 * np) AS DOUBLE) / 10000 AS avg_price,
+             CAST((CAST(d * 100 AS HUGEINT) * 200 + nd) // (2 * nd) AS DOUBLE) / 10000 AS avg_disc,
+             n AS count_order
+      FROM g""",
 
     "p1_drop_column" ->
       "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",

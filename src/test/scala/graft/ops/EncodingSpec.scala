@@ -150,4 +150,24 @@ class EncodingSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out == again, "bit-deterministic")
   }
+
+  test("OrderedTargetEncode: repeated tieCols encode the same under any partitioning and row order") {
+    import spark.implicits._
+    // ids repeat with different targets and payloads, so only the final
+    // tie-breaker orders the rows inside a tie
+    val rows = (0 until 60).map(i =>
+      (i % 7L, if (i % 2 == 0) "a" else "b", (i * 37 % 11).toDouble, s"p$i"))
+    def encode(in: Seq[(Long, String, Double, String)], partitions: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try Encoding.OrderedTargetEncode("cat", "t", m = 2.0, seed = 3L,
+          tieCols = Seq("id"))(in.toDF("id", "cat", "t", "p").repartition(3))
+        .collect().map(_.toString).sorted.toSeq
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val base = encode(rows, 1)
+    assert(encode(rows, 7) == base)
+    assert(encode(new scala.util.Random(5).shuffle(rows), 7) == base)
+    assert(encode(rows.reverse, 1) == base)
+  }
 }
