@@ -79,73 +79,7 @@ object Bench {
     "mm11_video_near_dup", "e8b_sketch_bin", "a14b_sketch_winsorize",
     "a48_bootstrap_quantile_ci", "st16_window_bootstrap_ci")
 
-  /** SPARK_GRAFT_BOARD_CHUNK=N (r10 VERDICT #5): fork a FRESH JVM every
-    * N queries and merge the children's JSON lines. Big single-JVM
-    * repeat=1 boards inflate late-alphabet rows 20-40% from cumulative
-    * JVM state (code-cache pressure, old-gen creep) — a documented
-    * artifact that cost an isolated-recheck cycle every round; chunked
-    * boards keep totals within isolated-sum tolerance. Children inherit
-    * this JVM's classpath and flags (run/fork := true makes both real)
-    * minus the chunk var, plus SPARK_GRAFT_BENCH_ONLY=<their slice>. */
-  private def runChunked(chunk: Int, names: Seq[String]): Unit = {
-    val javaBin = new java.io.File(new java.io.File(
-      sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    val merged = scala.collection.mutable.LinkedHashMap[String, String]()
-    var repeat = "1"
-    names.grouped(chunk).zipWithIndex.foreach { case (slice, i) =>
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(javaBin)
-      jvmArgs.forEach(a => cmd.add(a))
-      cmd.add("-cp"); cmd.add(sys.props("java.class.path"))
-      cmd.add("graft.Bench")
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_CHUNK_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_BENCH_ONLY", slice.mkString(","))
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      System.err.println(s"[bench] chunk $i: ${slice.head}..${slice.last} " +
-        s"(${slice.size} queries, fresh JVM)")
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes, "UTF-8")
-      val code = p.waitFor()
-      require(code == 0, s"chunk $i exited $code")
-      val line = out.linesIterator.find(_.startsWith("{\"metric\""))
-        .getOrElse(sys.error(s"chunk $i emitted no metric line:\n$out"))
-      // child line: {"metric":"total",...,"queries":{"a":1.2,...},"sf":...,"repeat":N}
-      val qs = line.substring(line.indexOf("\"queries\":{") + 11,
-        line.indexOf("}", line.indexOf("\"queries\":{")))
-      qs.split(",").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        merged.put(k.stripPrefix("\"").stripSuffix("\""), v)
-      }
-      repeat = line.substring(line.lastIndexOf("\"repeat\":") + 9)
-        .takeWhile(_.isDigit)
-    }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val qs = merged.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // same failed-count honesty as the single-JVM path below
-    val failed = merged.values.count(_.toDouble < 0)
-    val total = merged.values.map(_.toDouble).filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs,""" +
-      s""""sf":"$sfDir","repeat":$repeat,"chunk":$chunk}""")
-  }
-
   def main(args: Array[String]): Unit = {
-    sys.env.get("SPARK_GRAFT_BOARD_CHUNK").map(_.toInt).filter(_ > 0) match {
-      case Some(chunk) if !sys.env.contains("SPARK_GRAFT_CHUNK_CHILD") =>
-        val all = SparkEntry.queries
-        val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-          case Some(list) => list.split(",").toSeq.filter(all.contains)
-          case None =>
-            if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) all.keys.toSeq.sorted
-            else headline.filter(all.contains)
-        }
-        runChunked(chunk, names)
-        return
-      case _ => ()
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.tune(SparkSession.builder()
@@ -200,8 +134,7 @@ object Bench {
     // with execution memory exactly when 32 concurrent object-heavy
     // tasks need it. Freeing them AFTER each repeat (outside the timed
     // region — the next repeat re-executes everything from parquet, so
-    // nothing computed survives into any timed region) is the in-process
-    // equivalent of the fresh-JVM chunking this file already documents.
+    // nothing computed survives into any timed region).
     // NOT result caching: no query output or intermediate is retained.
     def freeSessionState(): Unit = {
       spark.sharedState.cacheManager.clearCache()

@@ -17,7 +17,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // run queries concurrently (4 driver threads): Spark's scheduler
+    // run queries concurrently (8 driver threads): Spark's scheduler
     // interleaves the jobs, keeping executors busy through the many small
     // queries — roughly halves the gate's wall time
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

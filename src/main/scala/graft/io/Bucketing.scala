@@ -23,11 +23,6 @@ object Bucketing {
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
-  /** True if the physical plan of `df` contains no shuffle exchange —
-    * the check the BucketingSpec uses to prove join co-location. */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
-
   /** Z-ORDER layout (the lakehouse OPTIMIZE ZORDER BY recipe): cluster
     * rows by the Morton key of two integer cell coordinates, so a
     * 2-D box predicate touches FEW partitions/files instead of all of

@@ -103,14 +103,6 @@ object Ridge {
     * aggregates, one exchange of ONE row, never a second data pass. */
   private def gramSums(df: DataFrame, targetCol: String,
                        features: Seq[String]): DataFrame = {
-    // project to the needed columns, then parallelism-gated exchange
-    // (r15): the p(p+3)/2+2 exact-decimal product folds are CPU-dense,
-    // and a single-row-group fixture scan runs them in ONE task; at
-    // data scale the gate is the identity (Parallelism.ensure doc)
-    // keyed on the feature tuple — hash, no sort-before-repartition
-    val need = (features :+ targetCol).distinct
-    val in = graft.core.Parallelism.ensure(
-      df.select(need.map(col): _*), need.map(col): _*)
     val all = (features :+ targetCol).map(col(_).isNotNull).reduce(_ && _)
     def d(c: String) = when(all, col(c)).cast("decimal(18,6)")
     val xs = features.map(d)
@@ -122,7 +114,7 @@ object Ridge {
       (for (i <- features.indices; j <- features.indices if i <= j)
         yield sum(xs(i) * xs(j)).cast("double").as(s"__s${i}_$j")) ++
       features.indices.map(i => sum(xs(i) * y).cast("double").as(s"__s${i}y"))
-    in.agg(aggs.head, aggs.tail: _*)
+    df.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Three-feature ridge with the fit expressed as a CLOSED-FORM

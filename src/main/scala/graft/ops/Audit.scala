@@ -406,10 +406,6 @@ object Audit {
     * integer doubled-ranks in DECIMAL (products bounded by (2n)^2 * n
     * < 10^38 up to ~10^10 rows), one fixed double tree at the end. */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    // (r15 A/B note: a Parallelism.ensure exchange here measured SLOWER
-    // at sf0.1 — 1.76 -> 2.97 s isolated, keyed or keyless — the
-    // rank-dict broadcast builds and the decimal fold don't amortize
-    // the extra exchange at this shape; left at scan parallelism.)
     val both = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).as("__x"), col(yCol).as("__y"))
     def rankDict(c: String) = {
@@ -577,22 +573,13 @@ object Audit {
     * Output: (group, n, mean, lo95, hi95), percentile interval at
     * 2.5/97.5 over `b` replicates. */
   /** (group, value, md5-mix seed) base frame shared by the bootstrap
-    * family: one md5 per ROW (never per (row, replicate)). The md5 and
-    * the downstream replicate explode run AFTER a parallelism-gated
-    * exchange of the compact (g, x, id) rows (r15): a single-row-group
-    * fixture scans as ONE task, which serialized the whole
-    * md5+explode+Poisson stage on one core; at data scale the gate
-    * makes this the identity (see [[graft.core.Parallelism.ensure]]). */
+    * family: one md5 per ROW (never per (row, replicate)). */
   private def bootstrapBase(df: DataFrame, groupCol: String,
                             valueCol: String, idCol: String): DataFrame =
-    graft.core.Parallelism.ensure(
-        df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-          .select(col(groupCol).as("__g"),
-            col(valueCol).cast("double").as("__x"),
-            col(idCol).cast("string").as("__id")),
-        col("__id"))
-      .select(col("__g"), col("__x"),
-        pmod(conv(substring(md5(concat(col("__id"), lit("_"),
+    df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
+      .select(col(groupCol).as("__g"),
+        col(valueCol).cast("double").as("__x"),
+        pmod(conv(substring(md5(concat(col(idCol).cast("string"), lit("_"),
           lit("42"))), 1, 15), 16, 10).cast("long"),
           lit(2147483647L)).as("__m"))
 

@@ -451,16 +451,6 @@ object Dedup {
     Seq.fill(k)((next(), next()))
   }
 
-  /** Array-column signature (small-data convenience; the lambda path is
-    * interpreted). The SCALE path is [[minhashSignatures]] below. */
-  def minhashSignature(shinglesCol: Column, k: Int, seed: Long = 42L): Column = {
-    val params = minhashParams(k, seed)
-    val hashed = transform(shinglesCol, x => pmod(Hashing.md5Int(x), lit(MinhashP)))
-    array(params.map { case (a, b) =>
-      array_min(transform(hashed, h => pmod(lit(a) * h + lit(b), lit(MinhashP))))
-    }: _*)
-  }
-
   /** Signatures over EXPLODED (id, sh) shingle rows via k min-aggregates:
     * md5 runs ONCE per (doc, shingle) inside whole-stage codegen, the k
     * permutations are plain modular arithmetic, and the only shuffle is

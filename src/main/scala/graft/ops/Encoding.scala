@@ -290,14 +290,7 @@ object Encoding {
       val out = s"${c}_ord_encoded"
       val okey = Hashing.md5Int(concat_ws(":",
         (tieCols.map(col(_).cast("string")) :+ lit(seed).cast("string")): _*))
-      // parallelism-gated exchange BEFORE the per-row md5 permutation
-      // key (r15): a single-row-group fixture scan is one task, which
-      // serialized the 600k-row md5 on one core; identity at data
-      // scale (Parallelism.ensure doc). Column pruning pushes the
-      // caller's projection below the repartition, so the exchange
-      // ships only the used columns.
-      val keyed = graft.core.Parallelism.ensure(df, tieCols.map(col): _*)
-        .withColumn("__ok", okey)
+      val keyed = df.withColumn("__ok", okey)
         .withColumn("__ts", round(col(target).cast("double") * 1000, 0))
         .withColumn("__one", lit(1.0))
       // every other input column breaks what ties remain, so the order

@@ -222,8 +222,6 @@ object Neighbors {
   def knnSelfJoin(df: DataFrame, idCol: String, k: Int, width: Double,
                   seed: Long = 42L, cellBudget: Int = 64): DataFrame = {
     if (width <= 0) return knnJoin(df, df, idCol, k, width, seed)
-    if (sys.env.get("SPARK_GRAFT_SELFJOIN").contains("0"))
-      return knnJoin(df, df, idCol, k, width, seed, cellBudget) // A/B hook
     val dims = df.columns.count(_.startsWith("__f")) - (if (df.columns.contains("__fv")) 1 else 0)
     val w = adaptiveWidth(df, dims, width, cellBudget)
     val b1 = floor(col("__f0") / w).cast(LongType)

@@ -23,25 +23,6 @@ object Similarity {
     dot / (na * nb)
   }
 
-  /** Deterministic pseudo-random hyperplanes: component j of plane i is
-    * derived from a hash of (seed, i, j) mapped to [-1, 1]. Reproducible in
-    * any engine; no RNG state. */
-  def planeComponent(i: Int, j: Column, seed: Long): Column =
-    (pmod(Hashing.md5Int(concat_ws("_", lit(seed), lit(i), j)), lit(2000001L)) - 1000000L)
-      .cast(DoubleType) / 1000000.0
-
-  /** Sign sketch: bit i = 1 iff dot(v, plane_i) > 0. Returns a long.
-    * Lambda path — small inputs only; the scale path is [[signSketchDf]]. */
-  def signSketch(v: Column, planes: Int, seed: Long = 42L): Column = {
-    val bits = (0 until planes).map { i =>
-      val dot = aggregate(zip_with(v,
-        transform(sequence(lit(0), size(v) - 1), j => planeComponent(i, j, seed)),
-        (x, p) => x * p), lit(0.0), (acc, x) => acc + x)
-      when(dot > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a: Column, b: Column) => a.bitwiseOR(b))
-  }
-
   /** Cheap deterministic pseudo-random plane component: LCG over
     * (seed, plane, dim). The s2 oracle SQL replays this formula exactly —
     * keep both in sync. */

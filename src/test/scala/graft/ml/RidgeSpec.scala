@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -124,6 +125,28 @@ class RidgeSpec extends SparkSpec {
       .select("pred").collect().map(_.getDouble(0))
     expected.zip(got).foreach { case (e, g) =>
       assert(math.abs(e - g) < 1e-6, (e, g))
+    }
+  }
+
+  test("fitPredictGram p=2 and p=5: same predictions under any partitioning or row order") {
+    import spark.implicits._
+    // noisy, non-integer features whose double sums depend on the fold
+    // order; the exact-decimal Gram sums must not
+    val rows = (1 to 500).map { i =>
+      val x = Array.tabulate(5)(j => math.sin(i * (j + 1.3)) * 1000.0 + j)
+      (i, x(0), x(1), x(2), x(3), x(4), x.sum * 0.37 + math.cos(i) * 55.5)
+    }
+    val cols = Seq("id", "x1", "x2", "x3", "x4", "x5", "y")
+    val (df, reversed) = (rows.toDF(cols: _*), rows.reverse.toDF(cols: _*))
+    for (p <- Seq(2, 5)) {
+      def fit(in: DataFrame): Seq[(Int, Double)] =
+        Ridge.fitPredictGram(in, "y", (1 to p).map(j => s"x$j"),
+            lambda = 0.5, roundTo = 12)
+          .select("id", "pred").collect()
+          .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).toSeq
+      val one = fit(df.repartition(1))
+      assert(fit(df.repartition(13)) == one, s"p=$p: 13 partitions differ from 1")
+      assert(fit(reversed.repartition(1)) == one, s"p=$p: reversed rows differ")
     }
   }
 
