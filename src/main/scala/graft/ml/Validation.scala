@@ -36,8 +36,8 @@ object Validation {
 
   /** Stratified fold assignment: per-class rank over `orderCols` mod k.
     * With orderCols empty the order is seeded-random. The rank comes
-    * from `Ordinals.withPerKeyRank` (range-sorted global index minus the
-    * class's broadcast first-index) — a huge class spreads across many
+    * from `Ordinals.withPerKeyRank` (one range-sorted running count that
+    * restarts per class) — a huge class spreads across many
     * partitions instead of sorting through one window reducer. */
   def withFold(df: DataFrame, labelCol: String, k: Int,
                orderCols: Seq[String] = Nil, seed: Long = 42L): DataFrame = {

@@ -868,7 +868,7 @@ object Audit {
     * pre-check before pooling variances or trusting a t-test.
     *
     * Scale shape: per-group EXACT medians ride the
-    * [[Ordinals.withPerKeyRank]] global-rank trick (one range sort, no
+    * [[Ordinals.withPerKeyRank]] per-key running count (one range sort, no
     * per-key reducer — a 50 TB majority group spreads across
     * partitions) + a broadcast group-size dictionary; z is map-only;
     * the F statistic reuses anovaF's exact integer-thousandths fold.

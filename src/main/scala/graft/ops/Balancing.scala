@@ -9,11 +9,15 @@ import graft.pipeline.TableOp
   * reference `preprocessing/data_balancing/`).
   *
   * Scale design: all class-wise caps rank via `Ordinals.withPerKeyRank`
-  * (range-sorted global index minus the class's broadcast first-index) —
-  * a hot majority class spreads over MANY partitions instead of sorting
+  * (one range-sorted running count that restarts per class) — a hot
+  * majority class spreads over MANY partitions instead of sorting
   * through the one reducer a `Window.partitionBy(class)` would assign it.
   * Per-class counts travel as a broadcast dictionary.
   * Random paths thread explicit seeds (reference pins random_state=42).
+  * A `rand(seed)` order is reproducible for a fixed input layout (the
+  * same files read into the same partitions), not across
+  * partitionings: `rand` draws per partition, so repartitioned input
+  * gives a different, equally valid, sample.
   * Every trim supports a DETERMINISTIC order (for reproducible pipelines
   * and oracle checks) or a seeded-random order (reference semantics).
   */
@@ -82,11 +86,19 @@ object Balancing {
   /** B1 stratified — EXACT per-class split (sklearn stratify=y parity:
     * every class contributes floor(n_c * testFraction) rows to test):
     * seeded-random per-key rank, threshold at the class's exact test
-    * quota (`cross_validation_optuna_logic.py:58-60`). */
+    * quota (`cross_validation_optuna_logic.py:58-60`).
+    *
+    * The ranked frame is materialized once ([[graft.core.Materialize]])
+    * because it has TWO consumers: two filters over one lazy plan would
+    * re-run the whole upstream (input read, any undersampling rank, this
+    * rank) once per side. Over one execution both sides see the same
+    * ranks, so they are disjoint and cover the input by construction.
+    * The `rand(seed)` order is reproducible for a fixed input layout,
+    * not across partitionings. */
   def stratifiedSplit(df: DataFrame, target: String, testFraction: Double,
                       seed: Long): (DataFrame, DataFrame) = {
-    val tagged = Ordinals.withPerKeyRank(withClassCount(df, target),
-        target, Seq(rand(seed)), "__rn")
+    val tagged = graft.core.Materialize.frame(Ordinals.withPerKeyRank(
+        withClassCount(df, target), target, Seq(rand(seed)), "__rn"))
       .withColumn("__quota", floor(col("__cn") * testFraction))
     (tagged.filter(col("__rn") > col("__quota")).drop("__rn", "__quota", "__cn"),
      tagged.filter(col("__rn") <= col("__quota")).drop("__rn", "__quota", "__cn"))
@@ -116,7 +128,9 @@ object Balancing {
   /** B3 — random undersample every class to ~the minority size
     * (`data_balancing_list_method_logic.py:24-32`). Exact-size per class via
     * per-key rank over a seeded-random order (not Bernoulli — reference
-    * RandomUnderSampler is exact). */
+    * RandomUnderSampler is exact). Which rows survive is reproducible
+    * for a fixed input layout, not across partitionings (`rand(seed)`
+    * draws per partition). */
   case class Undersample(target: String, seed: Long = 42L) extends TableOp {
     def describe = s"undersample classes of $target to minority size"
     def apply(df: DataFrame): DataFrame = {
@@ -257,7 +271,7 @@ object Balancing {
 
   /** Shared kernel: keep the first `cap` rows per class under `orderBy`
     * (`cap` may reference the class count as `__cn`). Per-class ranks
-    * come from the range-sorted global index — no per-class reducer. */
+    * come from one range-sorted running count — no per-class reducer. */
   private def trimPerClass(df: DataFrame, target: String, cap: Column,
                            orderBy: Column): DataFrame = {
     Ordinals.withPerKeyRank(withClassCount(df, target), target, Seq(orderBy), "__rn")

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   *    hang off it map-side-combined;
   *  - packing: distributed prefix sum ([[Ordinals.withRunningTotal]] —
   *    range-sort, NOT a single-partition window);
-  *  - mixing: per-source rank via [[Ordinals.withPerKeyRank]] (broadcast
-  *    first-index dictionary, hot sources spread across partitions).
+  *  - mixing: per-source rank via [[Ordinals.withPerKeyRank]] (one
+  *    range-sorted running count per source, hot sources spread across
+  *    partitions).
   */
 object Corpus {
 
@@ -143,8 +144,8 @@ object Corpus {
     * Returns (idCol, sourceCol, quality rounded to 6).
     *
     * The per-source median is EXACT but buffers no values: rows rank
-    * within their source via [[Ordinals.withPerKeyRank]] (range sort +
-    * broadcast first-index dictionary), the two middle ranks per source
+    * within their source via [[Ordinals.withPerKeyRank]] (one range
+    * sort, the count restarting per source), the two middle ranks per source
     * are picked against a broadcast count dictionary, and their mean is
     * the median (odd sizes: both ranks coincide) — the same
     * rank-selection recipe as the a7 exact median, per group. Source is
@@ -214,10 +215,9 @@ object Corpus {
     * data caps the mixture, as in any real mix run). Deterministic, so
     * re-runs and the SQL oracle reproduce the exact selection.
     *
-    * Scale: per-source rank is [[Ordinals.withPerKeyRank]] — range sort
-    * + broadcast first-index dictionary (source is low-cardinality); a
-    * dominant source spreads over many partitions instead of one
-    * window reducer. */
+    * Scale: per-source rank is [[Ordinals.withPerKeyRank]] — one range
+    * sort with a count that restarts per source; a dominant source
+    * spreads over many partitions instead of one window reducer. */
   def mixSources(df: DataFrame, sourceCol: String, idCol: String,
                  weights: Map[String, Double], totalRows: Long): DataFrame = {
     require(weights.nonEmpty, "mixSources: weights must not be empty")
@@ -436,10 +436,10 @@ object Corpus {
     * same bucket. Returns (idCol, sourceCol, mean_logprob, bucket).
     *
     * Scale: the scorer is aggregate-shaped (no windows), the per-source
-    * rank is [[Ordinals.withPerKeyRank]] (range sort + broadcast
-    * first-index dictionary — a dominant source spreads across
-    * partitions instead of one window reducer), and the per-source
-    * count dictionary is broadcast-sized by construction. */
+    * rank is [[Ordinals.withPerKeyRank]] (one range sort — a dominant
+    * source spreads across partitions instead of one window reducer),
+    * and the per-source count dictionary is broadcast-sized by
+    * construction. */
   def perplexityBuckets(df: DataFrame, textCol: String, idCol: String,
                         sourceCol: String,
                         scorer: (DataFrame, String, String) => DataFrame =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the k projected dims with ONE aggregate pass (k plan-time-known
   * codegen aggregates, no explode) and applies driver-collected scale
   * constants map-only. Diversity sampling reuses [[AnnIndex.build]]'s
-  * k-means cells and ranks within cells via the range-sorted global
+  * k-means cells and ranks within cells via the range-sorted per-cell
   * ordinal ([[Ordinals.withPerKeyRank]]) — no per-cell single reducer,
   * no keyless window.
   */

@@ -35,13 +35,8 @@ object Ordinals {
     * regardless of where range boundaries fall, so this shape has no
     * such failure mode. Exact for frames up to 2^53 rows (the running
     * total accumulates in double). */
-  def withGlobalRank(df: DataFrame, sortCols: Seq[Column], out: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.plans.RunningTotal(df.withColumn("__rt_one", lit(1.0)),
-        sortCols, "__rt_one", "__rt_rank")
-      .withColumn(out, col("__rt_rank").cast(LongType))
-      .drop("__rt_one", "__rt_rank")
-  }
+  def withGlobalRank(df: DataFrame, sortCols: Seq[Column], out: String): DataFrame =
+    rank(df, sortCols, resetKeys = 0, out)
 
   /** Rows at chosen 1-based GLOBAL ranks under `sortCols` (a total
     * order): one count job to size `ranksOf`, then a rank + `isin`
@@ -68,20 +63,28 @@ object Ordinals {
   }
 
   /** Per-key 1-based rank under `sortCols` WITHOUT a per-key window
-    * reducer: global rank over (key, sortCols) via [[withGlobalRank]],
-    * then subtract each key's first global index (a broadcast dictionary
-    * — the key column must be low-cardinality, which class/target
-    * columns are by definition). A pathologically hot key (a 50 TB
-    * majority class) no longer sorts through ONE reducer: the range
-    * sort spreads it across many partitions. */
+    * reducer: ONE [[graft.plans.RunningTotal]] of 1 under (key,
+    * sortCols) that restarts where the key changes — one range sort, an
+    * O(#partitions) offset collect and a narrow map; no aggregate, no
+    * broadcast, no join, so the ranked frame is read once. A
+    * pathologically hot key (a 50 TB majority class) no longer sorts
+    * through ONE reducer: the range sort spreads it across many
+    * partitions and the driver carries its count across them. Keys are
+    * compared as the sort compares them, so null keys rank together and
+    * -0.0/0.0 and NaN form one key each, as under `groupBy`. */
   def withPerKeyRank(df: DataFrame, key: String, sortCols: Seq[Column],
-                     out: String): DataFrame = {
+                     out: String): DataFrame =
+    rank(df, org.apache.spark.sql.functions.col(key).asc +: sortCols, resetKeys = 1, out)
+
+  /** The running total of 1 under `sortCols`, restarting at the first
+    * `resetKeys` of them, as a long `out` column. */
+  private def rank(df: DataFrame, sortCols: Seq[Column], resetKeys: Int,
+                   out: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val idx = withGlobalRank(df, col(key).asc +: sortCols, "__gidx")
-    val firsts = idx.groupBy(col(key).as("__k")).agg(min("__gidx").as("__first"))
-    idx.join(broadcast(firsts), col(key) <=> col("__k"))
-      .withColumn(out, col("__gidx") - col("__first") + 1L)
-      .drop("__gidx", "__first", "__k")
+    graft.plans.RunningTotal.multi(df.withColumn("__rt_one", lit(1.0)),
+        sortCols, Seq("__rt_one" -> "__rt_rank"), resetKeys)
+      .withColumn(out, col("__rt_rank").cast(LongType))
+      .drop("__rt_one", "__rt_rank")
   }
 
   /** Append `out` = INCLUSIVE running total of numeric `valueCol` under

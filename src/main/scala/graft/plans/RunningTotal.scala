@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BindReferences, BoundReference, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -40,13 +41,27 @@ import org.apache.spark.sql.types.DoubleType
   * the same float trees in the same partition order, so the output is
   * bit-identical to the former stack.
   *
+  * PER-KEY RESET: with `resetKeys` = n > 0 the totals restart whenever
+  * the first n sort keys change — `sum(v).over(Window.partitionBy(keys)
+  * .orderBy(rest))` in the same two passes and the same one range
+  * exchange. Job 1 then returns, per partition, its first and last key,
+  * the sums of its TRAILING key run and whether it holds a single key;
+  * the driver carries a run's total into the next partition only while
+  * the key is unchanged (O(#partitions)), so a hot key spread over many
+  * partitions still ranks correctly. Keys are compared with the sort's
+  * own ordering, not row bytes: -0.0/0.0, NaN and collated strings form
+  * one run exactly as the sort (and a `groupBy`) treat them. With n = 0
+  * no key is projected or compared and the offsets are the plain prefix
+  * sums of the partition sums.
+  *
   * Null `valueCol` cells contribute 0 to the total (document-level token
   * counts and AUC indicator columns — the callers — are never null; the
   * choice matches SQL SUM's null-skipping).
   */
 case class RunningTotalPlan(child: LogicalPlan, sortOrder: Seq[SortOrder],
                             values: Seq[Attribute],
-                            outAttrs: Seq[AttributeReference])
+                            outAttrs: Seq[AttributeReference],
+                            resetKeys: Int = 0)
   extends UnaryNode {
   // outAttrs is a constructor FIELD, not a derived val: plan transforms
   // copy() the node, and a regenerated AttributeReference would change
@@ -59,7 +74,8 @@ case class RunningTotalPlan(child: LogicalPlan, sortOrder: Seq[SortOrder],
 }
 
 case class RunningTotalExec(child: SparkPlan, sortOrder: Seq[SortOrder],
-                            values: Seq[Attribute], outAttrs: Seq[Attribute])
+                            values: Seq[Attribute], outAttrs: Seq[Attribute],
+                            resetKeys: Int = 0)
   extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output ++ outAttrs
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -76,27 +92,57 @@ case class RunningTotalExec(child: SparkPlan, sortOrder: Seq[SortOrder],
       s"running_total: value columns $values not all in child output")
     val k = idxs.length
     val sorted = child.execute()
-    // job 1: per-partition sums — the exchange below us is materialized
-    // shuffle state, so this extra pass re-reads shuffle files, not the
-    // source (and the sort re-runs only per partition)
-    val partSums = sorted.mapPartitions { it =>
+    // the reset keys, projected from each row and compared with the
+    // sort's own ordering (none on the global path, which then never
+    // projects or compares a key)
+    val keyOrders = sortOrder.take(resetKeys)
+    val keyExprs = keyOrders.map(o => BindReferences.bindReference(o.child, child.output))
+    val sameKey = new LazilyGeneratedOrdering(keyOrders.zipWithIndex.map { case (o, i) =>
+      o.copy(child = BoundReference(i, o.dataType, o.nullable))
+    })
+    // job 1: one KeyRun per partition — the exchange below us is
+    // materialized shuffle state, so this extra pass re-reads shuffle
+    // files, not the source (and the sort re-runs only per partition)
+    val runs = sorted.mapPartitions { it =>
+      val keyOf = if (keyExprs.isEmpty) null else UnsafeProjection.create(keyExprs)
       val s = new Array[Double](k)
+      var first: InternalRow = null
+      var last: InternalRow = null
+      var single = true
       it.foreach { r =>
+        if (last == null) {
+          first = if (keyOf == null) InternalRow.empty else keyOf(r).copy()
+          last = first
+        } else if (keyOf != null) {
+          val key = keyOf(r)
+          if (sameKey.compare(key, last) != 0) {
+            last = key.copy(); single = false; java.util.Arrays.fill(s, 0.0)
+          }
+        }
         var i = 0
         while (i < k) { if (!r.isNullAt(idxs(i))) s(i) += r.getDouble(idxs(i)); i += 1 }
       }
-      Iterator.single(s)
+      Iterator.single(KeyRun(first, last, s, single))
     }.collect()
-    val offsets = partSums.scanLeft(new Array[Double](k)) { (a, b) =>
-      Array.tabulate(k)(i => a(i) + b(i))
-    }
+    val offsets = RunningTotalExec.offsets(runs, k, sameKey)
+    // job 2: stream each partition again from its offset, restarting the
+    // totals wherever the reset key changes
     val attrs = output
     sorted.mapPartitionsWithIndex { (pid, it) =>
       val acc = offsets(pid).clone()
+      val keyOf = if (keyExprs.isEmpty) null else UnsafeProjection.create(keyExprs)
+      var last: InternalRow = null
       val proj = UnsafeProjection.create(attrs.map(_.dataType).toArray)
       val extra = new GenericInternalRow(k)
       val joined = new JoinedRow
       it.map { r =>
+        if (keyOf != null) {
+          val key = keyOf(r)
+          if (last == null) last = key.copy()
+          else if (sameKey.compare(key, last) != 0) {
+            last = key.copy(); java.util.Arrays.fill(acc, 0.0)
+          }
+        }
         var i = 0
         while (i < k) {
           if (!r.isNullAt(idxs(i))) acc(i) += r.getDouble(idxs(i))
@@ -112,11 +158,43 @@ case class RunningTotalExec(child: SparkPlan, sortOrder: Seq[SortOrder],
     copy(child = newChild)
 }
 
+object RunningTotalExec {
+  /** Each partition's starting totals, from the job-1 runs in partition
+    * order: the carried run's totals when the partition's first key
+    * continues that run (a key spanning partitions), else zero. Empty
+    * partitions leave the carry alone. With no reset keys every key
+    * compares equal, so this is the exclusive prefix sum of the
+    * partition sums. O(#partitions) on the driver. */
+  private[plans] def offsets(runs: Array[KeyRun], k: Int,
+                             sameKey: LazilyGeneratedOrdering): Array[Array[Double]] = {
+    var carryKey: InternalRow = null
+    var carry = new Array[Double](k)
+    runs.map { run =>
+      if (run.first == null) new Array[Double](k)
+      else {
+        val continues = carryKey != null && sameKey.compare(run.first, carryKey) == 0
+        val offset = if (continues) carry else new Array[Double](k)
+        carry = if (continues && run.single) Array.tabulate(k)(i => carry(i) + run.sums(i))
+                else run.sums
+        carryKey = run.last
+        offset
+      }
+    }
+  }
+}
+
+/** Job-1 summary of one sorted partition: its first and last reset key
+  * (null when the partition is empty; the empty row when there are no
+  * reset keys), the sums of its trailing key run, and whether it holds
+  * a single key. */
+private[plans] final case class KeyRun(first: InternalRow, last: InternalRow,
+                                       sums: Array[Double], single: Boolean)
+
 /** Planner rule: RunningTotalPlan -> RunningTotalExec. */
 object RunningTotalStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case RunningTotalPlan(child, order, values, outAttrs) =>
-      RunningTotalExec(planLater(child), order, values, outAttrs) :: Nil
+    case RunningTotalPlan(child, order, values, outAttrs, resetKeys) =>
+      RunningTotalExec(planLater(child), order, values, outAttrs, resetKeys) :: Nil
     case _ => Nil
   }
 }
@@ -138,10 +216,16 @@ object RunningTotal {
     * nondeterminism in Project/Filter/Sort but rejects it in custom
     * operators (INVALID_NON_DETERMINISTIC_EXPRESSIONS). Materializing
     * also pins the value — the sort key is evaluated once per row, not
-    * once per consumer. */
+    * once per consumer.
+    *
+    * `resetKeys` > 0 restarts every total where the first `resetKeys`
+    * of `sortCols` change (the per-key form; see [[RunningTotalPlan]]). */
   def multi(df: org.apache.spark.sql.DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-            valueOuts: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
+            valueOuts: Seq[(String, String)],
+            resetKeys: Int = 0): org.apache.spark.sql.DataFrame = {
     require(valueOuts.nonEmpty, "running_total: need at least one value column")
+    require(resetKeys >= 0 && resetKeys <= sortCols.length,
+      s"running_total: resetKeys $resetKeys outside 0..${sortCols.length}")
     val spark = df.sparkSession
     var prepped = df
     val vNames = valueOuts.zipWithIndex.map { case ((valueCol, _), i) =>
@@ -187,7 +271,7 @@ object RunningTotal {
     val matCols = vNames ++ pieces.collect { case (Some(nm), _) => nm }
     matCols.foldLeft(
         GraftBridge.ofRows(spark,
-          RunningTotalPlan(analyzed, order, valAttrs, outAttrs)))((d, nm) => d.drop(nm))
+          RunningTotalPlan(analyzed, order, valAttrs, outAttrs, resetKeys)))((d, nm) => d.drop(nm))
   }
 
   private def resolve(plan: LogicalPlan,

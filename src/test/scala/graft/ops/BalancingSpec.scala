@@ -27,6 +27,33 @@ class BalancingSpec extends SparkSpec {
     assert(frac > 0.15 && frac < 0.25, s"test fraction $frac")
   }
 
+  test("B1 stratifiedSplit over an Undersample output is an exact partition, " +
+    "ranked once") {
+    // the benchmark's prep chain: a lazy undersample feeds the split
+    val bal = Undersample("o_orderpriority", seed = 7L)(orders)
+    val (train, test) = stratifiedSplit(bal, "o_orderpriority", 0.2, seed = 7L)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_orderkey").collect().map(_.getLong(0))
+    val (tr, te, in) = (keys(train), keys(test), keys(bal))
+    assert(tr.length == tr.distinct.length && te.length == te.distinct.length)
+    assert(tr.toSet.intersect(te.toSet).isEmpty, "a row landed on both sides")
+    assert((tr ++ te).sorted.sameElements(in.sorted), "train + test != input")
+    val nc = bal.groupBy("o_orderpriority").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val testN = test.groupBy("o_orderpriority").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    nc.foreach { case (c, n) =>
+      assert(testN.getOrElse(c, 0L) == math.floor(n * 0.2).toLong, s"class $c")
+    }
+    // both sides read the one materialized ranking, not a fresh rank each
+    Seq(train, test).foreach { side =>
+      val rt = side.queryExecution.analyzed.collect {
+        case p: graft.plans.RunningTotalPlan => p
+      }
+      assert(rt.isEmpty, side.queryExecution.analyzed.toString)
+    }
+  }
+
   test("B3 undersample: every class exactly at minority size") {
     val out = Undersample("o_orderstatus")(orders)
     val counts = out.groupBy("o_orderstatus").count().collect().map(_.getLong(1))

@@ -126,4 +126,87 @@ class OrdinalsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(1L -> 1L, 3L -> 2L, 2L -> 1L, 4L -> 2L))
   }
+
+  /** Run `body` under the given shuffle partitions and AQE setting,
+    * restoring the shared session's values afterwards. */
+  private def withConf[A](parts: Int, aqe: Boolean)(body: => A): A = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), parts.toString)
+    spark.conf.set(keys(1), aqe.toString)
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("withPerKeyRank equals the row_number window at any partitioning, " +
+    "hot/null/float keys, ONE sorted pass") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(5)
+    // 70% hot key "h" (spans many range partitions), nulls, a few rare
+    // keys; the double key holds -0.0, 0.0 and NaN, which the sort and
+    // groupBy each treat as one key
+    val doubles = Seq(-0.0, 0.0, Double.NaN, 1.5, -2.0)
+    val rows = (0 until 400).map { i =>
+      val s = rnd.nextInt(10) match {
+        case n if n < 7 => Some("h")
+        case 7 => None
+        case n => Some(s"r$n")
+      }
+      val d = if (rnd.nextInt(8) == 0) None else Some(doubles(rnd.nextInt(doubles.size)))
+      (rnd.nextInt(1000000).toLong * 1000 + i, s, d)
+    }
+    val df = rnd.shuffle(rows).toDF("id", "s", "d")
+    for (parts <- Seq(1, 3, 13, 40); aqe <- Seq(false, true); key <- Seq("s", "d")) {
+      withConf(parts, aqe) {
+        val expected = df.withColumn("r",
+            row_number().over(Window.partitionBy(col(key)).orderBy(col("id"))))
+          .select("id", "r").collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
+        val ranked = Ordinals.withPerKeyRank(df, key, Seq(col("id").asc), "r")
+        val got = ranked.select("id", "r").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"parts=$parts aqe=$aqe key=$key")
+        val plan = ranked.queryExecution.executedPlan.toString
+        assert("RunningTotal \\[".r.findAllIn(plan).length == 1, plan)
+        assert("Exchange rangepartitioning".r.findAllIn(plan).length == 1, plan)
+        assert(!plan.contains("BroadcastExchange"), plan)
+        assert(!plan.contains("hashpartitioning"), plan)
+      }
+    }
+  }
+
+  test("RunningTotal reset: k = 2 totals restart per key; reset 0 is the global path") {
+    import spark.implicits._
+    for (rows <- samples(frameGen, 2); parts <- Seq(1, 3, 13)) withConf(parts, aqe = false) {
+      val df = rows.toDF("id", "k", "v").dropDuplicates("id")
+        .withColumn("g", (col("v") % 3).cast("int"))
+        .withColumn("v", col("v").cast("double"))
+        .withColumn("w", (col("v") * 3 + 1).cast("double"))
+      val local = df.select("id", "k", "g", "v", "w").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4)))
+      // driver-side per-key cumulative sums; integer-valued doubles, so exact
+      def cumsums(keyOf: ((Long, String, Int, Double, Double)) => Any) =
+        local.groupBy(keyOf).values.flatMap { grp =>
+          grp.sortBy(_._1).scanLeft((0L, 0.0, 0.0)) { case ((_, cv, cw), t) =>
+            (t._1, cv + t._4, cw + t._5)
+          }.tail.map { case (id, cv, cw) => id -> (cv, cw) }
+        }.toMap
+      def run(sortCols: Seq[org.apache.spark.sql.Column], reset: Int) =
+        graft.plans.RunningTotal.multi(df, sortCols, Seq("v" -> "cv", "w" -> "cw"), reset)
+          .select("id", "cv", "cw").collect()
+          .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      assert(run(Seq(col("k").asc, col("id").asc), 1) == cumsums(_._2))
+      assert(run(Seq(col("k").asc, col("g").asc, col("id").asc), 2) ==
+        cumsums(t => (t._2, t._3)))
+      // reset 0: bit-identical to the stacked single-value nodes
+      val stacked = Ordinals.withRunningTotal(
+        Ordinals.withRunningTotal(df, Seq(col("id").asc), "v", "cv"),
+        Seq(col("id").asc), "w", "cw")
+        .select("id", "cv", "cw").collect()
+        .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      assert(run(Seq(col("id").asc), 0) == stacked)
+    }
+  }
 }
