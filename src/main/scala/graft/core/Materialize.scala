@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** The one switch between the two "materialize this frame once" modes.
   *
@@ -33,19 +34,8 @@ object Materialize {
     * `df.localCheckpoint()` / `df.localCheckpoint(true)` call
     * `Materialize.frame(df)` (both were eager).
     */
-  def frame(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.get(ReliableKey, "false").trim.equalsIgnoreCase("true")
-    if (reliable) {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableKey=true requires sparkContext.setCheckpointDir(...) " +
-          "(a durable location all executors can reach)")
-      df.checkpoint(eager = true)
-    } else {
-      df.localCheckpoint(eager = true)
-    }
-  }
+  def frame(df: DataFrame): DataFrame =
+    materialize(df, StorageLevel.MEMORY_AND_DISK)
 
   /** Release the storage blocks of a frame previously returned by
     * [[frame]]/[[frameSer]] (r15, r14-VERDICT #1: iterative operators
@@ -77,7 +67,13 @@ object Materialize {
     * checkpoint avoids. Reliable mode is unchanged (checkpoint() is
     * already an on-disk serialized form). Results bit-identical to
     * [[frame]] — only the block encoding differs ([[MaterializeSpec]]). */
-  def frameSer(df: DataFrame): DataFrame = {
+  def frameSer(df: DataFrame): DataFrame =
+    materialize(df, StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** Reliable `checkpoint()` under [[ReliableKey]], else an eager
+    * `localCheckpoint` at `local` (MEMORY_AND_DISK is the level
+    * `localCheckpoint(eager)` picks when given none). */
+  private def materialize(df: DataFrame, local: StorageLevel): DataFrame = {
     val spark = df.sparkSession
     val reliable =
       spark.conf.get(ReliableKey, "false").trim.equalsIgnoreCase("true")
@@ -87,8 +83,7 @@ object Materialize {
           "(a durable location all executors can reach)")
       df.checkpoint(eager = true)
     } else {
-      df.localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      df.localCheckpoint(eager = true, local)
     }
   }
 }

@@ -651,10 +651,10 @@ object Audit {
     *
     * Two parallel readouts of the same weighted replicates:
     * (1) the EXACT per-replicate weighted quantile — (g, b, x) cells
-    *     collapse duplicates map-side BEFORE one global RunningTotal
-    *     in (g, b, x) order (cell-sized, not row-sized), the replicate
-    *     offset is subtracted, and the quantile is the smallest x
-    *     whose local cumulative weight reaches greatest(1,
+    *     collapse duplicates map-side BEFORE one RunningTotal in
+    *     (g, b, x) order that restarts per (g, b) replicate
+    *     (cell-sized, not row-sized), and the quantile is the smallest
+    *     x whose cumulative weight reaches greatest(1,
     *     ceil(p*wn)) — pure integer selection both engines replay
     *     bit-for-bit, so the CI endpoints are full-oracle; and
     * (2) the one-pass production path: a per-replicate `kll_quantiles`
@@ -680,26 +680,16 @@ object Audit {
       .agg(sum(col("__w")).as("__wc"))
     val totals = cells.groupBy(col("__g").as("__gt"), col("__b").as("__bt"))
       .agg(sum(col("__wc")).as("__wn"))
-    // exact weighted quantile per replicate: one global running total
-    // over the CELLS, per-replicate offset subtracted. The offset (total
-    // weight of all PRIOR (g,b) groups under the global order) comes
-    // from a running total over the (g,b)-sized TOTALS frame, not from
-    // re-aggregating `cum` — the former min(cum - wc) groupBy consumed
-    // the big running total a second time, re-executing its whole
-    // lineage (r14). All weights are integer-valued doubles < 2^53, so
-    // the two accumulation orders are bit-identical.
-    val cum = Ordinals.withRunningTotal(cells,
-      Seq(col("__g").asc, col("__b").asc, col("__x").asc), "__wc", "__cum")
-    val offs = Ordinals.withRunningTotal(totals,
-        Seq(col("__gt").asc, col("__bt").asc), "__wn", "__cumT")
-      .select(col("__gt").as("__go"), col("__bt").as("__bo"),
-        (col("__cumT") - col("__wn")).as("__off"))
+    // exact weighted quantile per replicate: one running total over the
+    // CELLS in (g, b, x) order that restarts per (g, b) replicate. All
+    // weights are integer-valued doubles < 2^53, so every total is exact.
+    val cum = Ordinals.withRunningTotals(cells,
+      Seq(col("__g").asc, col("__b").asc, col("__x").asc),
+      Seq("__wc" -> "__cum"), resetKeys = 2)
     val med = cum
-      .join(broadcast(offs),
-        col("__g") === col("__go") && col("__b") === col("__bo"))
       .join(broadcast(totals),
         col("__g") === col("__gt") && col("__b") === col("__bt"))
-      .filter(col("__cum") - col("__off") >=
+      .filter(col("__cum") >=
         greatest(lit(1L), ceil(lit(p) * col("__wn").cast("double"))))
       .groupBy(col("__g"), col("__b"))
       .agg(min(col("__x")).as("__q"))
@@ -1073,12 +1063,13 @@ object Audit {
     * under a mean-shift model). The retrospective companion to the
     * streaming [[graft.streaming.Streams.windowDrift]] monitor.
     *
-    * Scale shape: the series is span-sized; its prefix sum rides
-    * [[Ordinals.withRunningTotal]]. Exactness: y enters as integer
-    * thousandths (exact doubles below 2^53), so the prefix is exact
-    * and CUSUM_t = P_t − t·(S/N) is one fixed tree; the argmax picks
-    * by (|cusum| desc, hour asc) — a total order. cusum_share =
-    * max|CUSUM| / Σ|y − ȳ| is the scale-free strength in [0, 1]. */
+    * Scale shape: the series is span-sized; its prefix sum and hour
+    * index ride one [[Ordinals.withRunningTotals]] node. Exactness: y
+    * enters as integer thousandths (exact doubles below 2^53), so the
+    * prefix is exact and CUSUM_t = P_t − t·(S/N) is one fixed tree;
+    * the argmax picks by (|cusum| desc, hour asc) — a total order.
+    * cusum_share = max|CUSUM| / Σ|y − ȳ| is the scale-free strength
+    * in [0, 1]. */
   def cusumChangepoint(df: DataFrame, tsCol: String,
                        valueCol: String): DataFrame = {
     val hourly = df.filter(col(valueCol).isNotNull)
@@ -1087,10 +1078,9 @@ object Audit {
         .as("__ym"))
     val series = hourly.select(unix_micros(col("__h")).as("__hu"),
       col("__ym").cast("double").as("__y"))
-    val cum = Ordinals.withRunningTotal(series, Seq(col("__hu").asc),
-      "__y", "__p")
+    val withIdx = Ordinals.withRunningTotals(series.withColumn("__one", lit(1.0)),
+      Seq(col("__hu").asc), Seq("__y" -> "__p", "__one" -> "__t"))
     val tot = series.agg(count(lit(1)).as("__n"), sum("__y").as("__s"))
-    val withIdx = Ordinals.withGlobalRank(cum, Seq(col("__hu").asc), "__t")
     val mean = col("__s") / col("__n").cast("double")
     val cusum = col("__p") - (col("__t").cast("double") * mean)
     val dev = abs(col("__y") - mean)

@@ -12,7 +12,8 @@ import graft.pipeline.TableOp
   * (one range-sorted running count that restarts per class) — a hot
   * majority class spreads over MANY partitions instead of sorting
   * through the one reducer a `Window.partitionBy(class)` would assign it.
-  * Per-class counts travel as a broadcast dictionary.
+  * Per-class counts, where a cap reads them, travel as a broadcast
+  * dictionary.
   * Random paths thread explicit seeds (reference pins random_state=42).
   * A `rand(seed)` order is reproducible for a fixed input layout (the
   * same files read into the same partitions), not across
@@ -194,7 +195,8 @@ object Balancing {
       else {
         val f = maxTotal.toDouble / total
         val cap = greatest(lit(1L), floor(col("__cn") * f))
-        trimPerClass(df, target, cap, orderExpr(orderCols, seed))
+        trimPerClass(withClassCount(df, target), target, cap,
+          orderExpr(orderCols, seed))
       }
     }
   }
@@ -208,7 +210,7 @@ object Balancing {
       val top = classCounts(df, target).orderBy(desc("__n"), asc(target)).first()
       val majority = top.get(0)
       val cap = when(col(target) <=> lit(majority), lit(n)).otherwise(col("__cn"))
-      trimPerClass(df, target, cap, orderExpr(orderCols, seed))
+      trimPerClass(withClassCount(df, target), target, cap, orderExpr(orderCols, seed))
     }
   }
 
@@ -270,11 +272,13 @@ object Balancing {
   }
 
   /** Shared kernel: keep the first `cap` rows per class under `orderBy`
-    * (`cap` may reference the class count as `__cn`). Per-class ranks
-    * come from one range-sorted running count — no per-class reducer. */
+    * (`cap` may reference the class count `__cn` when `df` went through
+    * [[withClassCount]]; a literal cap needs neither the count aggregate
+    * nor its join). Per-class ranks come from one range-sorted running
+    * count — no per-class reducer. */
   private def trimPerClass(df: DataFrame, target: String, cap: Column,
                            orderBy: Column): DataFrame = {
-    Ordinals.withPerKeyRank(withClassCount(df, target), target, Seq(orderBy), "__rn")
+    Ordinals.withPerKeyRank(df, target, Seq(orderBy), "__rn")
       .withColumn("__cap", cap)
       .filter(col("__rn") <= col("__cap"))
       .drop("__rn", "__cap", "__cn")

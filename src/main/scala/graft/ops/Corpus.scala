@@ -241,13 +241,12 @@ object Corpus {
     * document of a source always survives a positive budget. Sources
     * absent from `budgets` are dropped.
     *
-    * Scale: the running total is [[Ordinals.withRunningTotal]] under
-    * the (source, hash, id) total order — ONE range exchange, no
-    * per-source window reducer (a dominant source spreads across many
-    * partitions). Per-source offsets into the global running total are
-    * a source-count-sized driver dictionary folded in as a literal
-    * when-chain; token arithmetic stays exact while total tokens
-    * < 2^53 (100 TB of text is ~25 T tokens, three orders inside).
+    * Scale: the running total is [[Ordinals.withRunningTotals]] under
+    * the (source, hash, id) total order, restarting per source — ONE
+    * range exchange, no per-source window reducer (a dominant source
+    * spreads across many partitions) and no driver round trip while
+    * the frame is built. Token arithmetic stays exact while a source's
+    * tokens < 2^53 (100 TB of text is ~25 T tokens, three orders inside).
     * Output keeps the input columns plus `n_tokens`. */
   def mixToTokenBudget(df: DataFrame, textCol: String, idCol: String,
                        sourceCol: String, budgets: Map[String, Long],
@@ -256,30 +255,15 @@ object Corpus {
     val in = df.filter(col(sourceCol).isin(budgets.keys.toSeq: _*))
       .withColumn("n_tokens", graft.ops.Text.tokenCount(col(textCol)))
       .withColumn("__tok", col("n_tokens").cast("double"))
-    val run = Ordinals.withRunningTotal(in,
+    val run = Ordinals.withRunningTotals(in,
       Seq(col(sourceCol).asc,
         Hashing.md5Int(concat_ws(":", col(idCol).cast("string"), lit(seed))).asc,
         col(idCol).asc),
-      "__tok", "__cum")
-    // offsets must accumulate in the SAME source order the range sort
-    // uses — Spark sorts strings by UTF-8 BYTE order, which differs
-    // from Scala's UTF-16 ordering for supplementary characters, so the
-    // driver-side sort compares the encoded bytes unsigned
-    val utf8Order: Ordering[String] = (a: String, b: String) =>
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val totals = in.groupBy(sourceCol).agg(sum("__tok").as("__t"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).sortBy(_._1)(utf8Order)
-    var acc = 0.0
-    val offsets = totals.map { case (s, t) => val o = acc; acc += t; s -> o }
-    val offCol = offsets.foldLeft(lit(0.0)) { case (c, (s, o)) =>
-      when(col(sourceCol) === s, lit(o)).otherwise(c)
-    }
+      Seq("__tok" -> "__cum"), resetKeys = 1)
     val budgetCol = budgets.foldLeft(lit(0.0)) { case (c, (s, b)) =>
       when(col(sourceCol) === s, lit(b.toDouble)).otherwise(c)
     }
-    run.filter(col("__cum") - offCol - col("__tok") < budgetCol)
+    run.filter(col("__cum") - col("__tok") < budgetCol)
       .drop("__tok", "__cum")
   }
 
@@ -331,10 +315,11 @@ object Corpus {
     *
     * Scale shape: ONE map-side-combined aggregate over the corpus; the
     * waterfilling then runs on the domains-sized frame through the
-    * distributed rank/prefix-sum (no keyless window, no driver loop —
-    * the closed form max{j : prefix_{j-1} + cap_j*(m-j+1) ≤ B} replaces
-    * the iterative water-level search; that expression is nondecreasing
-    * in j for caps sorted ascending, so one max aggregate finds j*).
+    * rank and cap prefix sum of one RunningTotal node (no keyless
+    * window, no driver loop — the closed form
+    * max{j : prefix_{j-1} + cap_j*(m-j+1) ≤ B} replaces the iterative
+    * water-level search; that expression is nondecreasing in j for
+    * caps sorted ascending, so one max aggregate finds j*).
     * Exactness: sizes, caps, prefix sums and the saturation condition
     * are all integer arithmetic; λ and the epoch ratios are single
     * fixed double trees — bit-replayable in SQL. */
@@ -347,8 +332,10 @@ object Corpus {
     val tot = d.agg(sum("size_n").cast(LongType).as("__ts"),
       count(lit(1)).as("__m"))
     val sort = Seq(col("cap").asc, col("domain").asc)
-    val ranked = Ordinals.withRunningTotal(
-      Ordinals.withGlobalRank(d, sort, "__j"), sort, "cap", "__pc")
+    // the rank j (a running total of 1) and the cap prefix sum in one node
+    val ranked = Ordinals.withRunningTotals(d.withColumn("__one", lit(1.0)),
+        sort, Seq("__one" -> "__j", "cap" -> "__pc"))
+      .withColumn("__j", col("__j").cast(LongType))
       .withColumn("__pc", col("__pc").cast(LongType))
       .crossJoin(broadcast(tot))
       .withColumn("__bud",

@@ -271,16 +271,16 @@ object Encoding {
     * early-permutation rows riding mostly the prior.
     *
     * Scale shape: the permutation key is seeded md5 arithmetic (no
-    * rand()); the per-category exclusive prefix sums come from TWO
-    * RunningTotal scans under the ONE total order (category, key,
-    * tie-break) minus a broadcast per-category offset dictionary — no
-    * per-key window reducer, so a 50 TB majority category spreads
-    * across the range sort like any other rows. Exactness: the target
-    * rides as integer thousandths (exact in double), the prefix sums
-    * are therefore exact integers, and the final encode is one fixed
-    * double tree. Rows that repeat a `tieCols` tuple are ordered by the
-    * remaining input columns. Nulls in the target are not supported
-    * (document-level contract — filter or impute first). */
+    * rand()); the per-category exclusive prefix sums come from ONE
+    * RunningTotal under the total order (category, key, tie-break)
+    * that restarts per category — no per-key window reducer, so a
+    * 50 TB majority category spreads across the range sort like any
+    * other rows. Exactness: the target rides as integer thousandths
+    * (exact in double), the prefix sums are therefore exact integers,
+    * and the final encode is one fixed double tree. Rows that repeat a
+    * `tieCols` tuple are ordered by the remaining input columns. Nulls
+    * in the target are not supported (document-level contract — filter
+    * or impute first). */
   case class OrderedTargetEncode(c: String, target: String,
                                  m: Double = 10.0, seed: Long = 42L,
                                  tieCols: Seq[String]) extends TableOp {
@@ -301,26 +301,18 @@ object Encoding {
       val rest = df.columns.toSeq.filterNot((c +: tieCols).contains)
       val order = (col(c).asc +: col("__ok").asc +:
         tieCols.map(col(_).asc)) ++ rest.map(col(_).asc)
+      // per-category inclusive prefix sums: the totals restart where
+      // the category (the first sort key) changes
       val cum = Ordinals.withRunningTotals(keyed, order,
-        Seq("__ts" -> "__cs", "__one" -> "__cn"))
-      // per-category offsets: totals of all categories BEFORE this one
-      // in the same (category asc) order — a dictionary-sized frame
-      val catTot = keyed.groupBy(col(c).as("__cat"))
-        .agg(sum("__ts").as("__cts"), sum("__one").as("__ctn"))
-      val off = Ordinals.withRunningTotals(catTot, Seq(col("__cat").asc),
-          Seq("__cts" -> "__ics", "__ctn" -> "__icn"))
-        .select(col("__cat"), (col("__ics") - col("__cts")).as("__offs"),
-          (col("__icn") - col("__ctn")).as("__offn"))
+        Seq("__ts" -> "__cs", "__one" -> "__cn"), resetKeys = 1)
       val tot = keyed.agg(sum("__ts").as("__gs"), sum("__one").as("__gn"))
       val g = (col("__gs") / lit(1000.0)) / col("__gn")
-      val exclS = (col("__cs") - col("__offs")) - col("__ts")
-      val exclN = (col("__cn") - col("__offn")) - lit(1.0)
-      cum.join(broadcast(off), cum(c) <=> col("__cat"))
-        .crossJoin(broadcast(tot))
+      val exclS = col("__cs") - col("__ts")
+      val exclN = col("__cn") - lit(1.0)
+      cum.crossJoin(broadcast(tot))
         .withColumn(out, ((exclS / lit(1000.0)) + (lit(m) * g))
           / (exclN + lit(m)))
-        .drop("__cat", "__ok", "__ts", "__one", "__cs", "__cn",
-          "__offs", "__offn", "__gs", "__gn")
+        .drop("__ok", "__ts", "__one", "__cs", "__cn", "__gs", "__gn")
     }
   }
 }

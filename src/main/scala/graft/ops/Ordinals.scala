@@ -105,8 +105,16 @@ object Ordinals {
     * the stack shared its exchange but re-ran the post-shuffle sort +
     * scan twice per extra node (k totals = k+1 sorted passes; this is
     * 2 for any k). Bit-identical to the stack: same per-partition sum
-    * order, same float trees. */
+    * order, same float trees.
+    *
+    * `resetKeys` = n > 0 restarts every total where the first n of
+    * `sortCols` change: `sum(v).over(Window.partitionBy(keys)
+    * .orderBy(rest))` in the same two passes, with no per-key offset
+    * for the caller to subtract. Keys are compared as the range sort
+    * compares them (nulls together, -0.0/0.0 and NaN one key each,
+    * strings in Spark's byte order). */
   def withRunningTotals(df: DataFrame, sortCols: Seq[Column],
-                        valueOuts: Seq[(String, String)]): DataFrame =
-    graft.plans.RunningTotal.multi(df, sortCols, valueOuts)
+                        valueOuts: Seq[(String, String)],
+                        resetKeys: Int = 0): DataFrame =
+    graft.plans.RunningTotal.multi(df, sortCols, valueOuts, resetKeys)
 }

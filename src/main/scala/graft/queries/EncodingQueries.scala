@@ -64,8 +64,8 @@ object EncodingQueries {
     "e10_ordered_target_encode" -> ((s, dir) =>
       // CatBoost-style ORDERED target encoding (r9): each row's encode
       // uses only same-category rows PRECEDING it under the seeded md5
-      // permutation — exclusive per-category prefix sums from two
-      // RunningTotals minus a broadcast category-offset dictionary
+      // permutation — exclusive per-category prefix sums from one
+      // RunningTotal that restarts per category
       // tieCols include the TARGET: (orderkey, linenumber) is not
       // unique in the fixture (11k planted dup keys), and rows tying on
       // the full (key..., quantity) tuple are interchangeable — the

@@ -113,13 +113,16 @@ object Profile {
     sc.addSparkListener(ledger)
     sc.setJobGroup(name, s"profile $name $rep")
     val t0 = System.nanoTime()
-    val (buildS, plans) = try {
+    val (buildS, wallS, plans) = try {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val buildS = (System.nanoTime() - t0) / 1e9
       val counted = df.groupBy().count()
       val initial =
         if (detail("plan")) counted.queryExecution.explainString(FormattedMode) else ""
       counted.collect()
+      // stopped before the listener-bus drain below, which is the
+      // profiler's own wait, not the query's
+      val wallS = (System.nanoTime() - t0) / 1e9
       val plans = if (!detail("plan")) ListMap.empty[String, String] else {
         val fin = counted.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -127,13 +130,12 @@ object Profile {
         }
         ListMap("plan_initial" -> initial, "plan_final" -> fin.treeString)
       }
-      (buildS, plans)
+      (buildS, wallS, plans)
     } finally {
       sc.clearJobGroup()
       GraftBridge.drain(sc)
       sc.removeSparkListener(ledger)
     }
-    val wallS = (System.nanoTime() - t0) / 1e9
     val (jobIds, stages) = ledger.synchronized((ledger.jobIds.toSet, ledger.stages.toSeq))
     ListMap[String, Any]("query" -> name, "rep" -> rep, "wall_s" -> r3(wallS),
       "build_s" -> r3(buildS), "jobs" -> jobIds.size,

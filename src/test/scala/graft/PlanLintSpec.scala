@@ -10,7 +10,7 @@ import graft.SparkSpec
   * a new operator that sneaks a lambda or UDF onto a scale path fails
   * here, not in a 100 TB run. Queries are PLANNED (optimizedPlan), not
   * executed; construction-time side effects run at sf0.001, and every
-  * query is planned exactly once for all three lints.
+  * query is planned exactly once for every lint.
   *
   * Justified exceptions:
   *  - h6_countmin: `Hashing.CountMinFreq` closes over a driver-built
@@ -81,6 +81,32 @@ class PlanLintSpec extends SparkSpec {
           case w: LWindow if w.partitionSpec.isEmpty => w
         }.size
         if (keyless > 0) Some(s"$name: $keyless keyless window(s)") else None
+      case _ => None
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no board query stacks a RunningTotal on another under the same order") {
+    // several totals under one order belong in ONE node
+    // (Ordinals.withRunningTotals); a stacked node re-runs the sort and
+    // both scan passes for nothing
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import graft.plans.RunningTotalPlan
+    def underProjects(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => underProjects(child)
+      case other => other
+    }
+    def order(rt: RunningTotalPlan) =
+      rt.sortOrder.map(o => (o.child.canonicalized, o.direction))
+    val offenders = plans.flatMap {
+      case (name, Right(plan)) =>
+        val stacked = plan.collect {
+          case rt: RunningTotalPlan => underProjects(rt.child) match {
+            case inner: RunningTotalPlan if order(inner) == order(rt) => 1
+            case _ => 0
+          }
+        }.sum
+        if (stacked > 0) Some(s"$name: $stacked stacked RunningTotal(s)") else None
       case _ => None
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))

@@ -60,6 +60,30 @@ class BalancingSpec extends SparkSpec {
     assert(counts.distinct.length == 1)
   }
 
+  test("B3/B12 literal caps: no class-count aggregate or join, class sizes kept") {
+    // Undersample and TrimEqual cap every class at a literal, so their
+    // plans need neither the class-count aggregate nor its join
+    val target = "o_orderpriority"
+    val before = orders.groupBy(target).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val minN = before.values.min
+    val cases = Seq(
+      Undersample(target, seed = 7L)(orders) -> before.map { case (k, _) => k -> minN },
+      TrimEqual(target, 40, orderCols = Seq("o_orderkey"))(orders) ->
+        before.map { case (k, n) => k -> math.min(n, 40L) })
+    cases.foreach { case (out, expected) =>
+      val plan = out.queryExecution.analyzed
+      val extra = plan.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Join => p
+        case p: org.apache.spark.sql.catalyst.plans.logical.Aggregate => p
+      }
+      assert(extra.isEmpty, plan.toString)
+      val got = out.groupBy(target).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == expected)
+    }
+  }
+
   test("B6 oversample: every class exactly at majority size") {
     val byClass = orders.groupBy("o_orderstatus").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -143,6 +143,57 @@ class CorpusSpec extends SparkSpec {
     assert(!plan.contains("Window"), s"unexpected window in:\n$plan")
   }
 
+  test("mixToTokenBudget: sources whose UTF-8 and UTF-16 orders disagree, " +
+    "no job while building, one RunningTotal") {
+    import spark.implicits._
+    // "\uff61" sorts before "\ud83d\ude00" in UTF-8 bytes (EF.. < F0..)
+    // but after it in UTF-16 units (FF61 > D83D); ASCII "a" precedes both
+    val halfStop = "\uff61"
+    val emoji = "\ud83d\ude00"
+    val docs = (0L until 6L).map(i => (i, Seq.fill(3)("w").mkString(" "), halfStop)) ++
+      (10L until 16L).map(i => (i, Seq.fill((i % 4 + 1).toInt)("e").mkString(" "), emoji)) ++
+      (20L until 25L).map(i => (i, "a b", "a"))
+    val budgets = Map(halfStop -> 7L, emoji -> 6L, "a" -> 3L)
+    val seed = 5L
+    val df = docs.toDF("doc_id", "text", "source")
+    val sc = spark.sparkContext
+    val group = "mixToTokenBudget-build"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val out = try Corpus.mixToTokenBudget(df, "text", "doc_id", "source", budgets, seed)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.sql.graftbridge.GraftBridge.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get == 0, "building the frame ran a Spark job")
+    val plan = out.queryExecution.executedPlan.toString
+    assert("RunningTotal \\[".r.findAllIn(plan).length == 1, plan)
+    // driver-side reference: per source, docs in (md5 key, id) order,
+    // kept while the source's exclusive token total is under budget
+    def key(id: Long) = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$id:$seed".getBytes("UTF-8"))
+      java.lang.Long.parseLong(md.map("%02x".format(_)).mkString.substring(0, 15), 16)
+    }
+    val expected = docs.groupBy(_._3).toSeq.flatMap { case (src, rows) =>
+      var acc = 0L
+      rows.sortBy(r => (key(r._1), r._1)).flatMap { case (id, text, _) =>
+        val keep = acc < budgets(src)
+        acc += text.split(" ").length
+        if (keep) Some(id) else None
+      }
+    }.sorted
+    val got = out.collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == expected)
+  }
+
   test("temperatureWeights: T=1 proportional, T=2 flattens toward the tail, T->inf uniform") {
     import spark.implicits._
     // 90/10 split: proportional keeps the skew, temperature flattens it

@@ -149,6 +149,11 @@ class EncodingSpec extends SparkSpec {
       .select("id", "cat", "cat_ord_encoded").collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out == again, "bit-deterministic")
+    // one per-category reset total: no second total, no offset join
+    val plan = Encoding.OrderedTargetEncode("cat", "t", m = 2.0,
+      seed = 7L, tieCols = Seq("id"))(df).queryExecution.executedPlan.toString
+    assert("RunningTotal \\[".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("OrderedTargetEncode: repeated tieCols encode the same under any partitioning and row order") {

@@ -109,6 +109,25 @@ class QuantilesSpec extends SparkSpec {
     assert(rows.values.forall(_.getBoolean(5)))
     // replicate count: every replicate kept a nonzero weight sum
     assert(rows.values.forall(_.getLong(2) == 30L))
+    // one (g, b) reset total; the same output at any shuffle
+    // partitioning and input order
+    def ci(in: org.apache.spark.sql.DataFrame, partitions: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try {
+        val out = Audit.bootstrapQuantileCi(in, "g", "v", "id", p = 0.5,
+          b = 30, sketchK = 32)
+        val plan = out.queryExecution.executedPlan.toString
+        assert("RunningTotal \\[".r.findAllIn(plan).length == 1, plan)
+        out.collect().map(_.toString).sorted.toSeq
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val base = ci(df, 1)
+    assert(base == rows.values.map(_.toString).toSeq.sorted)
+    assert(ci(df, 7) == base)
+    val reversed = df.collect().reverse.toSeq
+    assert(ci(spark.createDataFrame(spark.sparkContext.parallelize(reversed, 3),
+      df.schema), 7) == base)
   }
 
   test("bootstrapQuantileSketchOnly: brackets the median like the audit form") {
