@@ -2,15 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.tools.Profile
+
 /** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR at local[32], prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS] (default 32) and prints
+  * ONE JSON line on stdout: per query the median of `repeat` timed
+  * `wall_s` (SPARK_GRAFT_REPEAT or --repeat, default 3), -1 if any rep
+  * failed. Every rep runs through [[Profile.record]], and its ledger
+  * record goes to stderr as one JSON line as soon as it finishes: warm-up
+  * reps (every query once at the sibling sf0.001, when there is one)
+  * labelled "warm", then the timed reps labelled "timed".
   *
   * Headline set = one performance-representative query per operator
   * family (scan/agg/window/join/encode/hash/impute/trim/dedup/similarity/
   * text/streaming/multimodal). The quadratic-candidate balancing ops are
   * correctness-gated in Verify but excluded here: their cost is dominated
   * by planted-pathology candidate joins, not engine throughput.
-  * SPARK_GRAFT_BENCH_ALL=1 runs everything.
+  * SPARK_GRAFT_BENCH_ALL=1 runs everything; SPARK_GRAFT_BENCH_ONLY=a,b,c
+  * an explicit subset, and an unknown name there fails at start.
   */
 object Bench {
 
@@ -79,102 +88,58 @@ object Bench {
     "mm11_video_near_dup", "e8b_sketch_bin", "a14b_sketch_winsorize",
     "a48_bootstrap_quantile_ci", "st16_window_bootstrap_ci")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_RELIABLE_CKPT=<dir>: run every Materialize.frame site
-    // in reliable-checkpoint mode (the dynamic-allocation posture) —
-    // the r10 A/B that prices graft.checkpoint.reliable=true.
-    sys.env.get("SPARK_GRAFT_RELIABLE_CKPT").foreach { dir =>
-      spark.conf.set(graft.core.Materialize.ReliableKey, "true")
-      spark.sparkContext.setCheckpointDir(dir)
-    }
-    val all = SparkEntry.queries
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c times an explicit subset (ad-hoc
-    // measurements outside the headline); BENCH_ALL=1 times everything.
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(list) => list.split(",").toSeq.filter(all.contains)
-      case None =>
-        if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) all.keys.toSeq.sorted
-        else headline.filter(all.contains)
-    }
-    // Warm every headline plan at the smallest SF before timing: codegen
-    // compiles per generated class (schema-dependent, data-independent),
-    // so a ~500-doc run JITs the exact classes the timed run executes —
-    // the measurement then reflects engine throughput, not javac. Falls
-    // back to the single-query warmup when no sibling sf0.001 exists.
+  /** Times `names` on `sfDir`, `repeat` timed reps each, after the
+    * warm-up, and returns the stdout line. Each rep's ledger record goes
+    * to `ledger` as it finishes. Leaves the session running. */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String], repeat: Int,
+          ledger: String => Unit): String = {
+    def rep(dir: String, name: String, label: String): Profile.Record =
+      Profile.runRep(spark, dir, name, label, ledger)
+    // codegen compiles per generated class (schema-dependent,
+    // data-independent), so warming every plan at the smallest SF keeps
+    // javac out of the timed reps
     val warmDir = new java.io.File(new java.io.File(sfDir).getParent, "sf0.001")
     if (warmDir.isDirectory && warmDir.getPath != sfDir)
-      names.foreach { n =>
-        try all(n)(spark, warmDir.getPath).count() catch { case _: Throwable => () }
-      }
-    else all("q1_pricing_summary")(spark, sfDir).count()
-    // Per-query variance between single runs is +-2x (scheduler and GC
-    // noise dominate sub-second queries), so round-over-round claims need
-    // a median: SPARK_GRAFT_REPEAT=N (or --repeat N, default 3) times
-    // each query N times and reports the per-query MEDIAN. Repeats run
-    // back to back per query so plan/codegen state is identical.
+      names.foreach(rep(warmDir.getPath, _, "warm"))
+    else rep(sfDir, "q1_pricing_summary", "warm")
+    val results = names.map { name =>
+      val walls = (1 to repeat).map(_ => rep(sfDir, name, "timed").get("wall_s"))
+      // a failed rep poisons the entry to -1, the failure sentinel that
+      // recheck.py and scale_probe.py skip
+      name -> (if (walls.contains(None)) -1.0
+               else median(walls.flatten.map(_.asInstanceOf[Double])))
+    }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    // 'total' excludes failed (-1) queries, so the explicit failed count
+    // keeps a partial board from reading as a faster one
+    val failed = results.count(_._2 < 0)
+    val total = results.map(_._2).filter(_ >= 0).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs,"sf":"$sfDir","repeat":$repeat}"""
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val all = SparkEntry.queries
+    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+      case Some(list) => list.split(",").toSeq
+      case None if sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1") => all.keys.toSeq.sorted
+      case None => headline
+    }
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries in SPARK_GRAFT_BENCH_ONLY: ${unknown.mkString(",")}")
     val repeat = math.max(1,
       args.sliding(2).collectFirst { case Array("--repeat", n) => n.toInt }
         .orElse(sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt))
         .getOrElse(3))
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    // Session hygiene between timed repeats (r15, r14-VERDICT #1 suspect
-    // (b)): every finished query leaves its localCheckpoint blocks pinned
-    // in the storage pool until driver GC collects the RDD handle, so a
-    // 123-query single-JVM board accumulates dead blocks that compete
-    // with execution memory exactly when 32 concurrent object-heavy
-    // tasks need it. Freeing them AFTER each repeat (outside the timed
-    // region — the next repeat re-executes everything from parquet, so
-    // nothing computed survives into any timed region).
-    // NOT result caching: no query output or intermediate is retained.
-    def freeSessionState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    freeSessionState() // drop warmup-run leftovers before the first timing
-    val results = names.map { name =>
-      // a failed repeat poisons the whole entry to -1 (the artifact
-      // family's failure sentinel — recheck.py/scale_probe.py skip
-      // negatives): the old shape recorded time-to-CRASH as if it were
-      // a measurement, which read an sf10 OOM as a 7-second "speedup"
-      // (r13). The error goes to stderr with the query name.
-      val times = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { all(name)(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: " +
-              s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
-            false
-        }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        freeSessionState()
-        dt
-      }
-      val m = if (times.exists(_ < 0)) -1.0 else median(times)
-      // progress to STDERR (the driver greps the stdout JSON line only):
-      // a hung/cliffed query at a new scale is identifiable mid-run
-      System.err.println(f"[bench] $name $m%.2f s " +
-        times.map(t => f"$t%.2f").mkString("(", " ", ")"))
-      name -> m
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // r13 ADVICE: 'total' excludes failed (-1) queries, so a crashing
-    // board would read SMALLER than a passing one — the explicit failed
-    // count makes a partial board uncomparable-by-total at a glance.
-    val failed = results.count(_._2 < 0)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"queries":$qs,"sf":"$sfDir","repeat":$repeat}""")
+    val spark = graft.core.Sessions.local("graft-bench",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    println(run(spark, sfDir, names, repeat, System.err.println(_: String)))
     spark.stop()
   }
 }

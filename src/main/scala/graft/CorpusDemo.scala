@@ -17,8 +17,7 @@ import graft.ops._
 object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.core.Sessions.local("graft-corpus-demo", cores = "4",
-      shufflePartitions = "4")
+    val spark = graft.core.Sessions.local("graft-corpus-demo", cores = "4")
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     println(s"[demo] corpus: ${docs.count()} docs")

@@ -18,8 +18,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graft_demo").toString
-    val spark = graft.core.Sessions.local("graft-demo", cores = "4",
-      shufflePartitions = "4")
+    val spark = graft.core.Sessions.local("graft-demo", cores = "4")
 
     // 1. ingest as v0 with provenance (S6)
     val tracker = new MetaTracker

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,12 +9,8 @@ object Verify {
     // iteration on a single query (the driver always passes two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     new java.io.File(outDir).mkdirs()
     // run queries concurrently (8 driver threads): Spark's scheduler
     // interleaves the jobs, keeping executors busy through the many small

@@ -46,12 +46,13 @@ object Sessions {
     // unreadable; Tables.events converts the long back to a timestamp.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  def local(appName: String = "graft", cores: String = "32",
-            shufflePartitions: String = "32"): SparkSession = {
+  /** The one session builder of every main and the test fixture:
+    * `local[cores]`, with shuffle partitions equal to the core count. */
+  def local(appName: String = "graft", cores: String = "32"): SparkSession = {
     val s = tune(SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions))
+      .config("spark.sql.shuffle.partitions", cores))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -18,7 +18,8 @@ import graft.{Bench, SparkEntry}
   * metrics: one JSONL record per query and rep on stdout. Each query
   * runs a warm rep, then a measured rep, each under a job group named
   * after the query, so the jobs it runs while its DataFrame is built
-  * count too. The action is Bench's `.count()`. A record holds wall and
+  * count too. The action is `.count()`. `record` is also the runner that
+  * [[graft.Bench]] times its board with. A record holds wall and
   * build seconds; jobs, stages and tasks; executor run, CPU and GC
   * seconds; shuffle read/write and spill MB; and `/proc/loadavg`.
   * Flags add detail to the measured record:
@@ -146,6 +147,30 @@ object Profile {
       plans
   }
 
+  /** Session hygiene between reps, outside every timed region: every
+    * finished query leaves its cached frames and localCheckpoint blocks
+    * in the storage pool until driver GC collects their handles, where
+    * they compete with the next rep's execution memory. Not result
+    * caching: the next rep re-executes everything from its input. */
+  private def freeSessionState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
+  /** One rep of `name`: its `record`, or on any failure a record naming
+    * the error, handed to `emit` as one JSON line; then the session
+    * hygiene. Returns the record. */
+  def runRep(spark: SparkSession, sfDir: String, name: String, rep: String,
+             emit: String => Unit, detail: Set[String] = Set.empty): Record = {
+    val rec = try record(spark, sfDir, name, rep, detail) catch {
+      case e: Throwable => ListMap[String, Any]("query" -> name, "rep" -> rep,
+        "error" -> s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+    }
+    emit(toJson(rec))
+    freeSessionState(spark)
+    rec
+  }
+
   def main(args: Array[String]): Unit = {
     val (given, rest) = args.toSeq.partition(_.startsWith("--"))
     require(given.forall(flags), s"unknown flag in ${given.mkString(" ")}; $usage")
@@ -156,29 +181,13 @@ object Profile {
     }
     val unknown = names.filterNot(all.contains)
     require(unknown.isEmpty, s"unknown queries ${unknown.mkString(" ")}; $usage")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder()
-      .appName("graft-profile")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-profile", sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
     val detail = given.map(_.stripPrefix("--")).toSet
     for (name <- if (names.isEmpty) Bench.headline else names;
-         rep <- Seq("warm", "measured")) {
-      val rec = try record(spark, sfDir, name, rep,
-          if (rep == "measured") detail else Set.empty)
-        catch { case NonFatal(e) =>
-          ListMap("query" -> name, "rep" -> rep,
-            "error" -> s"${e.getClass.getName}: ${e.getMessage}")
-        }
-      println(toJson(rec))
-      // Bench's session hygiene between reps: no cached frame or
-      // checkpoint block of one rep survives into the next
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+         rep <- Seq("warm", "measured"))
+      runRep(spark, sfDir, name, rep, println,
+        if (rep == "measured") detail else Set.empty)
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -22,6 +24,12 @@ import org.apache.spark.sql.streaming.Trigger
   *     MB/s sustained and the on-disk index growth per batch (the
   *     state is the index, not the state store);
   *   - st11 CorpusPipeline (4-stage foreachBatch): docs/s + MB/s.
+  *
+  * It does not run through [[Profile.record]]: that ledger counts the
+  * jobs of the caller's job group, and in spark-sql 4.1.2
+  * `StreamExecution.runStream` calls `SparkContext.setJobGroup` with the
+  * stream's run id on its own thread, so none of a stream's jobs would
+  * be counted. The numbers come from `StreamingQueryProgress` instead.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/tmp/sf1 sbt "runMain graft.tools.ProfileStreamingThroughput [out.json]"
@@ -66,7 +74,7 @@ object ProfileStreamingThroughput {
     * events into the throughput/latency/state readout. */
   private def harvest(name: String,
                       q: org.apache.spark.sql.streaming.StreamingQuery,
-                      extra: Map[String, Any] = Map.empty): Map[String, Any] = {
+                      extra: Map[String, Any] = Map.empty): Profile.Record = {
     val t0 = System.nanoTime()
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
@@ -89,31 +97,27 @@ object ProfileStreamingThroughput {
       // full per-batch trigger latencies (batch order): the growth-trend
       // readout — for st7/st11 this IS the per-batch index-append
       // latency curve as the persisted index grows (r13 VERDICT #5)
-      "trigger_ms_series" -> trigMs.map(math.round).mkString("[", ",", "]")
+      "trigger_ms_series" -> trigMs.map(math.round).toSeq
     ) ++ extra
-    println(s"[stp] $name: " + m.toSeq.sortBy(_._1)
-      .map { case (k2, v) => s"$k2=$v" }.mkString(" "))
-    m
+    val sorted = ListMap.from(m.toSeq.sortBy(_._1))
+    println(s"[stp] $name: ${Profile.toJson(sorted)}")
+    sorted
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = args.headOption.getOrElse("bench/streaming_throughput_r13.json")
-    val spark = graft.core.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r13 ADVICE: recentProgress keeps only the LAST N entries
-      // (default 100) — K/J above that silently dropped early batches
-      // and understated sustained throughput; pin N above any staged
-      // batch count this harness will ever run.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-stp", cpus)
+    // recentProgress keeps only the LAST N entries (default 100): K/J
+    // above that silently dropped early batches and understated sustained
+    // throughput, so N is pinned above any staged batch count this
+    // harness runs. A session SQL conf, read when each stream starts.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
     import graft.streaming.{CorpusPipeline, IngestDedup, Streams}
 
     val root = java.nio.file.Files.createTempDirectory("graft_stp").toString
-    val results = scala.collection.mutable.Map.empty[String, Any]
+    val results = scala.collection.mutable.Map.empty[String, Profile.Record]
 
     // ---- event stream: K files ordered by ts so the watermark advances
     // (Tables.events's NTZ->TIMESTAMP normalization applied: watermarks
@@ -173,8 +177,7 @@ object ProfileStreamingThroughput {
           "index_bytes_after" -> -1L, // filled below
           "payload_mb" -> docBytes / 1e6))
     results("st7_ingest_dedup") =
-      results("st7_ingest_dedup").asInstanceOf[Map[String, Any]] +
-        ("index_bytes_after" -> dirBytes(ix7))
+      results("st7_ingest_dedup").updated("index_bytes_after", dirBytes(ix7))
 
     // st11: the 4-stage corpus pipeline
     val ix11 = s"$root/ix11"
@@ -191,17 +194,9 @@ object ProfileStreamingThroughput {
       Map("payload_mb" -> docBytes / 1e6))
 
     // one JSON line, bench-artifact style
-    def j(v: Any): String = v match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].toSeq.sortBy(_._1)
-        .map { case (k2, v2) => s""""$k2":${j(v2)}""" }.mkString("{", ",", "}")
-      case d: Double => f"$d%.2f"
-      case x => x.toString
-    }
-    val json = "{" + (
-      s""""protocol":"file stream maxFilesPerTrigger=1, $K event files / $J doc files, AvailableNow, $cpus cores, $sfDir"""" +:
-      results.toSeq.sortBy(_._1)
-        .map { case (k2, v) => s""""$k2":${j(v)}""" }
-    ).mkString(",") + "}"
+    val json = Profile.toJson(ListMap[String, Any]("protocol" ->
+      s"file stream maxFilesPerTrigger=1, $K event files / $J doc files, AvailableNow, $cpus cores, $sfDir") ++
+      results.toSeq.sortBy(_._1))
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes("UTF-8"))

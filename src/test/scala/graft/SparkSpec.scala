@@ -41,5 +41,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = graft.core.Sessions.local(
-    appName = "graft-test", cores = "4", shufflePartitions = "4")
+    appName = "graft-test", cores = "4")
 }
