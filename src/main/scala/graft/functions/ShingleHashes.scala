@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native shingle hasher: `shingle_hashes(text, n)` -> array<bigint> of
   * the DISTINCT word n-gram shingle hashes of a text, first-occurrence
   * order — the whole [[graft.ops.Dedup.shingleHashRows]] contract
-  * (whitespace tokens of the trimmed text; docs shorter than n tokens
+  * (whitespace tokens of the space-trimmed text; docs shorter than n tokens
   * contribute their whole normalized text as ONE shingle, so empty
   * docs hash the empty string; 60-bit md5 value identical to
   * `Hashing.md5Int`) collapsed into ONE row-local codegen loop.
@@ -42,7 +42,7 @@ case class ShingleHashes(left: Expression, right: Expression) extends BinaryExpr
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val t = left.eval(input)
     if (t == null) null
-    else ShingleHashes.hashes(t.asInstanceOf[UTF8String].toString, n)
+    else ShingleHashes.hashes(t.asInstanceOf[UTF8String], n)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -55,7 +55,7 @@ case class ShingleHashes(left: Expression, right: Expression) extends BinaryExpr
         boolean ${ev.isNull} = ${textGen.isNull};
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
         if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.ShingleHashes.hashes(${textGen.value}.toString(), $nStr);
+          ${ev.value} = graft.functions.ShingleHashes.hashes(${textGen.value}, $nStr);
         }""")
   }
 
@@ -82,9 +82,14 @@ object ShingleHashes {
     (v << 4) | ((h(7) & 0xFF) >>> 4)
   }
 
-  /** Distinct shingle hashes, first-occurrence order (see class doc). */
-  def hashes(text: String, n: Int): ArrayData = {
-    val toks = text.trim.split("\\s+", -1)
+  /** Distinct shingle hashes, first-occurrence order (see class doc).
+    * Trims with `UTF8String.trim` — spaces (0x20) only, exactly what
+    * Spark's `trim` does in [[graft.ops.Text.tokens]]; Java's
+    * `String.trim` also strips tabs and newlines, and a doc with a
+    * leading tab would get different shingles here than in
+    * [[graft.ops.Dedup.shingleHashRows]]. */
+  def hashes(text: UTF8String, n: Int): ArrayData = {
+    val toks = text.trim().toString.split("\\s+", -1)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     if (toks.length < n) {
       seen.add(md5Int60(String.join(" ", toks: _*)))

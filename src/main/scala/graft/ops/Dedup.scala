@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication for training-data pipelines: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash, embedding-cosine near-dup.
@@ -223,19 +224,19 @@ object Dedup {
     // Dispatch bound computed MAP-ONLY from token counts (r14): raw
     // shingle rows per doc = 1 if sz < n else sz - n + 1 (the exact
     // shingleRowsRaw emission), and distinct occurrences can only be
-    // fewer — a valid occHint upper bound. The generic cappedCount
-    // probe on `sh` executed the whole shingle stage a second time
-    // (its early-stop iterators sit ABOVE the dedup aggregate, whose
-    // first output row still needs the full map stage + shuffle): one
-    // duplicated heavy leaf stage per jaccard call in the d2/b17
-    // profiles. This scan tokenizes only — no md5, no explode, no
-    // exchange — and is strictly cheaper at every scale.
+    // fewer — a valid occBound. The generic cappedCount probe on `sh`
+    // executed the whole shingle stage a second time (its early-stop
+    // iterators sit ABOVE the dedup aggregate, whose first output row
+    // still needs the full map stage + shuffle): one duplicated heavy
+    // leaf stage per jaccard call in the d2/b17 profiles. This scan
+    // tokenizes only — no md5, no explode, no exchange — and is
+    // strictly cheaper at every scale.
     val sz = size(graft.ops.Text.tokens(col(textCol)))
     val rawBound = df
       .agg(coalesce(sum(when(sz < n, 1L)
         .otherwise((sz - (n - 1)).cast(LongType))), lit(0L)))
       .head.getLong(0)
-    jaccardPairsAuto(sh, threshold, maxDocsPerShingle, Some(rawBound))
+    jaccardPairsAuto(sh, threshold, maxDocsPerShingle, rawBound)
   }
 
   /** Occurrence-count boundary between the two pair-generation shapes:
@@ -269,17 +270,17 @@ object Dedup {
 
   /** Shape dispatch for exact-Jaccard pair generation (r13 VERDICT #2):
     * fused aggregate under [[FusedOccLimit]] feature occurrences,
-    * window-rank + ppjoin above. `occHint` lets a caller that already
-    * knows (a bound on) the occurrence count skip the probe pass —
-    * pass the bound, not a guess: a too-small hint on a big frame
-    * revives the r13 sf10 object-aggregate spill. */
+    * window-rank + ppjoin above. `occBound` is an upper bound on the
+    * occurrence count of `sh`, computed by the caller from a cheaper
+    * input than `sh` (token counts in [[ngramJaccardPairs]], a capped
+    * frame-row count in [[Multimodal.videoNearDupPairs]];
+    * `Long.MaxValue` when unknown): pass a bound, not a guess — a
+    * too-small bound on a big frame revives the r13 sf10
+    * object-aggregate spill. */
   private[graft] def jaccardPairsAuto(sh: DataFrame, threshold: Double,
                                       maxDocsPerShingle: Int,
-                                      occHint: Option[Long] = None): DataFrame = {
-    val small = occHint match {
-      case Some(n) => n <= FusedOccLimit
-      case None => cappedCount(sh, FusedOccLimit).isDefined
-    }
+                                      occBound: Long): DataFrame = {
+    val small = occBound <= FusedOccLimit
     // No repartition here (r14): both callers already arrive id-clustered
     // ([[shingleHashRows]] exchanges by id for its per-doc dedup and its
     // aggregate preserves that partitioning; [[Multimodal.videoShingles]]
@@ -451,23 +452,6 @@ object Dedup {
     Seq.fill(k)((next(), next()))
   }
 
-  /** Signatures over EXPLODED (id, sh) shingle rows via k min-aggregates:
-    * md5 runs ONCE per (doc, shingle) inside whole-stage codegen, the k
-    * permutations are plain modular arithmetic, and the only shuffle is
-    * the groupBy(id) — map-side partial min-aggregation, the shape that
-    * scales. Returns (id, sig). */
-  def minhashSignatures(shingleRows: DataFrame, idCol: String, k: Int,
-                        seed: Long = 42L): DataFrame = {
-    val params = minhashParams(k, seed)
-    val ex = shingleRows
-      .withColumn("__h", pmod(Hashing.md5Int(col("sh")), lit(MinhashP)))
-    val aggs = params.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(lit(a) * col("__h") + lit(b), lit(MinhashP))).as(s"__m$i")
-    }
-    ex.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .select(col(idCol), array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
-  }
-
   /** Per-band 64-bit LSH keys straight from the signature aggregate:
     * (id, key) rows where key = xxhash64(band, min_{b*r} .. min_{b*r+r-1})
     * — the band index is folded INTO the hash, so banding (and the
@@ -620,22 +604,20 @@ object Dedup {
     * join); contaminated ids anti-join out of the corpus. Docs shorter
     * than n tokens (including empty docs) carry their whole trimmed text
     * as one shingle — see [[shingleRows]] — so an empty benchmark doc
-    * flags empty corpus docs. */
+    * flags empty corpus docs.
+    *
+    * The benchmark's distinct shingle hashes always BROADCAST: the
+    * benchmark is eval-sized while the corpus is the 100 TB side. A
+    * benchmark whose shingle set exceeds the broadcast budget goes
+    * through [[decontaminateBloom]] (exact) or [[decontaminateMapOnly]]. */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, textCol: String,
-                    idCol: String, n: Int, maxOverlap: Double,
-                    broadcastBenchmark: Boolean = true): DataFrame = {
+                    idCol: String, n: Int, maxOverlap: Double): DataFrame = {
     val cs = shingleHashRows(corpus, textCol, idCol, n)
-    val bs0 = shingleHashRows(benchmark, textCol, idCol, n)
-      .select("__h").distinct().withColumn("__hit", lit(1))
-    // The benchmark is eval-sized while the corpus is the 100 TB side, so
-    // the overlap join broadcasts the benchmark's distinct shingle hashes
-    // by default: the corpus-side shingle rows are then never re-shuffled
-    // by hash — one LEFT broadcast join preserves the id partitioning and
-    // a single groupBy(id) computes size AND hit count together (the old
-    // shape aggregated the corpus shingles twice and shuffle-joined on
-    // the shingle hash). Pass broadcastBenchmark=false for a
-    // pathologically large benchmark suite.
-    val bs = if (broadcastBenchmark) broadcast(bs0) else bs0
+    // the corpus-side shingle rows are never re-shuffled by hash: one
+    // LEFT broadcast join preserves the id partitioning and a single
+    // groupBy(id) computes size AND hit count together
+    val bs = broadcast(shingleHashRows(benchmark, textCol, idCol, n)
+      .select("__h").distinct().withColumn("__hit", lit(1)))
     // __hits > 0 guards the maxOverlap == 0 boundary: a doc with ZERO
     // benchmark overlap satisfies `0 >= n * 0`, and without the guard a
     // zero threshold would silently drop the entire corpus — a doc that
@@ -1046,22 +1028,12 @@ object Dedup {
     val spark = edges.sparkSession
     val idType = edges.schema("src").dataType
     // SQL-faithful "a < b" for the in-task min remap (r14): numeric ids
-    // by natural order, strings by unsigned UTF-8 byte order (Spark's
-    // BINARY collation — String.compareTo would diverge on supplementary
+    // by natural order, strings by Spark's BINARY order (unsigned UTF-8
+    // bytes — String.compareTo would diverge on supplementary
     // characters). Types without a faithful in-task order fall back to
     // the former SQL remap below.
-    def utf8Lt(a: String, b: String): Boolean = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(x.length, y.length)
-      var i = 0
-      while (i < n) {
-        val c = (x(i) & 0xff) - (y(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      x.length < y.length
-    }
+    def utf8Lt(a: String, b: String): Boolean =
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
     val lt: Option[(Any, Any) => Boolean] = idType match {
       case LongType => Some((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
       case IntegerType => Some((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int])

@@ -116,28 +116,24 @@ object Lexicon {
     * id (already clustered by the doc-length join — sort only, no new
     * exchange). N rides a 1-row broadcast.
     *
-    * `broadcastVocab=Some(true)` broadcasts the doc-frequency table
-    * instead of shuffle-joining on term: the (doc, term) frame then
-    * keeps its id clustering end to end — ZERO term-keyed exchange of
-    * the corpus-sized side (the df_t aggregate still shuffles, but it's
-    * vocabulary-sized partials). Right whenever the distinct vocabulary
-    * fits a broadcast (natural-language corpora: millions of terms ~
-    * tens of MB); `Some(false)` for open-ended token spaces (URLs, code
-    * identifiers). The DEFAULT (`None`) decides adaptively: one
-    * `approx_count_distinct` pass over the token rows against the
-    * session broadcast threshold — a cheap scan next to the term
-    * shuffle it avoids when the vocabulary is small, and the guard that
-    * stops a 10M-term vocabulary from being forced into a broadcast. */
-  def tfidfTopK(df: DataFrame, textCol: String, idCol: String, k: Int,
-                broadcastVocab: Option[Boolean] = None): DataFrame = {
-    val bv = broadcastVocab.getOrElse(vocabFitsBroadcast(df, textCol, idCol))
+    * The doc-frequency table BROADCASTS when the vocabulary fits the
+    * session broadcast threshold ([[vocabFitsBroadcast]]: one
+    * `approx_count_distinct` pass over the token rows): the (doc, term)
+    * frame then keeps its id clustering end to end — ZERO term-keyed
+    * exchange of the corpus-sized side (the df_t aggregate still
+    * shuffles, but it's vocabulary-sized partials). Natural-language
+    * corpora (millions of terms ~ tens of MB) take this side; an
+    * open-ended token space (URLs, code identifiers) over the threshold,
+    * or a disabled threshold (-1), shuffle-joins on term instead, so a
+    * 10M-term vocabulary is never forced into a broadcast. */
+  def tfidfTopK(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
+    val bv = vocabFitsBroadcast(df, textCol, idCol)
     val dt = docTermCounts(df, textCol, idCol)
     // doc length as a window over the id-clustering dt already has — a
     // sort, not another scan branch + join (docs are bounded-size, so a
     // per-doc window partition is never a hot reducer)
     val dtl = dt.withColumn("__len", sum("c").over(Window.partitionBy("id")))
-    val dfT0 = dt.groupBy("term").agg(count(lit(1)).as("__df"))
-    val dfT = if (bv) broadcast(dfT0) else dfT0
+    val dfT = broadcastIf(bv)(dt.groupBy("term").agg(count(lit(1)).as("__df")))
     val nDocs = dt.agg(count_distinct(col("id")).as("__nd"))
     val scored = dtl
       .join(dfT, "term")
@@ -160,13 +156,11 @@ object Lexicon {
     * adaptivity, and rank-stability contract (round 6 BEFORE the rank,
     * ties on term) as [[tfidfTopK]]. */
   def bm25TopK(df: DataFrame, textCol: String, idCol: String, k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               broadcastVocab: Option[Boolean] = None): DataFrame = {
-    val bv = broadcastVocab.getOrElse(vocabFitsBroadcast(df, textCol, idCol))
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val bv = vocabFitsBroadcast(df, textCol, idCol)
     val dt = docTermCounts(df, textCol, idCol)
     val dtl = dt.withColumn("__len", sum("c").over(Window.partitionBy("id")))
-    val dfT0 = dt.groupBy("term").agg(count(lit(1)).as("__df"))
-    val dfT = if (bv) broadcast(dfT0) else dfT0
+    val dfT = broadcastIf(bv)(dt.groupBy("term").agg(count(lit(1)).as("__df")))
     val g = dt.agg(count_distinct(col("id")).as("__nd"), sum("c").as("__tot"))
     val avgLen = col("__tot").cast(DoubleType) / col("__nd").cast(DoubleType)
     val idf = log(((col("__nd") - col("__df")).cast(DoubleType) + 0.5) /
@@ -211,10 +205,11 @@ object Lexicon {
       .withColumnRenamed("id", idCol)
   }
 
-  /** The tfidfTopK AUTO broadcast decision: estimated vocabulary bytes
-    * (approx distinct terms x ~64 B/row of term string + count +
+  /** The vocabulary-table join side of [[tfidfTopK]], [[bm25TopK]],
+    * [[bigramLogProb]] and [[bigramLogProbKN]]: estimated vocabulary
+    * bytes (approx distinct terms x ~64 B/row of term string + count +
     * overhead) against the session's broadcast threshold. A disabled
-    * threshold (-1) means never auto-broadcast. */
+    * threshold (-1) means never broadcast. */
   private def vocabFitsBroadcast(df: DataFrame, textCol: String,
                                  idCol: String): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -224,6 +219,9 @@ object Lexicon {
       approx * 64L <= threshold
     }
   }
+
+  private def broadcastIf(fits: Boolean)(t: DataFrame): DataFrame =
+    if (fits) broadcast(t) else t
 
   /** Character-trigram rows (id, tri [, carried cols]) over
     * whitespace-normalized lowercase text — the n-gram feature the
@@ -334,15 +332,13 @@ object Lexicon {
     * (the [[tfidfTopK]] adaptive rule — a hot context like "the" then
     * never skews a shuffle), degrading to shuffle joins above it. */
   def bigramLogProb(df: DataFrame, textCol: String, idCol: String,
-                    lambda: Double = 0.75,
-                    broadcastStats: Option[Boolean] = None): DataFrame = {
-    val bv = broadcastStats.getOrElse(vocabFitsBroadcast(df, textCol, idCol))
-    def maybeBroadcast(t: DataFrame): DataFrame = if (bv) broadcast(t) else t
+                    lambda: Double = 0.75): DataFrame = {
+    val bv = vocabFitsBroadcast(df, textCol, idCol)
     val db = docBigramCounts(df, textCol, idCol)
     val cb = db.groupBy("v", "w").agg(sum("c").as("__cvw"))
-    val cv = maybeBroadcast(cb.groupBy("v").agg(sum("__cvw").as("__cv")))
+    val cv = broadcastIf(bv)(cb.groupBy("v").agg(sum("__cvw").as("__cv")))
     val un = docTermCounts(df, textCol, idCol)
-    val cw = maybeBroadcast(un.groupBy("term").agg(sum("c").as("__cw"))
+    val cw = broadcastIf(bv)(un.groupBy("term").agg(sum("c").as("__cw"))
       .withColumnRenamed("term", "w"))
     val total = un.agg(sum("c").as("__tot"))
     db.join(cb, Seq("v", "w")).join(cv, "v").join(cw, "w")
@@ -371,15 +367,13 @@ object Lexicon {
     * Same scale shape as [[bigramLogProb]]; returns
     * (id, n_bigrams, mean_logprob). */
   def bigramLogProbKN(df: DataFrame, textCol: String, idCol: String,
-                      discount: Double = 0.75,
-                      broadcastStats: Option[Boolean] = None): DataFrame = {
-    val bv = broadcastStats.getOrElse(vocabFitsBroadcast(df, textCol, idCol))
-    def maybeBroadcast(t: DataFrame): DataFrame = if (bv) broadcast(t) else t
+                      discount: Double = 0.75): DataFrame = {
+    val bv = vocabFitsBroadcast(df, textCol, idCol)
     val db = docBigramCounts(df, textCol, idCol)
     val cb = db.groupBy("v", "w").agg(sum("c").as("__cvw"))
-    val cv = maybeBroadcast(cb.groupBy("v")
+    val cv = broadcastIf(bv)(cb.groupBy("v")
       .agg(sum("__cvw").as("__cv"), count(lit(1)).as("__n1v")))
-    val contW = maybeBroadcast(cb.groupBy("w").agg(count(lit(1)).as("__ncw")))
+    val contW = broadcastIf(bv)(cb.groupBy("w").agg(count(lit(1)).as("__ncw")))
     val types = cb.agg(count(lit(1)).as("__types"))
     db.join(cb, Seq("v", "w")).join(cv, "v").join(contW, "w")
       .crossJoin(broadcast(types))

@@ -242,18 +242,17 @@ object LshIndex {
     * Scale shape: the batch's band keys broadcast into a map-side probe
     * of `index.bandKeys` (the index is never shuffled); candidates are
     * banding-collision-bounded; the exact verify joins candidates (small
-    * side) against the shingle tables. Pass `broadcastNewSide=false` if
-    * the "batch" is itself corpus-sized. */
+    * side) against the shingle tables. The batch must be batch-sized
+    * (it always broadcasts); a corpus-sized "batch" belongs in
+    * [[Dedup.minhashLshPairs]] over the union instead. */
   def incrementalPairs(newDocs: DataFrame, index: Index, textCol: String,
-                       idCol: String, threshold: Double,
-                       broadcastNewSide: Boolean = true): DataFrame = {
+                       idCol: String, threshold: Double): DataFrame = {
     val exNew = Dedup.shingleHashRows(newDocs, textCol, idCol, index.n)
     val sizesNew = exNew.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val bandedNew = Dedup.minhashBandKeys(exNew, "id",
       index.bands, index.rowsPerBand, index.seed)
-    val bNew = if (broadcastNewSide) broadcast(bandedNew) else bandedNew
-    // new-vs-old: probe the index with the (broadcast) batch keys
-    val candOld = index.bandKeys.as("o").join(bNew.as("nw"),
+    // new-vs-old: probe the index with the broadcast batch keys
+    val candOld = index.bandKeys.as("o").join(broadcast(bandedNew).as("nw"),
         col("o.key") === col("nw.key"))
       .select(least(col("o.id"), col("nw.id")).as("id_a"),
         greatest(col("o.id"), col("nw.id")).as("id_b"))
@@ -266,24 +265,20 @@ object LshIndex {
     // joined `cand` against the FULL (index ∪ batch) shingle table keyed
     // by id — shuffling the whole index twice (once per pair side), the
     // exact re-shuffle of history this class exists to avoid. Candidates
-    // are banding-collision-bounded whenever the batch side is (the
-    // broadcastNewSide contract), so their id set broadcasts and the
-    // index tables are SEMI-JOIN-FILTERED map-side before any exchange:
-    // the index stays scanned-never-shuffled end to end, and the verify
-    // joins run over candidate-sized frames. `cand` is materialized once
-    // (pair-list-sized) — the id-set broadcast and the verify join would
-    // otherwise each re-run the banded probe.
-    val cand =
-      if (broadcastNewSide) graft.core.Materialize.frame(cand0) else cand0
-    val allSh0 = index.shingles.unionByName(exNew)
-    val allSizes0 = index.sizes.unionByName(sizesNew)
-    val (allSh, allSizes) =
-      if (broadcastNewSide) {
-        val candIds = cand
-          .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        (allSh0.join(broadcast(candIds), Seq("id"), "left_semi"),
-          allSizes0.join(broadcast(candIds), Seq("id"), "left_semi"))
-      } else (allSh0, allSizes0)
+    // are banding-collision-bounded because the batch side is, so their
+    // id set broadcasts and the index tables are SEMI-JOIN-FILTERED
+    // map-side before any exchange: the index stays scanned-never-shuffled
+    // end to end, and the verify joins run over candidate-sized frames.
+    // `cand` is materialized once (pair-list-sized) — the id-set
+    // broadcast and the verify join would otherwise each re-run the
+    // banded probe.
+    val cand = graft.core.Materialize.frame(cand0)
+    val candIds = broadcast(cand
+      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct())
+    val allSh = index.shingles.unionByName(exNew)
+      .join(candIds, Seq("id"), "left_semi")
+    val allSizes = index.sizes.unionByName(sizesNew)
+      .join(candIds, Seq("id"), "left_semi")
     // pair-anchored exact verify, same shape as minhashLshPairs
     val withA = cand.join(allSh.withColumnRenamed("id", "id_a"), "id_a")
     val common = withA.join(allSh.withColumnRenamed("id", "id_b"),

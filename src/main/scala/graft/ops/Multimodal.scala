@@ -27,15 +27,6 @@ object Multimodal {
   case class MediaMeta(modality: String, width: Int, height: Int, frames: Int)
   case class MediaRecord(media_id: Long, content: Array[Byte], meta: MediaMeta)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("content", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("modality", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("frames", IntegerType, nullable = false))), nullable = false)))
-
   /** Wrap a text table as a fake media table (UTF-8 bytes as "content",
     * derived meta) — the deterministic stand-in for reading real blobs.
     * Real ingestion would be `spark.read.format("binaryFile")` with the
@@ -496,10 +487,10 @@ object Multimodal {
     // per video), and counting the RAW frame rows is decode-free —
     // probing the shingle frame itself would decode every video once
     // extra. The capped probe never pays a full pass on a big corpus.
-    val occBound = Dedup.cappedCount(frames, Dedup.FusedOccLimit)
+    val frameRows = Dedup.cappedCount(frames, Dedup.FusedOccLimit)
     Dedup.jaccardPairsAuto(videoShingles(frames, window),
       threshold, maxVideosPerShingle,
-      occHint = Some(occBound.getOrElse(Long.MaxValue)))
+      occBound = frameRows.getOrElse(Long.MaxValue))
       .withColumnRenamed("id_a", "video_a")
       .withColumnRenamed("id_b", "video_b")
   }

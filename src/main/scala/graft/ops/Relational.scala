@@ -447,40 +447,27 @@ object Relational {
   /** A7 — column stats: mean/median/min/max/std (`mice_method.py:115-120`).
     * The moment aggregates are one hash-agg pass. The EXACT median goes
     * through [[exactMedian]] (sort + rank selection per column — bounded
-    * memory; the builtin exact percentile aggregate buffers every value);
-    * `approximate=true` keeps everything in the single pass with
-    * `percentile_approx` (mergeable sketch) — the 100 TB default when a
-    * 1e-4-quantile error is acceptable. */
-  def columnStats(df: DataFrame, cols: Seq[String], approximate: Boolean = false): DataFrame = {
+    * memory; the builtin exact percentile aggregate buffers every value). */
+  def columnStats(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(avg(col(c)).as(s"mean_$c"), min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c"), stddev(col(c)).as(s"std_$c")) ++
-        (if (approximate)
-           Seq(percentile_approx(col(c), lit(0.5), lit(10000)).as(s"median_$c"))
-         else Nil)
+        max(col(c)).as(s"max_$c"), stddev(col(c)).as(s"std_$c"))
     }
     val row = df.agg(aggs.head, aggs.tail: _*)
-    if (approximate) {
-      val stackExpr = cols.map(c =>
-        s"'$c', `mean_$c`, CAST(`median_$c` AS DOUBLE), CAST(`min_$c` AS DOUBLE), CAST(`max_$c` AS DOUBLE), `std_$c`"
-      ).mkString(s"stack(${cols.length}, ", ", ", ") as (column, mean, median, min, max, std)")
-      row.selectExpr(stackExpr)
-    } else {
-      val stackExpr = cols.map(c =>
-        s"'$c', `mean_$c`, CAST(`min_$c` AS DOUBLE), CAST(`max_$c` AS DOUBLE), `std_$c`"
-      ).mkString(s"stack(${cols.length}, ", ", ", ") as (column, mean, min, max, std)")
-      // all exact medians in one shared histogram-refinement batch
-      // (r6: replaced per-column concurrent SORTS — see exactMedians)
-      val medsMap = exactMedians(df, cols)
-      val meds = cols.map(c => c -> medsMap(c))
-      val medCol = meds.foldLeft(lit(null).cast(DoubleType)) {
-        case (acc, (c, m)) =>
-          when(col("column") === c, m.map(lit(_)).getOrElse(lit(null).cast(DoubleType)))
-            .otherwise(acc)
-      }
-      row.selectExpr(stackExpr).withColumn("median", medCol)
-        .select("column", "mean", "median", "min", "max", "std")
+    val stackExpr = cols.map(c =>
+      s"'$c', `mean_$c`, CAST(`min_$c` AS DOUBLE), CAST(`max_$c` AS DOUBLE), `std_$c`"
+    ).mkString(s"stack(${cols.length}, ", ", ", ") as (column, mean, min, max, std)")
+    // all exact medians in one shared histogram-refinement batch
+    // (r6: replaced per-column concurrent SORTS — see exactMedians)
+    val medsMap = exactMedians(df, cols)
+    val meds = cols.map(c => c -> medsMap(c))
+    val medCol = meds.foldLeft(lit(null).cast(DoubleType)) {
+      case (acc, (c, m)) =>
+        when(col("column") === c, m.map(lit(_)).getOrElse(lit(null).cast(DoubleType)))
+          .otherwise(acc)
     }
+    row.selectExpr(stackExpr).withColumn("median", medCol)
+      .select("column", "mean", "median", "min", "max", "std")
   }
 
   /** A8 — Pearson correlation matrix over numeric columns, melted to

@@ -169,9 +169,16 @@ class DedupSpec extends SparkSpec {
       (2L, "one two three four five six seven"),   // disjoint
       (3L, "alpha beta gamma delta nine ten"),     // partial overlap
       (4L, null.asInstanceOf[String]),             // null text: never contaminated
-      (5L, ""))                                    // empty text
+      (5L, ""),                                    // empty text
+      // Spark's trim strips spaces only: the leading tab / trailing
+      // newline is a token boundary, so 2 of these docs' 3 shingles hit
+      // (0.67 < 0.8), and "\n" is the 2-token doc " " (a hit), not ""
+      (6L, "\tp q r s"),
+      (7L, "p q r s\n"),
+      (8L, "\n"))
       .toDF("doc_id", "text")
-    val benchmark = Seq((100L, "alpha beta gamma delta epsilon zeta"))
+    val benchmark = Seq((100L, "alpha beta gamma delta epsilon zeta"),
+        (101L, "p q r s"), (102L, "\n"))
       .toDF("doc_id", "text")
     for (t <- Seq(0.8, 0.5, 0.0)) {
       val exact = Dedup.decontaminate(corpus, benchmark, "text", "doc_id",
@@ -197,7 +204,8 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq(
       (1L, "a b c d e"), (2L, "x y"), (3L, ""), (4L, "  "),
-      (5L, "a b c a b c a b c"))
+      (5L, "a b c a b c a b c"), (6L, "\tp q r s"), (7L, "p q r s\n"),
+      (8L, "\n"))
       .toDF("doc_id", "text")
     val viaRows = Dedup.shingleHashRows(docs, "text", "doc_id", 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -595,10 +603,15 @@ class DedupSpec extends SparkSpec {
     assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
       7L -> 5L, 8L -> 8L, 9L -> 8L))
     // generic id type: comp = min(id) under SQL string ordering
-    val s = Seq(("b", "c"), ("c", "a"), ("x", "y")).toDF("id_a", "id_b")
+    // (UTF-8 byte order: "\uff61" < "\ud83d\ude00", the reverse of UTF-16)
+    val s = Seq(("b", "c"), ("c", "a"), ("x", "y"), ("\ud83d\ude00", "\uff61"))
+      .toDF("id_a", "id_b")
     val sc = Dedup.components(s)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(sc == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+    assert(sc == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x",
+      "\uff61" -> "\uff61", "\ud83d\ude00" -> "\uff61"))
+    assert(Dedup.components(s, localEdgeBudget = 0)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap == sc)
   }
 
   test("dedup leaves no persisted RDDs behind across back-to-back corpus runs") {

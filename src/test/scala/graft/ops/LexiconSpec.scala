@@ -78,11 +78,20 @@ class LexiconSpec extends SparkSpec {
     assert(out(2)._3 == r6(math.log(pc)))
     // the interpolation floor keeps every score finite and <= 0
     assert(out.forall(o => o._3 <= 0.0 && !o._3.isNegInfinity))
-    // explicit broadcast off gives identical values (shuffle-join path)
-    val noBc = Lexicon.bigramLogProb(df, "text", "doc_id",
-        broadcastStats = Some(false))
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
-    assert(noBc.map(_._2).toSeq == out.map(_._3).toSeq)
+    // the small vocabulary broadcasts the context/unigram tables; with the
+    // session threshold disabled they shuffle-join, with identical values
+    assert(Lexicon.bigramLogProb(df, "text", "doc_id")
+      .queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(thresholdKey)
+    try {
+      spark.conf.set(thresholdKey, "-1")
+      val noBc = Lexicon.bigramLogProb(df, "text", "doc_id")
+      assert(!noBc.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "a disabled threshold must plan shuffle joins only")
+      assert(noBc.collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
+        .map(_._2).toSeq == out.map(_._3).toSeq)
+    } finally spark.conf.set(thresholdKey, saved)
   }
 
   test("bigramLogProbKN: hand-checked Kneser-Ney values; continuation counts drive backoff") {
@@ -146,38 +155,30 @@ class LexiconSpec extends SparkSpec {
 
   test("plans: tfidf top-k short-circuits; trigram profiles broadcast; asOf shuffles once") {
     val docs = graft.core.Tables.documents(spark, sf)
-    val tfidfPlan = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3)
-      .queryExecution.executedPlan.toString
+    val bcast = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3)
+    val tfidfPlan = bcast.queryExecution.executedPlan.toString
     assert(tfidfPlan.contains("WindowGroupLimit"),
       "per-doc top-k should plan as WindowGroupLimit (rank short-circuit), not a full window sort")
-    // broadcastVocab: identical results, and the (doc, term) side keeps
-    // its id clustering — the term-keyed join becomes a broadcast probe
-    val shufTfidf = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3,
-        broadcastVocab = Some(false))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    val bcast = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3,
-      broadcastVocab = Some(true))
-    assert(bcast.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getDouble(2))).toSet == shufTfidf)
-    assert(bcast.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "broadcastVocab must plan the df_t join as a broadcast probe")
-    // ADAPTIVE mode: under the default threshold this corpus's small
-    // vocabulary picks the broadcast plan; with the threshold disabled
+    // The session broadcast threshold decides the df_t join side: under
+    // the default this corpus's small vocabulary broadcasts the df_t
+    // table, so the (doc, term) side keeps its id clustering and the
+    // term-keyed join is a broadcast probe; with the threshold disabled
     // (stand-in for a 10M-term vocabulary exceeding it) it must fall
     // back to the term-shuffle join instead of forcing an OOM-risk
     // broadcast — results identical either way
-    val autoB = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3)
-    assert(autoB.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "small vocab must auto-select the broadcast probe")
+    assert(tfidfPlan.contains("BroadcastHashJoin"),
+      "small vocab must plan the df_t join as a broadcast probe")
+    val bcastRows = bcast.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(thresholdKey)
     try {
       spark.conf.set(thresholdKey, "-1")
-      val autoS = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3)
-      assert(!autoS.queryExecution.executedPlan.toString.contains("BroadcastHashJoin [term"),
+      val shuf = Lexicon.tfidfTopK(docs, "text", "doc_id", k = 3)
+      assert(!shuf.queryExecution.executedPlan.toString.contains("BroadcastHashJoin [term"),
         "oversized vocab must not be forced into a broadcast")
-      assert(autoS.collect().map(r =>
-        (r.getLong(0), r.getString(1), r.getDouble(2))).toSet == shufTfidf)
+      assert(shuf.collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getDouble(2))).toSet == bcastRows)
     } finally spark.conf.set(thresholdKey, saved)
     val langPlan = Lexicon.trigramLangId(docs, "text", "doc_id", "lang")
       .queryExecution.executedPlan.toString

@@ -42,6 +42,12 @@ def main():
     ap.add_argument("--out", required=True)
     ap.add_argument("--note", default="")
     args = ap.parse_args()
+    if args.repeat < 3:
+        ap.error("--repeat must be >= 3: the first timed rep of a query "
+                 "runs cold (the sf0.001 warm-up does not finish JVM "
+                 "warm-up; it used 2-4x the executor CPU of the third rep "
+                 "on the sketch and bootstrap queries), and a median of "
+                 "1 or 2 reps reports it")
 
     scales = [s.split("=", 1) for s in args.scales.split(",")]
     queries = [q for q in args.queries.split(",") if q]
