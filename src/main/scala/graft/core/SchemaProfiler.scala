@@ -61,33 +61,55 @@ object SchemaProfiler {
   }
 
   /** One-pass per-column profile: null count, numeric-parse count, date-parse
-    * count, distinct count. Output one row per column:
+    * count, distinct count (nulls excluded; -0.0/0.0 and NaN grouped as
+    * `count_distinct` groups them). Output one row per column:
     * (column, n_rows, null_count, numeric_count, date_count, distinct_count,
     *  semantic).
+    *
+    * One scan, exploded to one row per (input row, column): column i's
+    * value rides its own typed slot `v<i>` (the other slots null) with its
+    * null, numeric-parse and date-parse flags. Grouping by (i, slots)
+    * yields each column's distinct values; one global aggregate then sums
+    * the flags per column and counts the non-null groups. Spark's own
+    * rewrite of several `count_distinct` (an Expand) has the same shape
+    * but orders its groups by hash, so each call on a re-read frame planned
+    * different code and recompiled it (6 classes a call).
     */
   def profile(df: DataFrame): DataFrame = {
-    val n = df.columns.length
-    // Single wide aggregate row: 4 metrics per column in one scan.
-    val aggs = df.schema.fields.flatMap { f =>
+    val fields = df.schema.fields.toSeq
+    val n = fields.length
+    val flag = (b: Column) => when(b, 1).otherwise(0)
+    val slots = fields.zipWithIndex.map { case (f, i) =>
       val c = col(f.name)
-      val nulls = count(when(c.isNull, 1)).as(s"nulls_${f.name}")
       val nums = f.dataType match {
-        case StringType => count(when(c.cast(DoubleType).isNotNull, 1))
-        case t if numericTypes(t) || t.isInstanceOf[DecimalType] => count(when(c.isNotNull, 1))
-        case _ => count(lit(null))
+        case StringType => c.cast(DoubleType).isNotNull
+        case _ if isNumericField(f) => c.isNotNull
+        case _ => lit(false)
       }
       val dates = f.dataType match {
-        case StringType => count(when(parsesAsDate(c), 1))
-        case DateType | TimestampType => count(when(c.isNotNull, 1))
-        case _ => count(lit(null))
+        case StringType => parsesAsDate(c)
+        case DateType | TimestampType => c.isNotNull
+        case _ => lit(false)
       }
-      Seq(nulls,
-        nums.as(s"nums_${f.name}"),
-        dates.as(s"dates_${f.name}"),
-        count_distinct(c).as(s"dist_${f.name}"))
-    } :+ count(lit(1)).as("n_rows")
+      struct((lit(i).as("i") +: fields.zipWithIndex.map { case (g, j) =>
+        (if (j == i) c else lit(null).cast(g.dataType)).as(s"v$j")
+      }) ++ Seq(flag(c.isNull).as("nul"), flag(nums).as("num"),
+        flag(dates).as("dat")): _*)
+    }
+    val values = df.select(explode(array(slots: _*)).as("r")).select("r.*")
+      .groupBy((col("i") +: (0 until n).map(j => col(s"v$j"))): _*)
+      .agg(count(lit(1)).as("rows"), sum("nul").as("nul"), sum("num").as("num"),
+        sum("dat").as("dat"))
+    // Single wide aggregate row: 4 metrics per column.
+    val of = (i: Int, c: Column) => coalesce(sum(when(col("i") === i, c)), lit(0L))
+    val aggs = fields.zipWithIndex.flatMap { case (f, i) =>
+      Seq(of(i, col("nul")).as(s"nulls_${f.name}"),
+        of(i, col("num")).as(s"nums_${f.name}"),
+        of(i, col("dat")).as(s"dates_${f.name}"),
+        count(when(col("i") === i && col("nul") === 0, 1)).as(s"dist_${f.name}"))
+    } :+ of(0, col("rows")).as("n_rows")
 
-    val row = df.agg(aggs.head, aggs.tail.toSeq: _*)
+    val row = values.agg(aggs.head, aggs.tail: _*)
     // Melt the single wide row into one row per column (n is tiny: driver-free
     // via stack, stays a DataFrame).
     val stackExpr = df.columns.map { c =>

@@ -41,6 +41,17 @@ object Sessions {
     // buffers are all O(k) (k = a neighbor/explainer count), so a
     // million hashed keys per partition is ~100 MB, not a spill risk.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+    // Spark's generated-class cache is one LRU per JVM, sized from the
+    // active session's conf on first use; its default of 100 classes is
+    // below what one pass of a long-lived session re-runs (perfbench:
+    // corpus_x5 148 classes a pass, tabular_board 192), so the LRU never
+    // hit and every pass recompiled everything (JFR: 13-17% of a pass's
+    // CPU samples in CodeGenerator.doCompile; 22 or fewer compiles and
+    // 1% at 4096). The 123
+    // headline queries compile 1,746 distinct classes at sf0.01 and
+    // 1,712 at sf0.1 (Profile `compiles`, warm reps); 4096 holds that
+    // with room. Cost: ~15 MB more metaspace at the end of a board run.
+    .config("spark.sql.codegen.cache.maxEntries", "4096")
     .config("spark.sql.parquet.compression.codec", "zstd")
     // pyarrow-written TIMESTAMP(NANOS) columns (events.ts) are otherwise
     // unreadable; Tables.events converts the long back to a timestamp.

@@ -63,7 +63,10 @@ object Dedup {
     * (Jaccard 1.0 via {""} = {""}) and an empty benchmark doc
     * decontaminates empty corpus docs — nothing silently bypasses
     * shingle-based dedup (DedupSpec pins this; the DuckDB oracles carry a
-    * matching short-doc branch). */
+    * matching short-doc branch). A NULL text has no tokens and no
+    * shingles (`size` of the null array is negative): it is never a
+    * duplicate and never contaminated, as on the map-only
+    * `shingle_hashes` path. */
   private[ops] def shingleRowsRaw(df: DataFrame, textCol: String, idCol: String,
                                   n: Int): DataFrame = {
     val base = df.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("__toks"))
@@ -74,7 +77,7 @@ object Dedup {
     val short = array(struct((concat_ws(" ", col("__toks")).as("0") +:
       (1 until n).map(j => lit(null).cast(StringType).as(j.toString))): _*))
     base
-      .select(col("id"), explode(when(sz < n, short).otherwise(full)).as("__sh"))
+      .select(col("id"), explode(when(sz >= n, full).when(sz >= 0, short)).as("__sh"))
       .select(col("id"), concat_ws(" ",
         (0 until n).map(j => col("__sh").getField(j.toString)): _*).as("sh"))
   }

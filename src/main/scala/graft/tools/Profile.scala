@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -20,8 +21,12 @@ import graft.{Bench, SparkEntry}
   * after the query, so the jobs it runs while its DataFrame is built
   * count too. The action is `.count()`. `record` is also the runner that
   * [[graft.Bench]] times its board with. A record holds wall and
-  * build seconds; jobs, stages and tasks; executor run, CPU and GC
-  * seconds; shuffle read/write and spill MB; and `/proc/loadavg`.
+  * build seconds; `compiles`, the classes Spark's codegen compiled
+  * during the rep (build and action; a JVM-wide counter, so only
+  * meaningful while one query runs at a time); jobs, stages and tasks;
+  * executor run, CPU and GC seconds; shuffle read/write and spill MB;
+  * and `/proc/loadavg`. A rep that re-runs a query already run in the
+  * session compiles 0 classes unless the codegen cache evicted them.
   * Flags add detail to the measured record:
   *   --stages  one row per completed stage attempt
   *   --ops     per-operator SQL metrics of every execution the query ran
@@ -113,8 +118,9 @@ object Profile {
     val ledger = new GroupLedger(name)
     sc.addSparkListener(ledger)
     sc.setJobGroup(name, s"profile $name $rep")
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
-    val (buildS, wallS, plans) = try {
+    val (buildS, wallS, compiles, plans) = try {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val buildS = (System.nanoTime() - t0) / 1e9
       val counted = df.groupBy().count()
@@ -124,6 +130,7 @@ object Profile {
       // stopped before the listener-bus drain below, which is the
       // profiler's own wait, not the query's
       val wallS = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       val plans = if (!detail("plan")) ListMap.empty[String, String] else {
         val fin = counted.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -131,7 +138,7 @@ object Profile {
         }
         ListMap("plan_initial" -> initial, "plan_final" -> fin.treeString)
       }
-      (buildS, wallS, plans)
+      (buildS, wallS, compiles, plans)
     } finally {
       sc.clearJobGroup()
       GraftBridge.drain(sc)
@@ -139,7 +146,7 @@ object Profile {
     }
     val (jobIds, stages) = ledger.synchronized((ledger.jobIds.toSet, ledger.stages.toSeq))
     ListMap[String, Any]("query" -> name, "rep" -> rep, "wall_s" -> r3(wallS),
-      "build_s" -> r3(buildS), "jobs" -> jobIds.size,
+      "build_s" -> r3(buildS), "compiles" -> compiles, "jobs" -> jobIds.size,
       "stages" -> stages.size) ++ counters(stages) ++
       ListMap("loadavg" -> loadavg()) ++
       (if (detail("stages")) ListMap("stage_rows" -> stages.map(stageRow)) else Nil) ++
