@@ -57,13 +57,22 @@ object Sessions {
     // unreadable; Tables.events converts the long back to a timestamp.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  /** The JVM's managed-table warehouse, deleted at exit, when the
+    * in-memory catalog forgets its tables. */
+  private lazy val warehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getAbsolutePath
+  }
+
   /** The one session builder of every main and the test fixture:
     * `local[cores]`, with shuffle partitions equal to the core count. */
   def local(appName: String = "graft", cores: String = "32"): SparkSession = {
     val s = tune(SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores))
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.warehouse.dir", warehouse))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -545,6 +545,63 @@ object Audit {
     790015083L, 1580030167L, 1975037709L, 2106706890L, 2139624185L,
     2146207644L)
 
+  /** (group, value, md5-mix seed) base frame shared by the bootstrap
+    * family: one md5 per ROW (never per (row, replicate)). */
+  private def bootstrapBase(df: DataFrame, groupCol: String,
+                            valueCol: String, idCol: String): DataFrame =
+    df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
+      .select(col(groupCol).as("__g"),
+        col(valueCol).cast("double").as("__x"),
+        bootstrapSeed(idCol).as("__m"))
+
+  /** The row's md5-mix seed in [0, 2^31-1): the first 60 bits of
+    * md5("id_42") mod (2^31-1) — the `__m` that [[poissonReplicates]]
+    * mixes with the replicate id. */
+  private[graft] def bootstrapSeed(idCol: String): Column =
+    pmod(conv(substring(md5(concat(col(idCol).cast("string"), lit("_"),
+      lit("42"))), 1, 15), 16, 10).cast("long"), lit(2147483647L))
+
+  /** The 1-based ranks of the 2.5th and 97.5th percentiles among `n`
+    * ordered replicates: greatest(1, ceil(p*n)). */
+  private[graft] def ciRanks(n: Column): (Column, Column) = {
+    def rank(p: Double) = greatest(lit(1L), ceil(lit(p) * n.cast("double")))
+    (rank(0.025), rank(0.975))
+  }
+
+  /** The 2.5/97.5 percentile interval of per-(__g, __b) replicate
+    * statistics `stat`: (__g, b_eff = replicates, __lo, __hi). The
+    * ranks are a per-group WINDOW over (stat, replicate), not the
+    * global-rank ladder: rows per group are bounded by b (<= 1000) at
+    * any data scale, so partitionBy(__g) never meets a hot reducer, and
+    * both endpoints come off ONE pass (the former shape re-executed the
+    * ranked lineage once per endpoint filter) — r14. */
+  private def percentileCi(reps: DataFrame, stat: String): DataFrame = {
+    val win = org.apache.spark.sql.expressions.Window.partitionBy("__g")
+    val ranked = reps
+      .withColumn("__r", row_number().over(
+        win.orderBy(col(stat).asc, col("__b").asc)))
+      .withColumn("b_eff", count(lit(1)).over(win))
+    val (loR, hiR) = ciRanks(col("b_eff"))
+    ranked.filter(col("__r") === loR || col("__r") === hiR)
+      .groupBy(col("__g"))
+      .agg(min("b_eff").as("b_eff"),
+        min(when(col("__r") === loR, col(stat))).as("__lo"),
+        min(when(col("__r") === hiR, col(stat))).as("__hi"))
+  }
+
+  /** Explode a [[bootstrapBase]] frame into (group, value, replicate,
+    * Poisson(1) weight) rows — the row-dependent integer mix and
+    * inverse-CDF thresholds both engines replay bit-for-bit. */
+  private[graft] def poissonReplicates(base: DataFrame, b: Int): DataFrame = {
+    val reps = base.withColumn("__b", explode(sequence(lit(0), lit(b - 1))))
+    val v = (col("__m") * (lit(48271L) + (col("__b") * lit(12345L)))) %
+      lit(2147483647L)
+    val w = PoissonCdf31.zipWithIndex.foldRight(lit(6): Column) {
+      case ((t, k), rest) => when(v < lit(t), lit(k)).otherwise(rest)
+    }
+    reps.withColumn("__w", w)
+  }
+
   /** Poisson-bootstrap percentile confidence interval of the per-group
     * mean — the uncertainty readout every drift/quality panel needs,
     * in the ONLY bootstrap shape that survives 100 TB: instead of
@@ -572,30 +629,6 @@ object Audit {
     *
     * Output: (group, n, mean, lo95, hi95), percentile interval at
     * 2.5/97.5 over `b` replicates. */
-  /** (group, value, md5-mix seed) base frame shared by the bootstrap
-    * family: one md5 per ROW (never per (row, replicate)). */
-  private def bootstrapBase(df: DataFrame, groupCol: String,
-                            valueCol: String, idCol: String): DataFrame =
-    df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("__g"),
-        col(valueCol).cast("double").as("__x"),
-        pmod(conv(substring(md5(concat(col(idCol).cast("string"), lit("_"),
-          lit("42"))), 1, 15), 16, 10).cast("long"),
-          lit(2147483647L)).as("__m"))
-
-  /** Explode a [[bootstrapBase]] frame into (group, value, replicate,
-    * Poisson(1) weight) rows — the row-dependent integer mix and
-    * inverse-CDF thresholds both engines replay bit-for-bit. */
-  private[graft] def poissonReplicates(base: DataFrame, b: Int): DataFrame = {
-    val reps = base.withColumn("__b", explode(sequence(lit(0), lit(b - 1))))
-    val v = (col("__m") * (lit(48271L) + (col("__b") * lit(12345L)))) %
-      lit(2147483647L)
-    val w = PoissonCdf31.zipWithIndex.foldRight(lit(6): Column) {
-      case ((t, k), rest) => when(v < lit(t), lit(k)).otherwise(rest)
-    }
-    reps.withColumn("__w", w)
-  }
-
   def bootstrapCi(df: DataFrame, groupCol: String, valueCol: String,
                   idCol: String, b: Int = 50): DataFrame = {
     require(b >= 10 && b <= 1000, s"replicates in [10, 1000], got $b")
@@ -614,22 +647,7 @@ object Audit {
           .as("__ws"))
       .filter(col("__wn") > 0L)
       .withColumn("__m", col("__ws").cast("double") / col("__wn").cast("double"))
-    // replicate ranks per group: a WINDOW, not the global-rank ladder —
-    // per-group rows are bounded by b (<= 1000) regardless of data
-    // scale, so partitionBy(__g) never meets a hot reducer, and the
-    // lo/hi endpoints come off ONE pass (the former shape re-executed
-    // the ranked lineage once per endpoint filter) — r14.
-    val win = org.apache.spark.sql.expressions.Window.partitionBy("__g")
-    val ranked = per
-      .withColumn("__r", row_number().over(
-        win.orderBy(col("__m").asc, col("__b").asc)))
-      .withColumn("__beff", count(lit(1)).over(win))
-    val loR = greatest(lit(1L), ceil(lit(0.025) * col("__beff").cast("double")))
-    val hiR = greatest(lit(1L), ceil(lit(0.975) * col("__beff").cast("double")))
-    val sel = ranked.filter(col("__r") === loR || col("__r") === hiR)
-      .groupBy(col("__g"))
-      .agg(min(when(col("__r") === loR, col("__m"))).as("__lo"),
-        min(when(col("__r") === hiR, col("__m"))).as("__hi"))
+    val sel = percentileCi(per, "__m")
     val overall = base.groupBy("__g")
       .agg(count(lit(1)).as("n"),
         sum(round(col("__x"), 9).cast("decimal(28,9)")).as("__s"))
@@ -728,23 +746,8 @@ object Audit {
           (col("__lew") >= col("__tr") - col("__se")), lit(1))
         .otherwise(lit(0))) === 1).as("__awb"))
       .select(col("__g").as("__gw"), col("__awb"))
-    // percentile CI over the EXACT replicate quantiles: per-group window
-    // rank (rows per group bounded by b <= 1000 at any scale — no hot
-    // reducer) and BOTH endpoints off one pass (r14; the former
-    // global-rank + broadcast-dictionary shape re-executed the ranked
-    // lineage once per endpoint filter).
-    val win = org.apache.spark.sql.expressions.Window.partitionBy("__g")
-    val ranked = med
-      .withColumn("__r", row_number().over(
-        win.orderBy(col("__q").asc, col("__b").asc)))
-      .withColumn("b_eff", count(lit(1)).over(win))
-    val loR = greatest(lit(1L), ceil(lit(0.025) * col("b_eff").cast("double")))
-    val hiR = greatest(lit(1L), ceil(lit(0.975) * col("b_eff").cast("double")))
-    val sel = ranked.filter(col("__r") === loR || col("__r") === hiR)
-      .groupBy(col("__g"))
-      .agg(min("b_eff").as("b_eff"),
-        min(when(col("__r") === loR, col("__q"))).as("__lo"),
-        min(when(col("__r") === hiR, col("__q"))).as("__hi"))
+    // percentile CI over the EXACT replicate quantiles
+    val sel = percentileCi(med, "__q")
     val overall = base.groupBy("__g").agg(count(lit(1)).as("n"))
     overall.join(sel, Seq("__g"))
       .join(wb, col("__g") === col("__gw"))
@@ -774,20 +777,7 @@ object Audit {
       .agg(call_function("kll_quantiles_w", col("__x"),
         col("__w").cast("long"), lit(sketchK), array(lit(p))).as("__sk"))
       .select(col("__g"), col("__b"), element_at(col("__sk.est"), 1).as("__q"))
-    // per-group window rank + one-pass endpoints (r14): same shape and
-    // same bounded-group (<= b rows) argument as [[bootstrapQuantileCi]].
-    val win = org.apache.spark.sql.expressions.Window.partitionBy("__g")
-    val ranked = sk
-      .withColumn("__r", row_number().over(
-        win.orderBy(col("__q").asc, col("__b").asc)))
-      .withColumn("b_eff", count(lit(1)).over(win))
-    val loR = greatest(lit(1L), ceil(lit(0.025) * col("b_eff").cast("double")))
-    val hiR = greatest(lit(1L), ceil(lit(0.975) * col("b_eff").cast("double")))
-    val sel = ranked.filter(col("__r") === loR || col("__r") === hiR)
-      .groupBy(col("__g"))
-      .agg(min("b_eff").as("b_eff"),
-        min(when(col("__r") === loR, col("__q"))).as("__lo"),
-        min(when(col("__r") === hiR, col("__q"))).as("__hi"))
+    val sel = percentileCi(sk, "__q")
     val overall = base.groupBy("__g").agg(count(lit(1)).as("n"))
     overall.join(sel, Seq("__g"))
       .select(col("__g").as(groupCol), col("n"), col("b_eff"),

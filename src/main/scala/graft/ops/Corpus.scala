@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -568,41 +568,54 @@ object Corpus {
     egReweight(dom, eta, steps, smoothing)
   }
 
-  /** The DoReMi EG update over a per-domain (source, tokens, __lp)
-    * frame, computed DRIVER-SIDE (r15, guide §1.2/§5): the frame is
+  /** The fixed-loss DoReMi of [[doremiWeights]] and [[doremiWeightsKN]]
+    * over a per-domain (source, tokens, __lp) frame: the excess losses
+    * against the all-corpus loss are computed once, from token-share
+    * alpha_0, and [[egLoop]] applies them every step. The frame is
     * |domains| rows — a config-scale constant (corpus mixtures have
-    * dozens of domains, never data-scale cardinality) — so the one
-    * collect here replaces two scalar aggregates, two broadcast
-    * exchanges and a crossJoin per query with plain arithmetic. Every
-    * float tree is the SAME IEEE op sequence the former column
-    * expressions (and the oracle CTEs) evaluate: -lp/tok double/long
-    * division, max(0, .), alpha*exp(eta*excess) repeated `steps` times,
-    * ((1-s)*alpha)/asum + s/nd. Rounding stays IN Spark (same `round`)
-    * over the driver-built domains frame. Shared by the unigram
-    * stand-in ([[doremiWeights]]) and the bigram-KN proxy
-    * ([[doremiWeightsKN]]). */
+    * dozens of domains, never data-scale cardinality) — so it is
+    * collected (r15, guide §1.2/§5): one collect in place of two scalar
+    * aggregates, two broadcast exchanges and a crossJoin per query. */
   private def egReweight(dom: DataFrame, eta: Double, steps: Int,
                          smoothing: Double): DataFrame = {
-    val spark = dom.sparkSession
-    import spark.implicits._
     val rows = dom.collect()
     val src = rows.map(_.getAs[String]("source"))
     val tok = rows.map(_.getAs[Long]("tokens"))
     val lp = rows.map(_.getAs[Double]("__lp"))
     val gtok = tok.sum // exact long
     val glp = lp.sum
-    val nd = rows.length
-    val excess = Array.tabulate(nd) { i =>
+    val excess = Array.tabulate(rows.length) { i =>
       math.max(0.0, (-lp(i) / tok(i)) - (-glp / gtok))
     }
-    val alpha = Array.tabulate(nd)(i => tok(i).toDouble / gtok)
-    for (_ <- 1 to steps; i <- 0 until nd)
-      alpha(i) = alpha(i) * math.exp(eta * excess(i))
+    egLoop(dom.sparkSession, src, tok, tok.map(_.toDouble / gtok), eta, steps,
+      smoothing)(_ => excess)
+  }
+
+  /** The DoReMi exponentiated-gradient loop of all four variants,
+    * DRIVER-SIDE over |domains|-sized arrays (r15): each of `steps`
+    * steps takes the excess losses `excessOf(alpha)` and updates
+    * `alpha_d <- alpha_d * exp(eta * excess_d)` in place; the output is
+    * one row per source (source, tokens, excess_loss = the last step's,
+    * weight = (1-s)*alpha/sum(alpha) + s/nDomains), rounded IN Spark
+    * over the driver-built frame. Every float tree is the IEEE op
+    * sequence the oracle CTEs replay. The fixed-loss variants pass a
+    * constant `excessOf`; the adaptive ones run their per-step proxy
+    * pass in it. */
+  private def egLoop(spark: SparkSession, src: Array[String], tok: Array[Long],
+                     alpha: Array[Double], eta: Double, steps: Int,
+                     smoothing: Double)
+                    (excessOf: Array[Double] => Array[Double]): DataFrame = {
+    import spark.implicits._
+    val nd = src.length
+    var excess = Array.empty[Double]
+    for (_ <- 1 to steps) {
+      excess = excessOf(alpha)
+      for (i <- 0 until nd) alpha(i) = alpha(i) * math.exp(eta * excess(i))
+    }
     val asum = alpha.sum
-    (0 until nd).map { i =>
-      (src(i), tok(i), excess(i),
-        (1.0 - smoothing) * alpha(i) / asum + smoothing / nd)
-    }.toDF("source", "tokens", "__e", "__w")
+    (0 until nd).map(i => (src(i), tok(i), excess(i),
+      (1.0 - smoothing) * alpha(i) / asum + smoothing / nd))
+      .toDF("source", "tokens", "__e", "__w")
       .select(col("source"), col("tokens"),
         round(col("__e"), 6).as("excess_loss"),
         round(col("__w"), 6).as("weight"))
@@ -675,9 +688,8 @@ object Corpus {
       .collect()
       .map(r => r.getAs[String]("source") -> r.getAs[Double]("__lpref")).toMap
     val lpref = src.map(lrefMap)
-    val alpha = Array.fill(nd)(1.0 / nd)
-    val excess = new Array[Double](nd)
-    for (_ <- 1 to steps) {
+    val out = egLoop(spark, src, tok, Array.fill(nd)(1.0 / nd), eta, steps,
+        smoothing) { alpha =>
       val asum = alpha.sum
       // proxy trained on the current mixture: p_w(t) = sum_d w_d c_dt/tok_d
       val coefDf = (0 until nd).map(i =>
@@ -688,22 +700,13 @@ object Corpus {
         .agg(sum(col("c") * log(col("__pm"))).as("__lp"))
         .collect()
         .map(r => r.getAs[String]("source") -> r.getAs[Double]("__lp")).toMap
-      for (i <- 0 until nd) {
-        excess(i) =
-          math.max(0.0, (-ldMap(src(i)) / tok(i)) - (-lpref(i) / tok(i)))
-        alpha(i) = alpha(i) * math.exp(eta * excess(i))
-      }
+      Array.tabulate(nd)(i =>
+        math.max(0.0, (-ldMap(src(i)) / tok(i)) - (-lpref(i) / tok(i))))
     }
     // st is dead: the loop's collects were its last readers and the
-    // output below is a local relation (r15 block hygiene)
+    // output is a local relation (r15 block hygiene)
     graft.core.Materialize.free(st)
-    val asum = alpha.sum
-    (0 until nd).map(i => (src(i), tok(i), excess(i),
-      (1.0 - smoothing) * alpha(i) / asum + smoothing / nd))
-      .toDF("source", "tokens", "__e", "__w")
-      .select(col("source"), col("tokens"),
-        round(col("__e"), 6).as("excess_loss"),
-        round(col("__w"), 6).as("weight"))
+    out
   }
 
   /** Multinomial Naive Bayes quality classifier — the fastText-style
@@ -795,24 +798,10 @@ object Corpus {
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
     val spark = df.sparkSession
     import spark.implicits._
-    // repartition by v BEFORE the checkpoint (r14): localCheckpoint
-    // preserves outputPartitioning, and HashPartitioning(v) satisfies
-    // every clustering this method needs — groupBy(v,w), groupBy(v),
-    // and the sb-join-mcb(v,w) / sb-join-mcv(v) / sb-join-cv(v) chains
-    // all reuse this ONE exchange per step (guide §2.4); only the
-    // contW(w) branch still shuffles.
-    val sb = Lexicon.docBigramCounts(df, textCol, idCol)
-      .join(df.select(col(idCol).as("id"), col(sourceCol).as("source")), "id")
-      .groupBy("source", "v", "w").agg(sum("c").as("c"))
-      .repartition(col("v"))
-      .transform(graft.core.Materialize.frame) // corpus out of the step loop
+    val sb = sourceBigrams(df, textCol, idCol, sourceCol)
     // weight-invariant type statistics (support never changes: EG keeps
     // all weights positive)
-    val cb = sb.groupBy("v", "w").agg(sum("c").as("__cvw"))
-    val cv = cb.groupBy("v").agg(sum("__cvw").as("__cv"),
-      count(lit(1)).as("__n1v"))
-    val contW = cb.groupBy("w").agg(count(lit(1)).as("__ncw"))
-    val types = cb.agg(count(lit(1)).as("__types"))
+    val (cb, cv, contW, types) = Lexicon.knTables(sb)
     // attach the type statistics to the stats rows ONCE (r15): every EG
     // step's loss pass used to rebuild the cv/contW/types broadcasts
     // from sb — 5-6 broadcast-exchange jobs per step whose scheduling
@@ -826,29 +815,23 @@ object Corpus {
       .crossJoin(broadcast(types))
       .transform(graft.core.Materialize.frame)
     graft.core.Materialize.free(sb) // stats supersedes sb (1:1 rows)
-    // fixed reference: the corpus-trained KN LM (doremiWeightsKN's proxy)
-    val pKnRef =
-      ((col("__cvw").cast(DoubleType) - lit(discount))
-        / col("__cv").cast(DoubleType)) +
-        (lit(discount) * (col("__n1v").cast(DoubleType)
-          / col("__cv").cast(DoubleType)) *
-          (col("__ncw").cast(DoubleType) / col("__types").cast(DoubleType)))
     // ONE pass for per-source tokens AND reference loss: the type-stat
     // joins are 1:1 on (v,w)/v/w (each aggregated FROM sb), so every sb
     // row survives exactly once and sum(c) here is the exact long sum
     // the former separate groupBy("source") computed
     val refRows = stats
       .groupBy("source")
-      .agg(sum("c").as("tokens"), sum(col("c") * log(pKnRef)).as("__lpref"))
+      .agg(sum("c").as("tokens"),
+        // fixed reference: the corpus-trained KN LM (doremiWeightsKN's proxy)
+        sum(col("c") * log(Lexicon.knProb(discount))).as("__lpref"))
       .collect()
     val src = refRows.map(_.getAs[String]("source"))
     val tok = refRows.map(_.getAs[Long]("tokens"))
     val lpref = refRows.map(_.getAs[Double]("__lpref"))
     val gtok = tok.sum // exact long
     val nd = refRows.length
-    val alpha = Array.fill(nd)(1.0 / nd)
-    val excess = new Array[Double](nd)
-    for (_ <- 1 to steps) {
+    val out = egLoop(spark, src, tok, Array.fill(nd)(1.0 / nd), eta, steps,
+        smoothing) { alpha =>
       val asum = alpha.sum
       // mixture pseudo-counts at corpus scale: coef_d = (w_d/tok_d)*gtok
       val coefDf = (0 until nd).map(i =>
@@ -858,31 +841,19 @@ object Corpus {
         .join(broadcast(coefDf), "source")
         .groupBy("v", "w").agg(sum(col("c") * col("__coef")).as("__mvw"))
       val mcv = mcb.groupBy("v").agg(sum("__mvw").as("__mv"))
-      val pKnMix =
-        (greatest(col("__mvw") - lit(discount), lit(0.0)) / col("__mv")) +
-          (lit(discount) * (col("__n1v").cast(DoubleType) / col("__mv")) *
-            (col("__ncw").cast(DoubleType)
-              / col("__types").cast(DoubleType)))
+      val pKnMix = Lexicon.knProb(discount,
+        greatest(col("__mvw") - lit(discount), lit(0.0)), col("__mv"))
       val ldMap = stats.join(mcb, Seq("v", "w")).join(mcv, "v")
         .groupBy("source").agg(sum(col("c") * log(pKnMix)).as("__lp"))
         .collect()
         .map(r => r.getAs[String]("source") -> r.getAs[Double]("__lp")).toMap
-      for (i <- 0 until nd) {
-        excess(i) =
-          math.max(0.0, (-ldMap(src(i)) / tok(i)) - (-lpref(i) / tok(i)))
-        alpha(i) = alpha(i) * math.exp(eta * excess(i))
-      }
+      Array.tabulate(nd)(i =>
+        math.max(0.0, (-ldMap(src(i)) / tok(i)) - (-lpref(i) / tok(i))))
     }
     // stats is dead: the loop's collects were its last readers and the
-    // output below is a local relation (r15 block hygiene)
+    // output is a local relation (r15 block hygiene)
     graft.core.Materialize.free(stats)
-    val asum = alpha.sum
-    (0 until nd).map(i => (src(i), tok(i), excess(i),
-      (1.0 - smoothing) * alpha(i) / asum + smoothing / nd))
-      .toDF("source", "tokens", "__e", "__w")
-      .select(col("source"), col("tokens"),
-        round(col("__e"), 6).as("excess_loss"),
-        round(col("__w"), 6).as("weight"))
+    out
   }
 
   /** DoReMi reweighting with a REAL proxy scorer: the per-domain loss is
@@ -919,28 +890,33 @@ object Corpus {
                       discount: Double = 0.75): DataFrame = {
     require(steps >= 1 && eta > 0 && smoothing >= 0 && smoothing < 1)
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
-    val sb = Lexicon.docBigramCounts(df, textCol, idCol)
-      .join(df.select(col(idCol).as("id"), col(sourceCol).as("source")), "id")
-      .groupBy("source", "v", "w").agg(sum("c").as("c"))
-      .repartition(col("v"))
-      .transform(graft.core.Materialize.frame)
-    val cb = sb.groupBy("v", "w").agg(sum("c").as("__cvw"))
-    val cv = cb.groupBy("v").agg(sum("__cvw").as("__cv"),
-      count(lit(1)).as("__n1v"))
-    val contW = cb.groupBy("w").agg(count(lit(1)).as("__ncw"))
-    val types = cb.agg(count(lit(1)).as("__types"))
-    val pKn =
-      (col("__cvw").cast(DoubleType) - lit(discount)) / col("__cv").cast(DoubleType) +
-        lit(discount) * (col("__n1v").cast(DoubleType) / col("__cv").cast(DoubleType)) *
-          (col("__ncw").cast(DoubleType) / col("__types").cast(DoubleType))
+    val sb = sourceBigrams(df, textCol, idCol, sourceCol)
+    val (cb, cv, contW, types) = Lexicon.knTables(sb)
     val dom = sb.join(cb, Seq("v", "w")).join(cv, "v").join(contW, "w")
       .crossJoin(broadcast(types))
       .groupBy("source")
-      .agg(sum("c").as("tokens"), sum(col("c") * log(pKn)).as("__lp"))
+      .agg(sum("c").as("tokens"),
+        sum(col("c") * log(Lexicon.knProb(discount))).as("__lp"))
     val out = egReweight(dom, eta, steps, smoothing)
     // egReweight's collect was sb's last reader (the returned frame is
     // a local relation) — free the checkpoint blocks (r15 hygiene)
     graft.core.Materialize.free(sb)
     out
   }
+
+  /** The (source, v, w, c) bigram sufficient statistics of both KN
+    * DoReMi variants, repartitioned by v BEFORE the checkpoint (r14):
+    * localCheckpoint preserves outputPartitioning, and
+    * HashPartitioning(v) satisfies every clustering the KN tables and
+    * their joins need — groupBy(v,w), groupBy(v) and the (v,w)/v join
+    * chains reuse this ONE exchange (guide §2.4); only the w-keyed
+    * continuation table still shuffles. Materialized, so the corpus is
+    * touched once. */
+  private def sourceBigrams(df: DataFrame, textCol: String, idCol: String,
+                            sourceCol: String): DataFrame =
+    Lexicon.docBigramCounts(df, textCol, idCol)
+      .join(df.select(col(idCol).as("id"), col(sourceCol).as("source")), "id")
+      .groupBy("source", "v", "w").agg(sum("c").as("c"))
+      .repartition(col("v"))
+      .transform(graft.core.Materialize.frame)
 }

@@ -214,6 +214,8 @@ object Dedup {
     * giant groupBy(pair) shuffle of every co-occurrence row. */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String, n: Int,
                         threshold: Double, maxDocsPerShingle: Int = 1000): DataFrame = {
+    require(threshold > 0 && threshold <= 1,
+      s"ngramJaccardPairs: threshold must be in (0, 1], got $threshold")
     // join key = 60-bit md5 of the shingle: an 8-byte shuffle key instead
     // of the n-word string (collision odds ~ |shingles|^2 / 2^60 — nil).
     // The by-id exchange is applied inside jaccardPairsAuto (after the
@@ -244,11 +246,13 @@ object Dedup {
 
   /** Occurrence-count boundary between the two pair-generation shapes:
     * below it the FUSED per-doc collect_list aggregate (fewer fixed
-    * stages — ~0.6 s cheaper on sub-second fixtures, r13 recheck mm11)
-    * is strictly better; above it the window-rank + ppjoin shape wins
-    * (the fused object aggregate buffers |occurrences| structs and
-    * spilled the sf10 heap — r13 ProfileJaccard). ~1M is where the r13
-    * phase profiles crossed. */
+    * stages) is better — `graft.tools.Profile` at sf0.1, 4 cores, median
+    * of 5 warm reps, fused vs windowed only: d2 1.99/3.21 s, b17
+    * 2.05/3.15 s, d6 1.94/3.40 s, mm11 0.58/1.17 s. Above it the
+    * window-rank + ppjoin shape wins (the fused object aggregate buffers
+    * |occurrences| structs and spilled the sf10 heap — r13
+    * ProfileJaccard); ~1M is where the r13 phase profiles crossed, so
+    * sf1 (~2.7M shingle occurrences) takes the windowed shape. */
   private[graft] val FusedOccLimit = 1000000L
 
   /** Capped row-count probe: reads at most ~max(limit/partitions, 64k)

@@ -127,25 +127,13 @@ object Lexicon {
     * or a disabled threshold (-1), shuffle-joins on term instead, so a
     * 10M-term vocabulary is never forced into a broadcast. */
   def tfidfTopK(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
-    val bv = vocabFitsBroadcast(df, textCol, idCol)
-    val dt = docTermCounts(df, textCol, idCol)
-    // doc length as a window over the id-clustering dt already has — a
-    // sort, not another scan branch + join (docs are bounded-size, so a
-    // per-doc window partition is never a hot reducer)
-    val dtl = dt.withColumn("__len", sum("c").over(Window.partitionBy("id")))
-    val dfT = broadcastIf(bv)(dt.groupBy("term").agg(count(lit(1)).as("__df")))
+    val (dt, stats) = docTermStats(df, textCol, idCol)
     val nDocs = dt.agg(count_distinct(col("id")).as("__nd"))
-    val scored = dtl
-      .join(dfT, "term")
-      .crossJoin(broadcast(nDocs))
+    val scored = stats.crossJoin(broadcast(nDocs))
       .withColumn("tfidf", round(
         (col("c").cast(DoubleType) / col("__len")) *
           log(col("__nd").cast(DoubleType) / col("__df")), 6))
-    scored
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("tfidf").desc, col("term").asc)))
-      .filter(col("__rn") <= k)
-      .select(col("id").as(idCol), col("term"), col("tfidf"))
+    topKPerDoc(scored, "tfidf", idCol, k)
   }
 
   /** Per-doc top-k BM25 keywords (Robertson/Okapi, the Lucene idf
@@ -157,24 +145,11 @@ object Lexicon {
     * ties on term) as [[tfidfTopK]]. */
   def bm25TopK(df: DataFrame, textCol: String, idCol: String, k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val bv = vocabFitsBroadcast(df, textCol, idCol)
-    val dt = docTermCounts(df, textCol, idCol)
-    val dtl = dt.withColumn("__len", sum("c").over(Window.partitionBy("id")))
-    val dfT = broadcastIf(bv)(dt.groupBy("term").agg(count(lit(1)).as("__df")))
+    val (dt, stats) = docTermStats(df, textCol, idCol)
     val g = dt.agg(count_distinct(col("id")).as("__nd"), sum("c").as("__tot"))
-    val avgLen = col("__tot").cast(DoubleType) / col("__nd").cast(DoubleType)
-    val idf = log(((col("__nd") - col("__df")).cast(DoubleType) + 0.5) /
-      (col("__df").cast(DoubleType) + 0.5) + 1.0)
-    val tf = (col("c").cast(DoubleType) * lit(k1 + 1.0)) /
-      (col("c").cast(DoubleType) +
-        lit(k1) * (lit(1.0 - b) + lit(b) * (col("__len").cast(DoubleType) / avgLen)))
-    dtl.join(dfT, "term")
-      .crossJoin(broadcast(g))
-      .withColumn("bm25", round(idf * tf, 6))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("bm25").desc, col("term").asc)))
-      .filter(col("__rn") <= k)
-      .select(col("id").as(idCol), col("term"), col("bm25"))
+    val scored = stats.crossJoin(broadcast(g))
+      .withColumn("bm25", round(bm25Score(k1, b), 6))
+    topKPerDoc(scored, "bm25", idCol, k)
   }
 
   /** BM25 QUERY search: each document's summed [[bm25TopK]]-formula
@@ -193,17 +168,46 @@ object Lexicon {
     val dfT = broadcast(dt.filter(col("term").isin(terms: _*))
       .groupBy("term").agg(count(lit(1)).as("__df")))
     val g = dt.agg(count_distinct(col("id")).as("__nd"), sum("c").as("__tot"))
+    dtl.join(dfT, "term")
+      .crossJoin(broadcast(g))
+      .groupBy("id").agg(round(sum(bm25Score(k1, b)), 6).as("score"))
+      .withColumnRenamed("id", idCol)
+  }
+
+  /** The BM25 score of a (doc, term) row of [[bm25TopK]] and
+    * [[bm25Search]] over c, __len, __df and the corpus totals __nd, __tot. */
+  private def bm25Score(k1: Double, b: Double): Column = {
     val avgLen = col("__tot").cast(DoubleType) / col("__nd").cast(DoubleType)
     val idf = log(((col("__nd") - col("__df")).cast(DoubleType) + 0.5) /
       (col("__df").cast(DoubleType) + 0.5) + 1.0)
     val tf = (col("c").cast(DoubleType) * lit(k1 + 1.0)) /
       (col("c").cast(DoubleType) +
         lit(k1) * (lit(1.0 - b) + lit(b) * (col("__len").cast(DoubleType) / avgLen)))
-    dtl.join(dfT, "term")
-      .crossJoin(broadcast(g))
-      .groupBy("id").agg(round(sum(idf * tf), 6).as("score"))
-      .withColumnRenamed("id", idCol)
+    idf * tf
   }
+
+  /** The (doc, term) counts of [[tfidfTopK]] and [[bm25TopK]], and those
+    * rows with the doc length __len and doc frequency __df. The doc
+    * length is a window over the id clustering the counts already have:
+    * a sort, not another scan branch + join (docs are bounded-size, so a
+    * per-doc window partition is never a hot reducer). */
+  private def docTermStats(df: DataFrame, textCol: String,
+                           idCol: String): (DataFrame, DataFrame) = {
+    val bv = vocabFitsBroadcast(df, textCol, idCol)
+    val dt = docTermCounts(df, textCol, idCol)
+    val dtl = dt.withColumn("__len", sum("c").over(Window.partitionBy("id")))
+    val dfT = broadcastIf(bv)(dt.groupBy("term").agg(count(lit(1)).as("__df")))
+    (dt, dtl.join(dfT, "term"))
+  }
+
+  /** Each doc's `k` highest-`scoreCol` terms, ties on term. */
+  private def topKPerDoc(scored: DataFrame, scoreCol: String, idCol: String,
+                         k: Int): DataFrame =
+    scored
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("id").orderBy(col(scoreCol).desc, col("term").asc)))
+      .filter(col("__rn") <= k)
+      .select(col("id").as(idCol), col("term"), col(scoreCol))
 
   /** The vocabulary-table join side of [[tfidfTopK]], [[bm25TopK]],
     * [[bigramLogProb]] and [[bigramLogProbKN]]: estimated vocabulary
@@ -279,18 +283,6 @@ object Lexicon {
       .withColumn("lang_pred", coalesce(col("lang_pred"), lit("und")))
   }
 
-  /** Unigram language-model score: per doc, the mean over token
-    * occurrences of ln p(term), with p estimated from THIS corpus
-    * (count / total occurrences). The distributed form of the CCNet /
-    * Wikipedia-LM quality signal — low (very negative) scores mark
-    * gibberish built from rare terms, high scores mark common-word
-    * boilerplate. Returns (id, n_tokens, mean_logprob rounded to 6).
-    * Zero-token docs are absent (no occurrences to average).
-    *
-    * Scale: term probabilities come from one partial-aggregated count
-    * keyed by term; the corpus total is a 1-row broadcast; the per-doc
-    * mean reuses the (doc, term) clustering. No collect — the term
-    * distribution never leaves the cluster. */
   /** Per-doc bigram occurrence counts (id, v, w, c) over lowercased
     * whitespace tokens: exchange-free pair construction (arrays_zip of
     * two shifted slices — the shingle recipe; no lead() window, no
@@ -370,23 +362,54 @@ object Lexicon {
                       discount: Double = 0.75): DataFrame = {
     val bv = vocabFitsBroadcast(df, textCol, idCol)
     val db = docBigramCounts(df, textCol, idCol)
-    val cb = db.groupBy("v", "w").agg(sum("c").as("__cvw"))
-    val cv = broadcastIf(bv)(cb.groupBy("v")
-      .agg(sum("__cvw").as("__cv"), count(lit(1)).as("__n1v")))
-    val contW = broadcastIf(bv)(cb.groupBy("w").agg(count(lit(1)).as("__ncw")))
-    val types = cb.agg(count(lit(1)).as("__types"))
-    db.join(cb, Seq("v", "w")).join(cv, "v").join(contW, "w")
+    val (cb, cv, contW, types) = knTables(db)
+    db.join(cb, Seq("v", "w")).join(broadcastIf(bv)(cv), "v")
+      .join(broadcastIf(bv)(contW), "w")
       .crossJoin(broadcast(types))
       .groupBy("id")
       .agg(sum("c").as("n_bigrams"),
-        round(sum(col("c") * log(
-          (col("__cvw").cast(DoubleType) - lit(discount)) / col("__cv").cast(DoubleType) +
-            lit(discount) * (col("__n1v").cast(DoubleType) / col("__cv").cast(DoubleType)) *
-              (col("__ncw").cast(DoubleType) / col("__types").cast(DoubleType)))) /
-          sum("c"), 6).as("mean_logprob"))
+        round(sum(col("c") * log(knProb(discount))) / sum("c"), 6)
+          .as("mean_logprob"))
       .withColumnRenamed("id", idCol)
   }
 
+  /** The Kneser-Ney tables of a (v, w, c) bigram-count frame: (v, w,
+    * __cvw), (v, __cv, __n1v), (w, __ncw) and the one-row (__types).
+    * Callers add their own broadcast hints. */
+  private[ops] def knTables(bigrams: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val cb = bigrams.groupBy("v", "w").agg(sum("c").as("__cvw"))
+    (cb,
+      cb.groupBy("v").agg(sum("__cvw").as("__cv"), count(lit(1)).as("__n1v")),
+      cb.groupBy("w").agg(count(lit(1)).as("__ncw")),
+      cb.agg(count(lit(1)).as("__types")))
+  }
+
+  /** The [[bigramLogProbKN]] P(w|v) over the [[knTables]] columns. */
+  private[ops] def knProb(discount: Double): Column =
+    knProb(discount, col("__cvw").cast(DoubleType) - lit(discount),
+      col("__cv").cast(DoubleType))
+
+  /** Kneser-Ney P(w|v) from the discounted bigram count and the context
+    * count, backing off through the [[knTables]] type counts. */
+  private[ops] def knProb(discount: Double, discounted: Column,
+                          context: Column): Column =
+    discounted / context +
+      lit(discount) * (col("__n1v").cast(DoubleType) / context) *
+        (col("__ncw").cast(DoubleType) / col("__types").cast(DoubleType))
+
+  /** Unigram language-model score: per doc, the mean over token
+    * occurrences of ln p(term), with p estimated from THIS corpus
+    * (count / total occurrences). The distributed form of the CCNet /
+    * Wikipedia-LM quality signal — low (very negative) scores mark
+    * gibberish built from rare terms, high scores mark common-word
+    * boilerplate. Returns (id, n_tokens, mean_logprob rounded to 6).
+    * Zero-token docs are absent (no occurrences to average).
+    *
+    * Scale: term probabilities come from one partial-aggregated count
+    * keyed by term; the corpus total is a 1-row broadcast; the per-doc
+    * mean reuses the (doc, term) clustering. No collect — the term
+    * distribution never leaves the cluster. */
   def unigramLogProb(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val dt = docTermCounts(df, textCol, idCol)
     val ct = dt.groupBy("term").agg(sum("c").as("__ct"))

@@ -482,6 +482,8 @@ object Multimodal {
   def videoNearDupPairs(frames: DataFrame, window: Int = 2,
                         threshold: Double = 0.5,
                         maxVideosPerShingle: Int = 1000): DataFrame = {
+    require(threshold > 0 && threshold <= 1,
+      s"videoNearDupPairs: threshold must be in (0, 1], got $threshold")
     // Shape hint for the pair-gen dispatch (r13 VERDICT #2): shingle
     // occurrences <= frame rows (one shingle per frame minus window-1
     // per video), and counting the RAW frame rows is decode-free —

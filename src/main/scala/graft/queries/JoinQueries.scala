@@ -15,13 +15,6 @@ import Q.QueryFn
   */
 object JoinQueries {
 
-  /** Per-JVM namespace for q16's bucketed table names: cleanup only ever
-    * touches THIS session's previous copies, so a concurrent gate run in
-    * another JVM (different tag) never has its freshly written tables
-    * dropped mid-query. */
-  private val q16SessionTag: String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-
   val queries: Map[String, QueryFn] = Map(
     "q3_shipping_priority" -> ((s, dir) => {
       val cust = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
@@ -87,11 +80,10 @@ object JoinQueries {
       // gate: both fact tables written bucketed by the join key, then a
       // join that plans with NO shuffle exchange on either side
       // (BucketingSpec pins the plan; this query oracles the content).
-      // session-namespaced table names keep concurrent runs from
-      // colliding; cleanup drops only THIS session's previous copies
-      // (wildcard-dropping all q16_* would delete a concurrent gate
-      // run's freshly written tables mid-query)
-      val pre = s"q16_${q16SessionTag}_"
+      // The warehouse is private to the JVM (Sessions.local); each run
+      // drops the session's previous copies, and a per-run tag keeps
+      // concurrent runs in one session from colliding
+      val pre = "q16_"
       s.catalog.listTables().collect().map(_.name)
         .filter(t => t.startsWith(s"orders_$pre") || t.startsWith(s"lineitem_$pre"))
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))

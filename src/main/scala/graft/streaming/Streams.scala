@@ -9,16 +9,23 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *
   * Each transform is written against an UNBOUNDED DataFrame, so the same
   * function serves `spark.read` (backfill/oracle) and `spark.readStream`
-  * (live): the Spark-idiomatic batch/streaming unification. Watermarks
-  * bound state; tumbling/sliding/session windows shuffle once on
+  * (live): the Spark-idiomatic batch/streaming unification. Each
+  * windowed transform sets the 2-hour event-time watermark that bounds
+  * its state in a stream; Spark's analyzer drops it from a batch plan
+  * (EliminateEventTimeWatermark), so the batch plan is the same with or
+  * without it. Tumbling/sliding/session windows shuffle once on
   * (window, key).
   */
 object Streams {
 
+  /** `events` with the 2-hour event-time watermark on `ts`. */
+  private def watermarked(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "2 hours")
+
   /** Tumbling-window aggregate: per (1h window, event_type) count + sum.
     * State bounded by the 2h watermark in stream mode. */
-  def tumblingCounts(events: DataFrame, watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+  def tumblingCounts(events: DataFrame): DataFrame = {
+    val src = watermarked(events)
     src.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
@@ -26,17 +33,16 @@ object Streams {
   }
 
   /** Sliding-window aggregate: 1h window every 30 min. */
-  def slidingCounts(events: DataFrame, watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+  def slidingCounts(events: DataFrame): DataFrame = {
+    val src = watermarked(events)
     src.groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"))
   }
 
   /** Session windows per user: gap-based (10 min) sessionization. */
-  def userSessions(events: DataFrame, gap: String = "10 minutes",
-                   watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+  def userSessions(events: DataFrame, gap: String = "10 minutes"): DataFrame = {
+    val src = watermarked(events)
     src.groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("sum_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
@@ -65,9 +71,8 @@ object Streams {
     * same plan is two hash aggregates. Exactness: n are exact longs,
     * each n²/q term is a fixed double tree rounded to 9 and
     * DECIMAL-summed — order-independent, oracle-replayable. */
-  def windowDrift(events: DataFrame, refProb: Column,
-                  watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+  def windowDrift(events: DataFrame, refProb: Column): DataFrame = {
+    val src = watermarked(events)
     val counts = src.filter(col("value").isNotNull)
       .withColumn("band", floor(col("value") / lit(50.0)).cast("int"))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("band"))
@@ -93,9 +98,8 @@ object Streams {
     * counts against their own window total. In batch the same plan is
     * two hash aggregates. All outputs exact longs + one double ratio. */
   def windowHotKeys(events: DataFrame, keyCol: String = "user_id",
-                    minEvents: Long = 20,
-                    watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+                    minEvents: Long = 20): DataFrame = {
+    val src = watermarked(events)
     val per = src
       .groupBy(window(col("ts"), "1 hour").as("w"), col(keyCol))
       .agg(count(lit(1)).as("n"))
@@ -128,14 +132,11 @@ object Streams {
     * StreamingSpec on a real watermark+append stream. */
   def windowBootstrapCi(events: DataFrame, valueCol: String = "value",
                         idCol: String = "event_id", p: Double = 0.5,
-                        b: Int = 30, k: Int = 64,
-                        watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+                        b: Int = 30, k: Int = 64): DataFrame = {
+    val src = watermarked(events)
     val base = src.filter(col(valueCol).isNotNull)
       .select(col("ts"), col(valueCol).cast("double").as("__x"),
-        pmod(conv(substring(md5(concat(col(idCol).cast("string"), lit("_"),
-          lit("42"))), 1, 15), 16, 10).cast("long"),
-          lit(2147483647L)).as("__m"))
+        graft.ops.Audit.bootstrapSeed(idCol).as("__m"))
     val wtd = graft.ops.Audit.poissonReplicates(base, b)
       .filter(col("__w") > 0)
     val per = wtd
@@ -145,17 +146,14 @@ object Streams {
       .select(col("w"), col("__b"),
         element_at(col("__sk.est"), 1).as("__q"),
         col("__sk.err").as("__e"))
+    val (loR, hiR) = graft.ops.Audit.ciRanks(col("b_eff"))
     per.groupBy(window(col("w"), "1 hour").as("w2"))
       .agg(count(lit(1)).as("b_eff"),
         sort_array(collect_list(struct(col("__q"), col("__b")))).as("__qs"),
         max(col("__e")).as("max_rank_err"))
       .select(col("w2.start").as("window_start"), col("b_eff"),
-        element_at(col("__qs"),
-          greatest(lit(1L), ceil(lit(0.025) * col("b_eff").cast("double")))
-            .cast("int")).getField("__q").as("ci_lo"),
-        element_at(col("__qs"),
-          greatest(lit(1L), ceil(lit(0.975) * col("b_eff").cast("double")))
-            .cast("int")).getField("__q").as("ci_hi"),
+        element_at(col("__qs"), loR.cast("int")).getField("__q").as("ci_lo"),
+        element_at(col("__qs"), hiR.cast("int")).getField("__q").as("ci_hi"),
         col("max_rank_err"))
   }
 
@@ -172,9 +170,8 @@ object Streams {
     * with its own accuracy certificate
     * ([[graft.ops.Quantiles.auditEstimates]] is the batch audit). */
   def windowQuantiles(events: DataFrame, valueCol: String = "value",
-                      probs: Seq[Double] = Seq(0.5, 0.95), k: Int = 64,
-                      watermark: Boolean = false): DataFrame = {
-    val src = if (watermark) events.withWatermark("ts", "2 hours") else events
+                      probs: Seq[Double] = Seq(0.5, 0.95), k: Int = 64): DataFrame = {
+    val src = watermarked(events)
     src.filter(col(valueCol).isNotNull)
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(call_function("kll_quantiles", col(valueCol).cast("double"),
@@ -188,32 +185,33 @@ object Streams {
   }
 
   /** Streaming exact dedup for continuous ingestion (the training-data
-    * pipeline's "don't index the same document twice" step): in stream
-    * mode, `dropDuplicatesWithinWatermark` keeps the first arrival per
+    * pipeline's "don't index the same document twice" step): on a
+    * stream, `dropDuplicatesWithinWatermark` keeps the first arrival per
     * key and EVICTS key state once the watermark passes — state is
-    * bounded by (keys per `delay` horizon), not by stream history. In
-    * batch mode the same call site does a plain `dropDuplicates`
+    * bounded by (keys per `delay` horizon), not by stream history. On a
+    * batch frame the same call site does a plain `dropDuplicates`
     * backfill. Duplicates farther apart than `delay` are kept (that is
     * the documented horizon trade-off that makes 100 TB/day feasible). */
   def dedupByKey(src: DataFrame, keyCols: Seq[String], tsCol: String = "ts",
-                 delay: String = "2 hours", streaming: Boolean = false): DataFrame =
-    if (streaming)
+                 delay: String = "2 hours"): DataFrame =
+    if (src.isStreaming)
       src.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keyCols)
     else src.dropDuplicates(keyCols)
 
   /** Interval (time-window) join: pairs with the same key where the
-    * right event lands within `[left.ts, left.ts + gapSec]`. In stream
-    * mode this is Spark's native stream-stream inner join — watermarks on
+    * right event lands within `[left.ts, left.ts + gapSec]`. When either
+    * side is a stream this is Spark's native stream join — watermarks on
     * BOTH sides plus the time-range condition let the engine evict join
     * state older than the horizon, so state is bounded by the event rate
-    * × delay, not stream history. In batch mode the same call site
+    * × delay, not stream history. On two batch frames the same call site
     * delegates to [[graft.ops.RangeJoin.within]] (the gap-bucket
     * equi-join — a raw inequality join would re-pair each key's whole
     * history). Output columns are `l_`/`r_`-prefixed in both modes. */
   def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
-                   tsCol: String, gapSec: Long, delay: String = "2 hours",
-                   streaming: Boolean = false): DataFrame =
-    if (!streaming) graft.ops.RangeJoin.within(left, right, keyCol, tsCol, gapSec)
+                   tsCol: String, gapSec: Long,
+                   delay: String = "2 hours"): DataFrame =
+    if (!left.isStreaming && !right.isStreaming)
+      graft.ops.RangeJoin.within(left, right, keyCol, tsCol, gapSec)
     else {
       val l = left.select(left.columns.map(c => col(c).as(s"l_$c")): _*)
         .withWatermark(s"l_$tsCol", delay)

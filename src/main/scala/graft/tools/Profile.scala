@@ -30,7 +30,8 @@ import graft.{Bench, SparkEntry}
   * Flags add detail to the measured record:
   *   --stages  one row per completed stage attempt
   *   --ops     per-operator SQL metrics of every execution the query ran
-  *   --plan    the initial formatted plan and the final AQE plan
+  *   --plan    the initial formatted plan and the final AQE plan,
+  *             normalised so that plans compare with a plain `diff`
   * Without query names it profiles the Bench headline set. The scale
   * dir defaults to SPARK_GRAFT_SF_DIR, the core count to
   * SPARK_GRAFT_CPUS (else every available core). Usage:
@@ -103,6 +104,21 @@ object Profile {
       "op" -> node.name, "metrics" -> ListMap.from(metrics))
   }
 
+  /** Plan text that names rather than shapes: expression, plan and codegen
+    * ids, AQE query-stage numbers (given in completion order, so they
+    * change between runs), JVM lambda names and file locations. */
+  private val planNoise = Seq(
+    "#\\d+" -> "#",
+    ",? ?\\[plan_id=\\d+\\]" -> "",
+    "\\*\\(\\d+\\)" -> "*",
+    "\\[codegen id : \\d+\\]" -> "[codegen id]",
+    "(QueryStage) \\d+" -> "$1",
+    "\\$Lambda[$/\\w]*(@[0-9a-f]+)?" -> "\\$Lambda",
+    "file:[^\\]\\s,]*" -> "file:")
+
+  private def normalisePlan(plan: String): String =
+    planNoise.foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
+
   private def loadavg(): Seq[Double] =
     try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
       .trim.split("\\s+").take(3).map(_.toDouble).toSeq
@@ -136,7 +152,8 @@ object Profile {
           case a: AdaptiveSparkPlanExec => a.executedPlan
           case p => p
         }
-        ListMap("plan_initial" -> initial, "plan_final" -> fin.treeString)
+        ListMap("plan_initial" -> normalisePlan(initial),
+          "plan_final" -> normalisePlan(fin.treeString))
       }
       (buildS, wallS, compiles, plans)
     } finally {

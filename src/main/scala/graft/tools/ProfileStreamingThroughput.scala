@@ -134,7 +134,7 @@ object ProfileStreamingThroughput {
     results("st16_window_bootstrap_ci") = harvest("st16", {
       val s = spark.readStream.schema(evSchema)
         .option("maxFilesPerTrigger", 1).parquet(evSrc)
-      Streams.windowBootstrapCi(s, watermark = true).writeStream
+      Streams.windowBootstrapCi(s).writeStream
         .format("memory").queryName("stp16").outputMode("append")
         .option("checkpointLocation", s"$root/cp16")
         .trigger(Trigger.AvailableNow()).start()
@@ -144,7 +144,7 @@ object ProfileStreamingThroughput {
     results("st15_window_quantiles") = harvest("st15", {
       val s = spark.readStream.schema(evSchema)
         .option("maxFilesPerTrigger", 1).parquet(evSrc)
-      Streams.windowQuantiles(s, watermark = true).writeStream
+      Streams.windowQuantiles(s).writeStream
         .format("memory").queryName("stp15").outputMode("append")
         .option("checkpointLocation", s"$root/cp15")
         .trigger(Trigger.AvailableNow()).start()

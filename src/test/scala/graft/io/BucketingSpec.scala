@@ -7,20 +7,18 @@ import graft.core.Tables
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    // the in-memory catalog forgets tables between JVMs but their
-    // warehouse directories persist — clear both before writing
-    for (t <- Seq("orders_b", "lineitem_b")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     // co-locate orders and lineitem on the order key
     Bucketing.writeBucketed(Tables.orders(spark, sf), "orders_b", "o_orderkey", 8)
     Bucketing.writeBucketed(Tables.lineitem(spark, sf), "lineitem_b", "l_orderkey", 8)
+    // the tables live in the JVM's own temporary warehouse, which is
+    // deleted at exit — never under the working directory
+    val warehouse = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    val loc = new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("orders_b"))
+      .location).toPath
+    assert(loc.startsWith(warehouse), s"$loc outside $warehouse")
+    assert(!loc.startsWith(java.nio.file.Paths.get("").toAbsolutePath), loc)
     val joined = Bucketing.table(spark, "lineitem_b")
       .join(Bucketing.table(spark, "orders_b"),
         col("l_orderkey") === col("o_orderkey"))

@@ -632,6 +632,28 @@ class DedupSpec extends SparkSpec {
     assert(added.isEmpty, s"pair generators leaked ${added.size} persistent RDDs")
   }
 
+  test("jaccard pair generators reject a threshold outside (0, 1] " +
+    "before running any job") {
+    import spark.implicits._
+    // every pair has Jaccard >= 0, so 0.0 would silently drop pairs; NaN
+    // matched nothing and 1.5 failed inside a job
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, "v w x y z"))
+      .toDF("doc_id", "text")
+    val frames = (for { v <- 0L until 2L; f <- 0 until 3 }
+      yield (v, f.toLong, Multimodal.patternPng(f))).toDF("media_id", "frame_idx", "frame_bytes")
+    val ops = Seq[(String, Double => Any)](
+      "ngramJaccardPairs" -> (t => Dedup.ngramJaccardPairs(docs, "text", "doc_id", 2, t)),
+      "videoNearDupPairs" -> (t => Multimodal.videoNearDupPairs(frames, threshold = t)))
+    val sc = spark.sparkContext
+    for ((op, run) <- ops; t <- Seq(0.0, 1.5, Double.NaN)) {
+      val group = s"jaccard-threshold-$op-$t"
+      sc.setJobGroup(group, group)
+      val e = try intercept[IllegalArgumentException](run(t)) finally sc.clearJobGroup()
+      assert(e.getMessage.contains(op) && e.getMessage.contains(t.toString), e.getMessage)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, s"$op($t) ran a job")
+    }
+  }
+
   test("jaccard pair-gen: fused small-input shape == window+ppjoin shape, " +
     "and the capped probe dispatches by occurrence count (r13 VERDICT #2)") {
     import spark.implicits._

@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
     assert(expected.nonEmpty, "fixture produced no within-1h pairs")
     val q = Streams.runFileStream(spark, eventsDir, batch.schema,
       df => Streams.intervalJoin(views(df), buys(df), "user_id", "ts",
-          gapSec = 3600, streaming = true)
+          gapSec = 3600)
         .select("l_event_id", "r_event_id"),
       "ij_sink", org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(120000)
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
     doubled.write.mode("overwrite").parquet(dir)
     val distinctIds = base.select("event_id").distinct().count()
     val q = Streams.runFileStream(spark, dir, doubled.schema,
-      Streams.dedupByKey(_, Seq("event_id"), streaming = true), "dedup_sink",
+      Streams.dedupByKey(_, Seq("event_id")), "dedup_sink",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(120000)
     val got = spark.table("dedup_sink")
@@ -176,8 +176,7 @@ class StreamingSpec extends SparkSpec {
           r.getDouble(5))).toMap
     val q = Streams.runFileStream(spark, eventsDir,
       Tables.events(spark, sf).schema,
-      Streams.windowHotKeys(_, "user_id", minEvents = 20,
-        watermark = true), "hotkeys_sink",
+      Streams.windowHotKeys(_, "user_id", minEvents = 20), "hotkeys_sink",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(180000)
     val got = spark.table("hotkeys_sink")
@@ -209,7 +208,7 @@ class StreamingSpec extends SparkSpec {
       .map { case (w, rs) => w -> rs.map(_.getDouble(1)).sorted }
     val q = Streams.runFileStream(spark, eventsDir,
       Tables.events(spark, sf).schema,
-      Streams.windowQuantiles(_, "value", probs, k = 16, watermark = true),
+      Streams.windowQuantiles(_, "value", probs, k = 16),
       "wq_sink", org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(180000)
     val got = spark.table("wq_sink").collect()
@@ -227,6 +226,25 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("windowQuantiles as a plain append-mode file stream equals batch " +
+    "on every finalized window") {
+    // no per-call switch: the transform sets its own watermark, which
+    // append-mode streaming aggregation requires. sf0.001 windows hold
+    // <= 6 events, below the sketch's k, so the estimates are exact
+    val events = Tables.events(spark, sf)
+    val batch = Streams.windowQuantiles(events).collect()
+    val q = Streams.runFileStream(spark, eventsDir, events.schema,
+      Streams.windowQuantiles(_), "wq_plain_sink",
+      org.apache.spark.sql.streaming.OutputMode.Append())
+    q.awaitTermination(180000)
+    val got = spark.table("wq_plain_sink").collect()
+    assert(got.nonEmpty, "no finalized windows emitted")
+    val horizon = got.map(_.getTimestamp(0)).maxBy(_.getTime)
+    val want = batch.filterNot(_.getTimestamp(0).after(horizon))
+    assert(got.map(_.toString).sorted.sameElements(want.map(_.toString).sorted),
+      s"stream ${got.length} rows vs batch ${want.length} up to $horizon")
+  }
+
   test("windowBootstrapCi: chained weighted-sketch CI streams in append " +
     "mode; b_eff matches batch, constant column is exact on a real stream") {
     import org.apache.spark.sql.functions._
@@ -235,7 +253,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
     val q = Streams.runFileStream(spark, eventsDir,
       Tables.events(spark, sf).schema,
-      Streams.windowBootstrapCi(_, b = 20, k = 16, watermark = true),
+      Streams.windowBootstrapCi(_, b = 20, k = 16),
       "wbci_sink", org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(180000)
     val got = spark.table("wbci_sink").collect()
@@ -254,7 +272,7 @@ class StreamingSpec extends SparkSpec {
     val dir2 = tempDir("wbci_const")
     const.write.mode("overwrite").parquet(dir2)
     val q2 = Streams.runFileStream(spark, dir2, const.schema,
-      Streams.windowBootstrapCi(_, b = 20, k = 16, watermark = true),
+      Streams.windowBootstrapCi(_, b = 20, k = 16),
       "wbci_const_sink", org.apache.spark.sql.streaming.OutputMode.Append())
     q2.awaitTermination(180000)
     val gc = spark.table("wbci_const_sink").collect()
@@ -289,7 +307,7 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val q = Streams.windowQuantiles(
         spark.readStream.schema(ev.schema).parquet(srcDir),
-        "value", Seq(0.5, 0.95), k = 16, watermark = true)
+        "value", Seq(0.5, 0.95), k = 16)
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", cpDir)
         .outputMode("append")
@@ -341,7 +359,7 @@ class StreamingSpec extends SparkSpec {
       .toMap
     val q = Streams.runFileStream(spark, eventsDir,
       Tables.events(spark, sf).schema,
-      Streams.windowDrift(_, ref, watermark = true), "drift_sink",
+      Streams.windowDrift(_, ref), "drift_sink",
       org.apache.spark.sql.streaming.OutputMode.Append())
     q.awaitTermination(180000)
     val got = spark.table("drift_sink")

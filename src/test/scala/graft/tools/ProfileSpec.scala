@@ -5,7 +5,8 @@ import graft.SparkSpec
 /** The run ledger reads Spark's own counters of a query's job group only
   * after draining the listener bus. t31_bm25 probes its vocabulary size
   * with a job while its DataFrame is built. The session's codegen cache
-  * holds every class of a pass, so a re-run compiles nothing. */
+  * holds every class of a pass, so a re-run compiles nothing. `--plan`
+  * plans are normalised, so two runs print the same plan. */
 class ProfileSpec extends SparkSpec {
   private val query = "t31_bm25"
   private lazy val first = Profile.record(spark, sf, query, "first", Set("ops"))
@@ -28,6 +29,14 @@ class ProfileSpec extends SparkSpec {
   test("back-to-back records report identical job, stage and task counts") {
     for (key <- Seq("jobs", "stages", "tasks"))
       assert(count(first, key) == count(second, key), s"$key: $first vs $second")
+  }
+
+  test("--plan records of two runs print equal plans") {
+    // expression ids, plan ids and codegen ids differ between the runs;
+    // the printed plans must not
+    val Seq(a, b) = Seq("plan1", "plan2").map(Profile.record(spark, sf, query, _, Set("plan")))
+    for (key <- Seq("plan_initial", "plan_final"))
+      assert(a(key) == b(key), s"$key:\n${a(key)}\nvs\n${b(key)}")
   }
 
   test("a re-run compiles no class after more than 100 others compiled") {
