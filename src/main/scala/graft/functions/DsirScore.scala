@@ -35,12 +35,11 @@ case class DsirScore(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "dsir_score"
 
   protected override def nullSafeEval(text: Any, lut: Any): Any =
-    DsirScore.score(text.asInstanceOf[UTF8String].toString,
-      lut.asInstanceOf[ArrayData])
+    DsirScore.score(text.asInstanceOf[UTF8String], lut.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      (t, l) => s"graft.functions.DsirScore.score($t.toString(), $l)")
+      (t, l) => s"graft.functions.DsirScore.score($t, $l)")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): DsirScore =
@@ -49,13 +48,17 @@ case class DsirScore(left: Expression, right: Expression) extends BinaryExpressi
 
 object DsirScore {
 
-  /** Same tokenization as `Dsir.featureRows`: lowercased whitespace
-    * tokens of the trimmed text (empty tokens skipped), plus "v w"
-    * adjacent-pair bigrams when there are >= 2 tokens. */
-  def score(text: String, lut: ArrayData): Double = {
+  /** Same tokenization as `Dsir.featureRows`: whitespace tokens of the
+    * lowercased, space-trimmed text (empty tokens skipped), plus "v w"
+    * adjacent-pair bigrams when there are >= 2 tokens. Lowercase and
+    * trim are Spark's own (`UTF8String.trim` strips spaces only) and the
+    * split keeps trailing empty tokens, as Spark's `split` does: Java's
+    * `String.trim` would also strip tabs and newlines, so a doc edged
+    * by one would lose the bigrams `featureRows` counts there. */
+  def score(text: UTF8String, lut: ArrayData): Double = {
     val b = lut.numElements()
     if (b == 0) return 0.0
-    val toks = text.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+    val toks = text.toLowerCase().trim().toString.split("\\s+", -1)
     var s = 0.0
     var i = 0
     while (i < toks.length) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ml.Models.{Task, Classification, Regression}
+import graft.core.Concurrent.inParallel
 
 /** Cross-validation, random hyperparameter search, learning curves
   * (SURVEY §2.7 M7-M11).
@@ -15,24 +16,6 @@ import graft.ml.Models.{Task, Classification, Regression}
   * API MLlib's CrossValidator hides (`cross_validation_optuna_logic.py:89-114`).
   */
 object Validation {
-
-  /** Run independent seeded fit/score closures as CONCURRENT Spark
-    * jobs. MLlib fits spend much of their wall in serial driver phases
-    * (tree induction bookkeeping, L-BFGS steps), so sequential fold/
-    * trial loops leave the cluster mostly idle; submitted together the
-    * data-parallel stages interleave. Determinism is untouched: every
-    * closure carries its own seed and inputs, nothing shared mutates,
-    * and results return in input order. */
-  private def inParallel[A](xs: Seq[() => A]): Seq[A] = {
-    import scala.concurrent.{blocking, Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // blocking{}: nested uses (search trials -> CV folds) await from
-    // INSIDE pool threads; the marker lets the global pool grow instead
-    // of starving when every thread is parked on an inner Await
-    val fs = xs.map(f => Future(f()))
-    blocking { Await.result(Future.sequence(fs), Duration.Inf) }
-  }
 
   /** Stratified fold assignment: per-class rank over `orderCols` mod k.
     * With orderCols empty the order is seeded-random. The rank comes

@@ -233,14 +233,11 @@ object Balancing {
       val minCount = counts.values.min
       // One seeded k-means per over-represented class, independent fits
       // with long serial driver phases — submitted as CONCURRENT Spark
-      // jobs (same pattern as Validation.inParallel / Pq.train) so the
-      // Lloyd iterations of the classes interleave. Deterministic:
-      // per-class inputs, shared fixed seed, results ordered by class.
-      import scala.concurrent.{blocking, Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val futureParts = counts.toSeq.sortBy(_._1.toString).map { case (cls, n) =>
-        Future {
+      // jobs (graft.core.Concurrent) so the Lloyd iterations of the
+      // classes interleave. Deterministic: per-class inputs, shared
+      // fixed seed, results ordered by class.
+      val parts = graft.core.Concurrent.inParallel(
+        counts.toSeq.sortBy(_._1.toString).map { case (cls, n) => () =>
           val sub = df.filter(col(target) <=> lit(cls))
           if (n <= minCount) sub.select((features.map(c => col(c).cast("double").as(c)) :+
             col(target)): _*)
@@ -256,9 +253,7 @@ object Balancing {
             df.sparkSession.createDataFrame(
               df.sparkSession.sparkContext.parallelize(rows, 1), schema)
           }
-        }
-      }
-      val parts = blocking { Await.result(Future.sequence(futureParts), Duration.Inf) }
+        })
       parts.reduce(_ unionByName _)
     }
   }

@@ -61,18 +61,13 @@ object Pq {
     require(dim % m == 0, s"pq: dim $dim not divisible into $m subspaces")
     val dsub = dim / m
     val cents = new Array[Double](m * k * dsub)
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence((0 until m).map { s => Future {
-        val pts = rows.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-        val cs = lloydLocal(pts, k, seed + s)
-        cs.zipWithIndex.foreach { case (cent, c) =>
-          System.arraycopy(cent, 0, cents, (s * k + c) * dsub, dsub)
-        }
-      } }), Duration.Inf)
-    }
+    graft.core.Concurrent.inParallel((0 until m).map { s => () =>
+      val pts = rows.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
+      val cs = lloydLocal(pts, k, seed + s)
+      cs.zipWithIndex.foreach { case (cent, c) =>
+        System.arraycopy(cent, 0, cents, (s * k + c) * dsub, dsub)
+      }
+    })
     Codebooks(m, k, dim, cents)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Concurrent.inParallel
 
 /** SMOTE family (SURVEY §2.4 B2, B5, B7-B10;
   * reference `data_balancing_list_method_logic.py:9-124`).
@@ -25,20 +26,6 @@ object Smote {
   /** Drop all internal __-prefixed working columns. */
   private def dropInternal(df: DataFrame): DataFrame =
     df.drop(df.columns.filter(_.startsWith("__")).toSeq: _*)
-
-  /** Run independent per-class branches concurrently (r14; the
-    * Validation.inParallel pattern): each branch's eager work — the
-    * quota/weight materializations, counts, global-rank offset collects —
-    * otherwise serializes on the driver while executors idle. Closures
-    * are seeded and self-contained, results return in input order, so
-    * output is bit-identical to the sequential loop. */
-  private def inParallel[A](xs: Seq[() => A]): Seq[A] = {
-    import scala.concurrent.{blocking, Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = xs.map(f => Future(blocking(f())))
-    Await.result(Future.sequence(fs), Duration.Inf)
-  }
 
   /** Core synthesis: for each row of `minority` (id, features), emit
     * `quota(id)` synthetic rows interpolated toward a deterministic

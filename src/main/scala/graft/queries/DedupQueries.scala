@@ -49,23 +49,11 @@ object DedupQueries {
     """SELECT doc_id, text FROM documents
        UNION ALL SELECT doc_id + 10000, text || ' extra token' FROM documents WHERE doc_id < 50"""
 
-  /** Exact n-gram Jaccard pairs oracle (shared by d2 and d3). Docs with
-    * < n tokens (incl. empty docs, whose token list is ['']) contribute
-    * their whole whitespace-normalized text as ONE shingle — the same
-    * short-doc branch `Dedup.shingleRows` takes. */
+  /** Exact n-gram Jaccard pairs oracle (shared by d2 and d3) over the
+    * [[Q.shingleSetSql]] shingle sets. */
   private def jaccardOracle(corpusSql: String, n: Int, threshold: Double): String = s"""
     WITH corpus AS ($corpusSql),
-    sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\\s+')) - ${n - 1}),
-             i -> list_reduce(list_transform(range(i, i + $n),
-                    j -> (string_split_regex(trim(text), '\\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM corpus
-           WHERE len(string_split_regex(trim(text), '\\s+')) >= $n
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\\s+', ' ', 'g') AS sh
-           FROM corpus
-           WHERE len(string_split_regex(trim(text), '\\s+')) < $n),
+    sh AS (${Q.shingleSetSql("doc_id", "corpus", n)}),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
     pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
               FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -76,6 +64,85 @@ object DedupQueries {
     JOIN sizes na ON na.doc_id = id_a
     JOIN sizes nb ON nb.doc_id = id_b
     WHERE CAST(common AS DOUBLE) / (na.n_sh + nb.n_sh - common) >= $threshold"""
+
+  /** d7's exact decontamination: a doc goes when at least 80% of its
+    * [[Q.shingleSetSql]] 3-shingles occur in the benchmark docs
+    * (doc_id < 30). */
+  private val decontaminateOracle: String = s"""
+      WITH sh AS (${Q.shingleSetSql("doc_id", "documents", 3)}),
+      bs AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 30),
+      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+      hits AS (SELECT s.doc_id, count(*) AS h FROM sh s JOIN bs USING (sh) GROUP BY 1),
+      bad AS (SELECT sizes.doc_id FROM sizes JOIN hits USING (doc_id)
+              WHERE h >= n_sh * 0.8)
+      SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM bad)"""
+
+  /** d6's duplicate components over the d2 pairs: [[Q.reachSql]] plus
+    * `comp`, each paired doc's component label. */
+  private val nearComponentsSql: String = s"""
+      pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
+      ${Q.reachSql("pairs")},
+      comp AS (SELECT n.id AS doc_id, ${Q.ComponentSql} AS component
+               FROM nodes n)"""
+
+  /** The split router's 60-bit md5 prefix of "<id>:42". */
+  private def groupHashSql(id: String): String =
+    s"CAST(('0x' || substring(md5(CAST($id AS VARCHAR) || ':42'), 1, 15)) AS BIGINT)"
+
+  /** 30% test / 70% train by [[groupHashSql]] mod 1000. */
+  private def splitSql(id: String): String =
+    s"CASE WHEN ${groupHashSql(id)} % 1000 < 300 THEN 'test' ELSE 'train' END"
+
+  /** d10's duplicated-span islands: every 10-token shingle `sh` with its
+    * position, those occurring at least twice anywhere (`dup`), and
+    * their positions grouped into islands `g` that merge at a gap of at
+    * most 10 (`grp`). */
+  private val dupIslandsSql: String = """
+      tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+      sh AS (SELECT doc_id, unnest(list_transform(range(len(t) - 9), i ->
+               {'pos': i, 'sh': list_reduce(list_transform(range(i, i + 10), j -> t[j + 1]),
+                                            (a, b) -> a || ' ' || b)})) AS u
+             FROM tok WHERE len(t) >= 10),
+      pos AS (SELECT doc_id, u.pos AS pos, u.sh AS sh FROM sh),
+      dup AS (SELECT sh FROM pos GROUP BY sh HAVING count(*) >= 2),
+      hits AS (SELECT doc_id, pos FROM pos JOIN dup USING (sh)),
+      isl AS (SELECT doc_id, pos,
+                CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 10
+                     THEN 1 ELSE 0 END AS brk
+              FROM hits),
+      grp AS (SELECT doc_id, pos,
+                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
+              FROM isl)"""
+
+  /** Replays Similarity.{lcgComponent,signSketchDf,ivfTopK} exactly
+    * over the vectors `c` (vec_id, v): plane weights from the seeded LCG,
+    * sign-bit buckets, and for the queries `q` (vec_id < n) their own +
+    * Hamming-1 probe buckets and the exact top-10 re-rank `top`. */
+  private def ivfTopKSql(q: String, n: Int, top: String): String = s"""
+      dims AS (SELECT unnest(range(64)) AS pos),
+      planes AS (SELECT unnest(range(6)) AS i),
+      comp AS (SELECT i, pos,
+                 ((((1103515245 * (i * 1000003 + pos + 42) + 12345) % 2147483647)
+                   % 2000001) - 1000000) / 1000000.0 AS w
+               FROM planes, dims),
+      dots AS (SELECT c.vec_id, comp.i, sum(c.v[comp.pos + 1] * comp.w) AS d
+               FROM c, comp GROUP BY 1, 2),
+      buck AS (SELECT vec_id, sum(CASE WHEN d > 0 THEN (1 << i) ELSE 0 END) AS bucket
+               FROM dots GROUP BY 1),
+      $q AS (SELECT c.vec_id AS query_id, c.v AS qv, buck.bucket AS qbucket
+            FROM c JOIN buck USING (vec_id) WHERE vec_id < $n),
+      probes AS (SELECT query_id, qv, qbucket AS bucket FROM $q
+                 UNION ALL
+                 SELECT query_id, qv, xor(qbucket, (1 << i)) FROM $q, planes),
+      cand AS (SELECT p.query_id, cb.vec_id AS corpus_id, p.qv, c2.v AS cv
+               FROM probes p
+               JOIN buck cb ON cb.bucket = p.bucket
+               JOIN c c2 ON c2.vec_id = cb.vec_id
+               WHERE cb.vec_id <> p.query_id),
+      scored AS (SELECT query_id, corpus_id, ${cosSql("qv", "cv")} AS cosine FROM cand),
+      $top AS (SELECT query_id, corpus_id FROM scored
+               QUALIFY row_number() OVER (PARTITION BY query_id
+                 ORDER BY cosine DESC, corpus_id) <= 10)"""
 
   val queries: Map[String, QueryFn] = Map(
     "d1_exact_dedup" -> ((s, dir) =>
@@ -833,139 +900,54 @@ object DedupQueries {
                || doc_id AS canonical_url
       FROM documents""",
 
-    "d7_decontaminate" -> """
-      WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
-      bs AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 30),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-      hits AS (SELECT s.doc_id, count(*) AS h FROM sh s JOIN bs USING (sh) GROUP BY 1),
-      bad AS (SELECT sizes.doc_id FROM sizes JOIN hits USING (doc_id)
-              WHERE h >= n_sh * 0.8)
-      SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM bad)""",
+    "d7_decontaminate" -> decontaminateOracle,
 
     // d15 = the map-only/streaming shape; must equal d7 exactly (bloom
     // FPs over-drop in principle, none fire on this corpus — checked at
     // both SFs)
-    "d15_decontaminate_maponly" -> """
-      WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
-      bs AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 30),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-      hits AS (SELECT s.doc_id, count(*) AS h FROM sh s JOIN bs USING (sh) GROUP BY 1),
-      bad AS (SELECT sizes.doc_id FROM sizes JOIN hits USING (doc_id)
-              WHERE h >= n_sh * 0.8)
-      SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM bad)""",
+    "d15_decontaminate_maponly" -> decontaminateOracle,
 
     // duplicated = shingle occurs >= 2 times anywhere; islands merge at
     // gap <= minTokens; grouping by the raw shingle string is equivalent
     // to the engine's 60-bit hash grouping (collisions negligible, as d2)
-    "d10_dup_spans" -> """
-      WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-      sh AS (SELECT doc_id, unnest(list_transform(range(len(t) - 9), i ->
-               {'pos': i, 'sh': list_reduce(list_transform(range(i, i + 10), j -> t[j + 1]),
-                                            (a, b) -> a || ' ' || b)})) AS u
-             FROM tok WHERE len(t) >= 10),
-      pos AS (SELECT doc_id, u.pos AS pos, u.sh AS sh FROM sh),
-      dup AS (SELECT sh FROM pos GROUP BY sh HAVING count(*) >= 2),
-      hits AS (SELECT doc_id, pos FROM pos JOIN dup USING (sh)),
-      isl AS (SELECT doc_id, pos,
-                CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 10
-                     THEN 1 ELSE 0 END AS brk
-              FROM hits),
-      grp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-              FROM isl)
+    "d10_dup_spans" -> s"""
+      WITH $dupIslandsSql
       SELECT doc_id, min(pos) AS span_start, max(pos) + 9 AS span_end
       FROM grp GROUP BY doc_id, g""",
 
     // component labels as in d6, then the same md5 split arithmetic the
     // Spark side computes: group = component (own id when unpaired)
     "b17_group_split" -> s"""
-      WITH RECURSIVE pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges),
-      comp AS (SELECT n.id AS doc_id,
-                 least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id)) AS component
-               FROM nodes n),
+      WITH RECURSIVE $nearComponentsSql,
       corpus AS ($NearCorpusSql),
       grp AS (SELECT c.doc_id, coalesce(comp.component, c.doc_id) AS g
               FROM corpus c LEFT JOIN comp USING (doc_id))
       SELECT doc_id,
-             CASE WHEN CAST(('0x' || substring(md5(CAST(g AS VARCHAR) || ':42'), 1, 15)) AS BIGINT)
-                       % 1000 < 300
-                  THEN 'test' ELSE 'train' END AS split
+             ${splitSql("g")} AS split
       FROM grp""",
 
     // b17's component replay with fold = md5(component:seed) mod 5
     "b20_group_kfold" -> s"""
-      WITH RECURSIVE pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges),
-      comp AS (SELECT n.id AS doc_id,
-                 least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id)) AS component
-               FROM nodes n),
+      WITH RECURSIVE $nearComponentsSql,
       corpus AS ($NearCorpusSql),
       grp AS (SELECT c.doc_id, coalesce(comp.component, c.doc_id) AS g
               FROM corpus c LEFT JOIN comp USING (doc_id))
       SELECT doc_id,
-             CAST(('0x' || substring(md5(CAST(g AS VARCHAR) || ':42'), 1, 15)) AS BIGINT)
-               % 5 AS fold
+             ${groupHashSql("g")} % 5 AS fold
       FROM grp""",
 
     // replay both routers (group hash vs raw-id hash) and count pairs
     // whose ends land on different sides
     "b18_split_leakage_audit" -> s"""
-      WITH RECURSIVE pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges),
-      comp AS (SELECT n.id AS doc_id,
-                 least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id)) AS component
-               FROM nodes n),
+      WITH RECURSIVE $nearComponentsSql,
       corpus AS ($NearCorpusSql),
       grp AS (SELECT c.doc_id, coalesce(comp.component, c.doc_id) AS g
               FROM corpus c LEFT JOIN comp USING (doc_id)),
       safe AS (SELECT doc_id,
-                 CASE WHEN CAST(('0x' || substring(md5(CAST(g AS VARCHAR) || ':42'), 1, 15)) AS BIGINT)
-                           % 1000 < 300
-                      THEN 'test' ELSE 'train' END AS split
+                 ${splitSql("g")} AS split
                FROM grp),
       naive AS (SELECT doc_id,
-                  CASE WHEN CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 15)) AS BIGINT)
-                            % 1000 < 300
-                       THEN 'test' ELSE 'train' END AS split
+                  ${splitSql("doc_id")} AS split
                 FROM corpus)
       SELECT 'group' AS mode,
              (SELECT count(*) FROM pairs p
@@ -989,22 +971,8 @@ object DedupQueries {
       WHERE id_a >= 20000 OR id_b >= 20000""",
 
     // d10's islands, then tokens outside every island rejoin in order
-    "d14_cut_spans" -> """
-      WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-      sh AS (SELECT doc_id, unnest(list_transform(range(len(t) - 9), i ->
-               {'pos': i, 'sh': list_reduce(list_transform(range(i, i + 10), j -> t[j + 1]),
-                                            (a, b) -> a || ' ' || b)})) AS u
-             FROM tok WHERE len(t) >= 10),
-      pos AS (SELECT doc_id, u.pos AS pos, u.sh AS sh FROM sh),
-      dup AS (SELECT sh FROM pos GROUP BY sh HAVING count(*) >= 2),
-      hits AS (SELECT doc_id, pos FROM pos JOIN dup USING (sh)),
-      isl AS (SELECT doc_id, pos,
-                CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 10
-                     THEN 1 ELSE 0 END AS brk
-              FROM hits),
-      grp AS (SELECT doc_id, pos,
-                sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-              FROM isl),
+    "d14_cut_spans" -> s"""
+      WITH $dupIslandsSql,
       spans AS (SELECT doc_id, min(pos) AS s, max(pos) + 9 AS e
                 FROM grp GROUP BY doc_id, g),
       tp AS (SELECT doc_id, u.p AS p, u.w AS w FROM (
@@ -1119,18 +1087,8 @@ object DedupQueries {
 
     // per-source distinct shingle vocabularies (short-doc branch
     // included), pairwise intersection + Jaccard
-    "d18_source_overlap" -> """
-      WITH base AS (SELECT source, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT source, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
+    "d18_source_overlap" -> s"""
+      WITH base AS (${Q.shingleSetSql("source", "documents", 3)}),
       sh0 AS (SELECT DISTINCT source, sh FROM base),
       sizes AS (SELECT source, count(*) AS n FROM sh0 GROUP BY 1),
       prs AS (SELECT a.source AS source_a, b.source AS source_b,
@@ -1179,18 +1137,8 @@ object DedupQueries {
       FROM win GROUP BY doc_id""",
 
     // per-(doc, suite) overlap fractions; suite shingle sets distinct
-    "d12_contamination_report" -> """
-      WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
+    "d12_contamination_report" -> s"""
+      WITH sh AS (${Q.shingleSetSql("doc_id", "documents", 3)}),
       suites AS (SELECT 'suiteA' AS suite, sh FROM sh WHERE doc_id < 15
                  UNION
                  SELECT 'suiteB', sh FROM sh WHERE doc_id >= 10 AND doc_id < 30),
@@ -1202,56 +1150,21 @@ object DedupQueries {
       WHERE CAST(h AS DOUBLE) / n_sh >= 0.5""",
 
     // the bloom path is a pure shuffle prune — exact same semantics as d7
-    "d8_decontaminate_bloom" -> """
-      WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
-      bs AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 30),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-      hits AS (SELECT s.doc_id, count(*) AS h FROM sh s JOIN bs USING (sh) GROUP BY 1),
-      bad AS (SELECT sizes.doc_id FROM sizes JOIN hits USING (doc_id)
-              WHERE h >= n_sh * 0.8)
-      SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM bad)""",
+    "d8_decontaminate_bloom" -> decontaminateOracle,
 
     // transitive closure over the d2 pair list: each node's component is
     // the min id it can reach (recursive CTE = the label-propagation
     // fixpoint the Spark op iterates to)
     "d6_dup_components" -> s"""
       WITH RECURSIVE pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges)
-      SELECT n.id AS doc_id,
-             least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id)) AS component
+      ${Q.reachSql("pairs")}
+      SELECT n.id AS doc_id, ${Q.ComponentSql} AS component
       FROM nodes n""",
 
     // d16: d6's recursive components + argmax-by-(len, -id) winner per
     // cluster; pair-free docs pass through untouched
     "d16_keep_best" -> s"""
-      WITH RECURSIVE pairs AS (${jaccardOracle(NearCorpusSql, 3, 0.7)}),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, dst AS r FROM edges
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges),
-      comp AS (SELECT n.id AS doc_id,
-                 least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id))
-                   AS component
-               FROM nodes n),
+      WITH RECURSIVE $nearComponentsSql,
       corpus2 AS ($NearCorpusSql)
       SELECT doc_id FROM corpus2
       WHERE doc_id NOT IN (SELECT doc_id FROM comp)
@@ -1272,35 +1185,10 @@ object DedupQueries {
       FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
       WHERE ${cosSql("a.v", "b.v")} >= 0.99""",
 
-    // replays Similarity.{lcgComponent,signSketchDf,ivfTopK} exactly:
-    // plane weights from the seeded LCG, sign-bit buckets, own +
-    // Hamming-1 probe buckets, exact top-10 re-rank, hit counts
+    // hit counts of the IVF top-10 (ivfTopKSql)
     "s2_ann_ivf" -> s"""
       WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      dims AS (SELECT unnest(range(64)) AS pos),
-      planes AS (SELECT unnest(range(6)) AS i),
-      comp AS (SELECT i, pos,
-                 ((((1103515245 * (i * 1000003 + pos + 42) + 12345) % 2147483647)
-                   % 2000001) - 1000000) / 1000000.0 AS w
-               FROM planes, dims),
-      dots AS (SELECT c.vec_id, comp.i, sum(c.v[comp.pos + 1] * comp.w) AS d
-               FROM c, comp GROUP BY 1, 2),
-      buck AS (SELECT vec_id, sum(CASE WHEN d > 0 THEN (1 << i) ELSE 0 END) AS bucket
-               FROM dots GROUP BY 1),
-      q AS (SELECT c.vec_id AS query_id, c.v AS qv, buck.bucket AS qbucket
-            FROM c JOIN buck USING (vec_id) WHERE vec_id < 5),
-      probes AS (SELECT query_id, qv, qbucket AS bucket FROM q
-                 UNION ALL
-                 SELECT query_id, qv, xor(qbucket, (1 << i)) FROM q, planes),
-      cand AS (SELECT p.query_id, cb.vec_id AS corpus_id, p.qv, c2.v AS cv
-               FROM probes p
-               JOIN buck cb ON cb.bucket = p.bucket
-               JOIN c c2 ON c2.vec_id = cb.vec_id
-               WHERE cb.vec_id <> p.query_id),
-      scored AS (SELECT query_id, corpus_id, ${cosSql("qv", "cv")} AS cosine FROM cand),
-      topk AS (SELECT query_id, corpus_id FROM scored
-               QUALIFY row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, corpus_id) <= 10)
+      ${ivfTopKSql("q", 5, "topk")}
       SELECT query_id, count(*) AS n_hits FROM topk GROUP BY 1""",
 
     "s1_ann_topk" -> s"""
@@ -1328,30 +1216,7 @@ object DedupQueries {
       ex AS (SELECT query_id, corpus_id FROM sc1
              QUALIFY row_number() OVER (PARTITION BY query_id
                ORDER BY cosine DESC, corpus_id) <= 10),
-      dims AS (SELECT unnest(range(64)) AS pos),
-      planes AS (SELECT unnest(range(6)) AS i),
-      comp AS (SELECT i, pos,
-                 ((((1103515245 * (i * 1000003 + pos + 42) + 12345) % 2147483647)
-                   % 2000001) - 1000000) / 1000000.0 AS w
-               FROM planes, dims),
-      dots AS (SELECT c.vec_id, comp.i, sum(c.v[comp.pos + 1] * comp.w) AS d
-               FROM c, comp GROUP BY 1, 2),
-      buck AS (SELECT vec_id, sum(CASE WHEN d > 0 THEN (1 << i) ELSE 0 END) AS bucket
-               FROM dots GROUP BY 1),
-      q2 AS (SELECT c.vec_id AS query_id, c.v AS qv, buck.bucket AS qbucket
-             FROM c JOIN buck USING (vec_id) WHERE vec_id < 20),
-      probes AS (SELECT query_id, qv, qbucket AS bucket FROM q2
-                 UNION ALL
-                 SELECT query_id, qv, xor(qbucket, (1 << i)) FROM q2, planes),
-      cand AS (SELECT p.query_id, cb.vec_id AS corpus_id, p.qv, c2.v AS cv
-               FROM probes p
-               JOIN buck cb ON cb.bucket = p.bucket
-               JOIN c c2 ON c2.vec_id = cb.vec_id
-               WHERE cb.vec_id <> p.query_id),
-      scored AS (SELECT query_id, corpus_id, ${cosSql("qv", "cv")} AS cosine FROM cand),
-      tk AS (SELECT query_id, corpus_id FROM scored
-             QUALIFY row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, corpus_id) <= 10),
+      ${ivfTopKSql("q2", 20, "tk")},
       co AS (SELECT ex.query_id, count(*) AS nc
              FROM ex JOIN tk USING (query_id, corpus_id) GROUP BY 1)
       SELECT qq.vec_id AS query_id,

@@ -80,15 +80,9 @@ object JoinQueries {
       // gate: both fact tables written bucketed by the join key, then a
       // join that plans with NO shuffle exchange on either side
       // (BucketingSpec pins the plan; this query oracles the content).
-      // The warehouse is private to the JVM (Sessions.local); each run
-      // drops the session's previous copies, and a per-run tag keeps
-      // concurrent runs in one session from colliding
-      val pre = "q16_"
-      s.catalog.listTables().collect().map(_.name)
-        .filter(t => t.startsWith(s"orders_$pre") || t.startsWith(s"lineitem_$pre"))
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val (to, tl) = (s"orders_$pre$tag", s"lineitem_$pre$tag")
+      // The warehouse is private to the JVM (Sessions.local), and each
+      // run overwrites the same two tables, so every run plans the same
+      val (to, tl) = ("orders_q16", "lineitem_q16")
       graft.io.Bucketing.writeBucketed(Tables.orders(s, dir), to, "o_orderkey", 8)
       graft.io.Bucketing.writeBucketed(Tables.lineitem(s, dir), tl, "l_orderkey", 8)
       graft.io.Bucketing.table(s, tl)

@@ -553,6 +553,115 @@ object MiscQueries {
     "WITH " + ctes + selects
   }
 
+  /** a21's contingency table of event type a against value band b
+    * (`cells`, counts o) and its row and column totals `ra`/`rb`. */
+  private val typeValueCellsSql = """
+      cells AS (
+        SELECT event_type AS a,
+               CASE WHEN value >= 100 THEN 'hi' ELSE 'lo' END AS b,
+               count(*) AS o
+        FROM events GROUP BY 1, 2),
+      ra AS (SELECT a, sum(o) AS rt FROM cells GROUP BY 1),
+      rb AS (SELECT b, sum(o) AS ct FROM cells GROUP BY 1)"""
+
+  /** a28's value groups `g`: per value v, its click (na) and view (nb)
+    * counts. */
+  private val clickViewSql = """
+      g AS (
+        SELECT value AS v,
+               count(CASE WHEN event_type = 'click' THEN 1 END) AS na,
+               count(CASE WHEN event_type = 'view' THEN 1 END) AS nb
+        FROM events
+        WHERE event_type IN ('click', 'view') AND value IS NOT NULL
+        GROUP BY 1)"""
+
+  /** a31's one-way ANOVA F over the groups `g` of `from`: per-group
+    * integer-thousandths sums of x and x^2 (`per`), s1^2/n rounded to 9
+    * and DECIMAL-summed (`tot`), the F tree token-identical. */
+  private def anovaFSql(g: String, x: String, from: String): String = s"""
+      per AS (
+        SELECT $g, count(*) AS ng,
+               sum(CAST(round($x * 1000, 0) AS DECIMAL(19,0))) AS s1,
+               sum(CAST(round($x * 1000, 0) AS DECIMAL(19,0))
+                   * CAST(round($x * 1000, 0) AS DECIMAL(19,0))) AS s2
+        FROM $from GROUP BY 1),
+      tot AS (
+        SELECT CAST(sum(ng) AS DOUBLE) AS n,
+               CAST(count(*) AS DOUBLE) AS k,
+               CAST(sum(s1) AS DOUBLE) AS t1,
+               CAST(sum(s2) AS DOUBLE) AS t2,
+               CAST(sum(CAST(round((CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
+                                   / CAST(ng AS DOUBLE), 9)
+                             AS DECIMAL(38,9))) AS DOUBLE) AS b
+        FROM per)
+      SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
+             round((b - ((t1 * t1) / n)) / 1000000.0, 6) AS ss_between,
+             round((t2 - b) / 1000000.0, 6) AS ss_within,
+             round(((b - ((t1 * t1) / n)) / (k - 1.0))
+                   / ((t2 - b) / (n - k)), 6) AS f_stat
+      FROM tot"""
+
+  /** a34's risk sets in exact epoch micros: each user's lifetime t and
+    * event flag (censored when last seen within a day of the data's
+    * edge), and per distinct t the events d and the at-risk count
+    * n_risk (`r`). */
+  private val riskSetSql = """
+      pe AS (
+        SELECT user_id, min(epoch_us(ts)) AS f, max(epoch_us(ts)) AS l
+        FROM events GROUP BY 1),
+      e AS (SELECT max(epoch_us(ts)) AS edge FROM events),
+      lv AS (
+        SELECT (l - f) AS t,
+               CASE WHEN l <= e.edge - 86400000000 THEN 1 ELSE 0 END AS ev
+        FROM pe CROSS JOIN e),
+      tm AS (SELECT t, count(*) AS alln, sum(ev) AS d FROM lv GROUP BY 1),
+      n AS (SELECT count(*) AS nn FROM lv),
+      c AS (
+        SELECT t, alln, d, sum(alln) OVER (ORDER BY t) AS ca
+        FROM tm),
+      r AS (
+        SELECT t, alln, d, (n.nn - (ca - alln)) AS n_risk
+        FROM c CROSS JOIN n)"""
+
+  /** a45's Benjamini-Hochberg test over 20 segments of `from`: each
+    * segment's two-proportion z against the pooled click rate (NULL when
+    * the pool is all or no clicks), the A&S normal-CDF Horner tree
+    * token-identical, ranks by (p, segment), BH k* as a conditional
+    * max. */
+  private def bhFdrSql(from: String): String = s"""
+      WITH per AS (
+        SELECT event_id % 20 AS segment, count(*) AS n,
+               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
+        FROM $from GROUP BY 1),
+      g AS (SELECT sum(n) AS gn, sum(n_pos) AS gx, count(*) AS m FROM per),
+      zc AS (SELECT per.segment, per.n, per.n_pos, g.m,
+               CASE WHEN g.gx = 0 OR g.gx = g.gn THEN NULL ELSE
+               ((CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
+                - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE)))
+               / sqrt(((CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))
+                       * (1.0 - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))))
+                      / CAST(n AS DOUBLE)) END AS z
+             FROM per CROSS JOIN g),
+      pc AS (SELECT segment, n, n_pos, m, z,
+               (1.0 / (1.0 + (0.2316419 * abs(z)))) AS t,
+               (exp((-(abs(z) * abs(z))) / 2.0) * 0.3989422804014327) AS pd
+             FROM zc),
+      pv AS (SELECT segment, n, n_pos, m, z,
+               2.0 * (pd * (t * (0.319381530 + (t * (-0.356563782
+                 + (t * (1.781477937 + (t * (-1.821255978
+                 + (t * 1.330274429)))))))))) AS p
+             FROM pc),
+      rk AS (SELECT *, CAST(row_number() OVER (ORDER BY p, segment)
+                            AS BIGINT) AS p_rank FROM pv),
+      ks AS (SELECT max(CASE WHEN p <= ((CAST(p_rank AS DOUBLE) * 0.1)
+                                        / CAST(m AS DOUBLE))
+                             THEN p_rank END) AS k FROM rk)
+      SELECT segment, n, n_pos,
+             round(z, 6) AS z, round(p, 6) AS p_value, p_rank,
+             CASE WHEN p IS NULL THEN NULL
+                  ELSE coalesce(p_rank <= ks.k, false) END AS rejected
+      FROM rk CROSS JOIN ks"""
+
   val oracles: Map[String, String] = Map(
     "a36_psi_panel" -> psiPanelSql,
     // earliest-anchored windowFunnel replay: per-step min epoch-us
@@ -691,14 +800,8 @@ object MiscQueries {
 
     // a21: contingency cells -> marginals -> (o-e)^2/e, each term
     // rounded to 9 and summed in DECIMAL (order-free)
-    "a21_chi2" -> """
-      WITH cells AS (
-        SELECT event_type AS a,
-               CASE WHEN value >= 100 THEN 'hi' ELSE 'lo' END AS b,
-               count(*) AS o
-        FROM events GROUP BY 1, 2),
-      ra AS (SELECT a, sum(o) AS rt FROM cells GROUP BY 1),
-      rb AS (SELECT b, sum(o) AS ct FROM cells GROUP BY 1),
+    "a21_chi2" -> s"""
+      WITH $typeValueCellsSql,
       tot AS (SELECT sum(o) AS n, count(DISTINCT a) AS ka,
                      count(DISTINCT b) AS kb FROM cells)
       -- r9: fold over the FULL marginal grid (empty cells carry mass)
@@ -942,75 +1045,9 @@ object MiscQueries {
 
     // a45b: the a45 tree on the all-click slice — gx = gn forces the
     // NULL branch everywhere; ranks tie-break on segment in both engines
-    "a45b_bh_fdr_degen" -> """
-      WITH per AS (
-        SELECT event_id % 20 AS segment, count(*) AS n,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
-        FROM events WHERE event_type = 'click' GROUP BY 1),
-      g AS (SELECT sum(n) AS gn, sum(n_pos) AS gx, count(*) AS m FROM per),
-      zc AS (SELECT per.segment, per.n, per.n_pos, g.m,
-               CASE WHEN g.gx = 0 OR g.gx = g.gn THEN NULL ELSE
-               ((CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
-                - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE)))
-               / sqrt(((CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))
-                       * (1.0 - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))))
-                      / CAST(n AS DOUBLE)) END AS z
-             FROM per CROSS JOIN g),
-      pc AS (SELECT segment, n, n_pos, m, z,
-               (1.0 / (1.0 + (0.2316419 * abs(z)))) AS t,
-               (exp((-(abs(z) * abs(z))) / 2.0) * 0.3989422804014327) AS pd
-             FROM zc),
-      pv AS (SELECT segment, n, n_pos, m, z,
-               2.0 * (pd * (t * (0.319381530 + (t * (-0.356563782
-                 + (t * (1.781477937 + (t * (-1.821255978
-                 + (t * 1.330274429)))))))))) AS p
-             FROM pc),
-      rk AS (SELECT *, CAST(row_number() OVER (ORDER BY p, segment)
-                            AS BIGINT) AS p_rank FROM pv),
-      ks AS (SELECT max(CASE WHEN p <= ((CAST(p_rank AS DOUBLE) * 0.1)
-                                        / CAST(m AS DOUBLE))
-                             THEN p_rank END) AS k FROM rk)
-      SELECT segment, n, n_pos,
-             round(z, 6) AS z, round(p, 6) AS p_value, p_rank,
-             CASE WHEN p IS NULL THEN NULL
-                  ELSE coalesce(p_rank <= ks.k, false) END AS rejected
-      FROM rk CROSS JOIN ks""",
+    "a45b_bh_fdr_degen" -> bhFdrSql("events WHERE event_type = 'click'"),
 
-    // a45: one segment aggregate, the A&S normal-CDF Horner tree
-    // token-identical, rank by (p, segment), BH k* as a conditional max
-    "a45_bh_fdr" -> """
-      WITH per AS (
-        SELECT event_id % 20 AS segment, count(*) AS n,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
-        FROM events GROUP BY 1),
-      g AS (SELECT sum(n) AS gn, sum(n_pos) AS gx, count(*) AS m FROM per),
-      zc AS (SELECT per.segment, per.n, per.n_pos, g.m,
-               CASE WHEN g.gx = 0 OR g.gx = g.gn THEN NULL ELSE
-               ((CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
-                - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE)))
-               / sqrt(((CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))
-                       * (1.0 - (CAST(gx AS DOUBLE) / CAST(gn AS DOUBLE))))
-                      / CAST(n AS DOUBLE)) END AS z
-             FROM per CROSS JOIN g),
-      pc AS (SELECT segment, n, n_pos, m, z,
-               (1.0 / (1.0 + (0.2316419 * abs(z)))) AS t,
-               (exp((-(abs(z) * abs(z))) / 2.0) * 0.3989422804014327) AS pd
-             FROM zc),
-      pv AS (SELECT segment, n, n_pos, m, z,
-               2.0 * (pd * (t * (0.319381530 + (t * (-0.356563782
-                 + (t * (1.781477937 + (t * (-1.821255978
-                 + (t * 1.330274429)))))))))) AS p
-             FROM pc),
-      rk AS (SELECT *, CAST(row_number() OVER (ORDER BY p, segment)
-                            AS BIGINT) AS p_rank FROM pv),
-      ks AS (SELECT max(CASE WHEN p <= ((CAST(p_rank AS DOUBLE) * 0.1)
-                                        / CAST(m AS DOUBLE))
-                             THEN p_rank END) AS k FROM rk)
-      SELECT segment, n, n_pos,
-             round(z, 6) AS z, round(p, 6) AS p_value, p_rank,
-             CASE WHEN p IS NULL THEN NULL
-                  ELSE coalesce(p_rank <= ks.k, false) END AS rejected
-      FROM rk CROSS JOIN ks""",
+    "a45_bh_fdr" -> bhFdrSql("events"),
 
     // a46: n and the target rank r = greatest(1, ceil(p*n)) (IEEE
     // double multiply — the DOUBLE[] cast keeps DuckDB off decimal
@@ -1038,32 +1075,12 @@ object MiscQueries {
              TRUE AS within_bound
       FROM tgt JOIN rk ON rk.g = tgt.g AND rk.r = tgt.tr""",
 
-    // a47: ONE md5 per row (m = 60-bit prefix of "id_42" mod 2^31-1),
-    // replicate uniforms via the row-dependent integer mix
-    // (m * (48271 + b*12345)) % (2^31-1), weights through the EXACT
-    // Poisson(1) CDF thresholds floor(c_k * (2^31-1)) truncated at 6
-    // in both engines; replicate means as round-9 DECIMAL folds of
-    // round(x*w, 9); percentile ranks via greatest(1, ceil(p*B))
-    "a47_bootstrap_ci" -> """
-      WITH base AS (
-        SELECT event_type AS g, CAST(value AS DOUBLE) AS x,
-               CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR)
-                                           || '_42'), 1, 15)) AS BIGINT)
-                 % 2147483647 AS m
-        FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-      reps AS (SELECT g, x, m, unnest(range(50)) AS b FROM base),
-      hv AS (SELECT g, x, b,
-               (m * (48271 + (b * 12345))) % 2147483647 AS v
-             FROM reps),
-      wts AS (SELECT g, x, b,
-                CASE WHEN v < 790015083 THEN 0
-                     WHEN v < 1580030167 THEN 1
-                     WHEN v < 1975037709 THEN 2
-                     WHEN v < 2106706890 THEN 3
-                     WHEN v < 2139624185 THEN 4
-                     WHEN v < 2146207644 THEN 5
-                     ELSE 6 END AS w
-              FROM hv),
+    // a47: the Poisson(1) weight replay (Q.poissonWeightsSql);
+    // replicate means as round-9 DECIMAL folds of round(x*w, 9);
+    // percentile ranks via greatest(1, ceil(p*B))
+    "a47_bootstrap_ci" -> s"""
+      WITH ${Q.poissonWeightsSql("event_type",
+        "value IS NOT NULL AND event_type IS NOT NULL", 50)},
       per AS (SELECT g, b, sum(w) AS wn,
                      sum(CAST(round(x * w, 9) AS DECIMAL(28,9))) AS ws
               FROM wts GROUP BY 1, 2),
@@ -1072,13 +1089,7 @@ object MiscQueries {
       beff AS (SELECT g, count(*) AS be FROM pm GROUP BY 1),
       rk AS (SELECT g, b, m,
                     row_number() OVER (PARTITION BY g ORDER BY m, b) AS r
-             FROM pm),
-      lo AS (SELECT rk.g, rk.m AS lo FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.025 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
-      hi AS (SELECT rk.g, rk.m AS hi FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.975 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
+             FROM pm),${Q.ciBoundsSql("m")},
       ov AS (SELECT g, count(*) AS n,
                     sum(CAST(round(x, 9) AS DECIMAL(28,9))) AS s
              FROM base GROUP BY 1)
@@ -1087,65 +1098,15 @@ object MiscQueries {
              round(lo.lo, 6) AS lo95, round(hi.hi, 6) AS hi95
       FROM ov JOIN lo ON lo.g = ov.g JOIN hi ON hi.g = ov.g""",
 
-    // a48: the a47 weight replay verbatim, then EXACT weighted medians
-    // per replicate (window cumsum over the (g,b,x) cells + the integer
-    // rank rule) and the 2.5/97.5 rank selection over them — all
-    // integer/ordering arithmetic, so ci_lo/ci_hi hash exactly;
-    // all_within_bound (each replicate's KLL estimate inside its
-    // self-reported weighted-rank interval) is engine-verified, pinned
-    "a48_bootstrap_quantile_ci" -> """
-      WITH base AS (
-        SELECT event_type AS g, CAST(value AS DOUBLE) AS x,
-               CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR)
-                                           || '_42'), 1, 15)) AS BIGINT)
-                 % 2147483647 AS m
-        FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-      reps AS (SELECT g, x, m, unnest(range(50)) AS b FROM base),
-      hv AS (SELECT g, x, b,
-               (m * (48271 + (b * 12345))) % 2147483647 AS v
-             FROM reps),
-      wts AS (SELECT g, x, b,
-                CASE WHEN v < 790015083 THEN 0
-                     WHEN v < 1580030167 THEN 1
-                     WHEN v < 1975037709 THEN 2
-                     WHEN v < 2106706890 THEN 3
-                     WHEN v < 2139624185 THEN 4
-                     WHEN v < 2146207644 THEN 5
-                     ELSE 6 END AS w
-              FROM hv),
-      cells AS (SELECT g, b, x, sum(w) AS wc FROM wts WHERE w > 0
-                GROUP BY 1, 2, 3),
-      tot AS (SELECT g, b, sum(wc) AS wn FROM cells GROUP BY 1, 2),
-      cum AS (SELECT g, b, x,
-                     sum(wc) OVER (PARTITION BY g, b ORDER BY x) AS lc
-              FROM cells),
-      med AS (SELECT cum.g, cum.b, min(x) AS q
-              FROM cum JOIN tot ON tot.g = cum.g AND tot.b = cum.b
-              WHERE lc >= greatest(1, CAST(ceil(0.5 * CAST(wn AS DOUBLE))
-                                           AS BIGINT))
-              GROUP BY 1, 2),
-      beff AS (SELECT g, count(*) AS be FROM med GROUP BY 1),
-      rk AS (SELECT g, b, q,
-                    row_number() OVER (PARTITION BY g ORDER BY q, b) AS r
-             FROM med),
-      lo AS (SELECT rk.g, rk.q AS lo FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.025 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
-      hi AS (SELECT rk.g, rk.q AS hi FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.975 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
-      ov AS (SELECT g, count(*) AS n FROM base GROUP BY 1)
-      SELECT ov.g AS event_type, CAST(ov.n AS BIGINT) AS n,
-             CAST(beff.be AS BIGINT) AS b_eff,
-             round(lo.lo, 6) AS ci_lo, round(hi.hi, 6) AS ci_hi,
-             TRUE AS all_within_bound
-      FROM ov JOIN lo ON lo.g = ov.g JOIN hi ON hi.g = ov.g
-              JOIN beff ON beff.g = ov.g""",
+    // a48: the a47 weight replay, exact weighted medians per replicate
+    // and the 2.5/97.5 rank selection over them (Q.bootstrapMedianCiSql)
+    "a48_bootstrap_quantile_ci" -> Q.bootstrapMedianCiSql("event_type",
+      "event_type", "value IS NOT NULL AND event_type IS NOT NULL", 50),
 
     // a44: per-group middle-pair medians replayed with a partitioned
     // row_number, then a31's exact integer-thousandths ANOVA trees on
     // z = |x - med_g|
-    "a44_levene" -> """
+    "a44_levene" -> s"""
       WITH base AS (
         SELECT l_returnflag AS g, l_quantity AS v FROM lineitem
         WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
@@ -1160,39 +1121,13 @@ object MiscQueries {
                GROUP BY 1),
       z AS (SELECT base.g, abs(CAST(base.v AS DOUBLE) - meds.med) AS z
             FROM base JOIN meds USING (g)),
-      per AS (
-        SELECT g, count(*) AS ng,
-               sum(CAST(round(z * 1000, 0) AS DECIMAL(19,0))) AS s1,
-               sum(CAST(round(z * 1000, 0) AS DECIMAL(19,0))
-                   * CAST(round(z * 1000, 0) AS DECIMAL(19,0))) AS s2
-        FROM z GROUP BY 1),
-      tot AS (
-        SELECT CAST(sum(ng) AS DOUBLE) AS n,
-               CAST(count(*) AS DOUBLE) AS k,
-               CAST(sum(s1) AS DOUBLE) AS t1,
-               CAST(sum(s2) AS DOUBLE) AS t2,
-               CAST(sum(CAST(round((CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-                                   / CAST(ng AS DOUBLE), 9)
-                             AS DECIMAL(38,9))) AS DOUBLE) AS b
-        FROM per)
-      SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
-             round((b - ((t1 * t1) / n)) / 1000000.0, 6) AS ss_between,
-             round((t2 - b) / 1000000.0, 6) AS ss_within,
-             round(((b - ((t1 * t1) / n)) / (k - 1.0))
-                   / ((t2 - b) / (n - k)), 6) AS f_stat
-      FROM tot""",
+      ${anovaFSql("g", "z", "z")}""",
 
     // a41: the a28 value-group shape + the doubled-average-rank trick
     // (2*avgrank of a tied group = 2*cumt - t + 1, exact integers);
     // the u/z double trees mirror the engine's parenthesization
-    "a41_mann_whitney" -> """
-      WITH g AS (
-        SELECT value AS v,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS na,
-               count(CASE WHEN event_type = 'view' THEN 1 END) AS nb
-        FROM events
-        WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        GROUP BY 1),
+    "a41_mann_whitney" -> s"""
+      WITH $clickViewSql,
       c AS (SELECT na, nb, na + nb AS t,
                    sum(na + nb) OVER (ORDER BY v) AS ct
             FROM g),
@@ -1284,14 +1219,8 @@ object MiscQueries {
     // a28: per-value counts, then peer-inclusive cumulative sums (the
     // default RANGE frame steps ties atomically, matching the engine's
     // group-by-value CDF); D's numerator is an exact integer max
-    "a28_ks_drift" -> """
-      WITH g AS (
-        SELECT value AS v,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS na,
-               count(CASE WHEN event_type = 'view' THEN 1 END) AS nb
-        FROM events
-        WHERE event_type IN ('click', 'view') AND value IS NOT NULL
-        GROUP BY 1),
+    "a28_ks_drift" -> s"""
+      WITH $clickViewSql,
       c AS (
         SELECT sum(na) OVER (ORDER BY v) AS ca,
                sum(nb) OVER (ORDER BY v) AS cb
@@ -1413,31 +1342,9 @@ object MiscQueries {
 
     // a31: per-group integer-thousandths sums, between-term
     // s1^2/n rounded to 9 and DECIMAL-summed; F tree token-identical
-    "a31_anova_f" -> """
-      WITH per AS (
-        SELECT event_type AS g,
-               count(*) AS ng,
-               sum(CAST(round(value * 1000, 0) AS DECIMAL(19,0))) AS s1,
-               sum(CAST(round(value * 1000, 0) AS DECIMAL(19,0))
-                   * CAST(round(value * 1000, 0) AS DECIMAL(19,0))) AS s2
-        FROM events
-        WHERE event_type IS NOT NULL AND value IS NOT NULL
-        GROUP BY 1),
-      tot AS (
-        SELECT CAST(sum(ng) AS DOUBLE) AS n,
-               CAST(count(*) AS DOUBLE) AS k,
-               CAST(sum(s1) AS DOUBLE) AS t1,
-               CAST(sum(s2) AS DOUBLE) AS t2,
-               CAST(sum(CAST(round((CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-                                   / CAST(ng AS DOUBLE), 9)
-                             AS DECIMAL(38,9))) AS DOUBLE) AS b
-        FROM per)
-      SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
-             round((b - ((t1 * t1) / n)) / 1000000.0, 6) AS ss_between,
-             round((t2 - b) / 1000000.0, 6) AS ss_within,
-             round(((b - ((t1 * t1) / n)) / (k - 1.0))
-                   / ((t2 - b) / (n - k)), 6) AS f_stat
-      FROM tot""",
+    "a31_anova_f" -> s"""
+      WITH ${anovaFSql("event_type AS g", "value",
+        "events WHERE event_type IS NOT NULL AND value IS NOT NULL")}""",
 
     // a32: blocks by event_id % 10, DECIMAL(18,6) block sums, the
     // leave-one-out mean / deviation trees token-identical, both
@@ -1552,23 +1459,8 @@ object MiscQueries {
 
     // a39: the a34 CTE chain with d/n and d/n² terms, round-9 scaled
     // to integer doubles so both prefixes are exact window sums
-    "a39_nelson_aalen" -> """
-      WITH pe AS (
-        SELECT user_id, min(epoch_us(ts)) AS f, max(epoch_us(ts)) AS l
-        FROM events GROUP BY 1),
-      e AS (SELECT max(epoch_us(ts)) AS edge FROM events),
-      lv AS (
-        SELECT (l - f) AS t,
-               CASE WHEN l <= e.edge - 86400000000 THEN 1 ELSE 0 END AS ev
-        FROM pe CROSS JOIN e),
-      tm AS (SELECT t, count(*) AS alln, sum(ev) AS d FROM lv GROUP BY 1),
-      n AS (SELECT count(*) AS nn FROM lv),
-      c AS (
-        SELECT t, alln, d, sum(alln) OVER (ORDER BY t) AS ca
-        FROM tm),
-      r AS (
-        SELECT t, alln, d, (n.nn - (ca - alln)) AS n_risk
-        FROM c CROSS JOIN n),
+    "a39_nelson_aalen" -> s"""
+      WITH $riskSetSql,
       s AS (
         SELECT t, n_risk, d,
                sum(round(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE), 9)
@@ -1677,23 +1569,8 @@ object MiscQueries {
     // all integers; log-survival terms round-9 then SCALED to integer
     // doubles (x1e9), so both prefix sums are exact window/RunningTotal
     // sums and survival is one deterministic exp
-    "a34_kaplan_meier" -> """
-      WITH pe AS (
-        SELECT user_id, min(epoch_us(ts)) AS f, max(epoch_us(ts)) AS l
-        FROM events GROUP BY 1),
-      e AS (SELECT max(epoch_us(ts)) AS edge FROM events),
-      lv AS (
-        SELECT (l - f) AS t,
-               CASE WHEN l <= e.edge - 86400000000 THEN 1 ELSE 0 END AS ev
-        FROM pe CROSS JOIN e),
-      tm AS (SELECT t, count(*) AS alln, sum(ev) AS d FROM lv GROUP BY 1),
-      n AS (SELECT count(*) AS nn FROM lv),
-      c AS (
-        SELECT t, alln, d, sum(alln) OVER (ORDER BY t) AS ca
-        FROM tm),
-      r AS (
-        SELECT t, alln, d, (n.nn - (ca - alln)) AS n_risk
-        FROM c CROSS JOIN n),
+    "a34_kaplan_meier" -> s"""
+      WITH $riskSetSql,
       s AS (
         SELECT t, n_risk, d, alln,
                sum(round(ln(greatest(
@@ -1853,14 +1730,8 @@ object MiscQueries {
 
     // a22: identical ln trees ((o/n)*ln((o*n)/(ra*ct)) and p*ln(p)),
     // rounded to 9, DECIMAL-summed, negated AS 0.0 - sum for entropies
-    "a22_mutual_info" -> """
-      WITH cells AS (
-        SELECT event_type AS a,
-               CASE WHEN value >= 100 THEN 'hi' ELSE 'lo' END AS b,
-               count(*) AS o
-        FROM events GROUP BY 1, 2),
-      ra AS (SELECT a, sum(o) AS rt FROM cells GROUP BY 1),
-      rb AS (SELECT b, sum(o) AS ct FROM cells GROUP BY 1),
+    "a22_mutual_info" -> s"""
+      WITH $typeValueCellsSql,
       tot AS (SELECT sum(o) AS n FROM cells),
       mi AS (
         SELECT CAST(max(tot.n) AS BIGINT) AS n,

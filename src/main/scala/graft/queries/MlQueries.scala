@@ -333,22 +333,15 @@ object MlQueries {
       // concurrently their data-parallel stages interleave and the
       // cluster stays busy. Results are unchanged (per-model seeds, no
       // shared state); ordered by the input list for the oracle.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq("logreg", "rf", "gb").map { name =>
-          Future {
-            val m = Models.fit(df, "expensive", name, Models.Classification,
-              params(name))
-            val pred = Models.transformLabeled(m, df, "expensive",
-              Models.Classification, train = Some(df))
-            val acc = Metrics.classificationMetrics(pred, "label",
-              "prediction")("accuracy")
-            (name, acc >= 0.9, acc <= 1.0)
-          }
-        }), Duration.Inf)
-      }.toDF("model", "acc_ge_09", "acc_le_1")
+      graft.core.Concurrent.inParallel(Seq("logreg", "rf", "gb").map { name => () =>
+        val m = Models.fit(df, "expensive", name, Models.Classification,
+          params(name))
+        val pred = Models.transformLabeled(m, df, "expensive",
+          Models.Classification, train = Some(df))
+        val acc = Metrics.classificationMetrics(pred, "label",
+          "prediction")("accuracy")
+        (name, acc >= 0.9, acc <= 1.0)
+      }).toDF("model", "acc_ge_09", "acc_le_1")
     }),
 
     // m1c/m1d — the m1b zoo SPLIT per member (r13 VERDICT #7): m1b's
@@ -828,6 +821,126 @@ object MlQueries {
       imps.map { case (f, v) => (f, r(v, 2)) }.toDF("feature", "importance")
     }))
 
+  /** m23's exact decimal sufficient statistics over `from`: `b` keeps
+    * (extendedprice, quantity) where both are present and `cond` holds,
+    * `s` sums n, sx, sy, sxy and sxx, then `extraSums`. DuckDB keeps
+    * operand width on decimal multiply, so the wide first-operand casts
+    * reproduce Spark's product values. */
+  private def olsSumsSql(from: String, cond: String, extraSums: String): String = s"""
+      b AS (
+        SELECT CASE WHEN l_extendedprice IS NOT NULL
+                    AND l_quantity IS NOT NULL$cond THEN l_extendedprice END AS xe,
+               CASE WHEN l_extendedprice IS NOT NULL
+                    AND l_quantity IS NOT NULL$cond THEN l_quantity END AS yq
+        FROM $from),
+      s AS (
+        SELECT CAST(count(xe) AS DOUBLE) AS n,
+               CAST(sum(CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sx,
+               CAST(sum(CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sy,
+               CAST(sum(CAST(xe AS DECIMAL(20,4))
+                        * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sxy,
+               CAST(sum(CAST(xe AS DECIMAL(20,4))
+                        * CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sxx$extraSums
+        FROM b)"""
+
+  /** m23's ridge line (lambda 0.5) over [[olsSumsSql]]: slope `w` in
+    * `f`, intercept `b` in `g`. */
+  private def ridgeFitSql(from: String, cond: String): String = s"""
+      ${olsSumsSql(from, cond, "")},
+      f AS (
+        SELECT ((sxy - (n * ((sx / n) * (sy / n))))
+                / ((sxx - (n * ((sx / n) * (sx / n)))) + (0.5 * n))) AS w,
+               n, sx, sy
+        FROM s),
+      g AS (SELECT w, ((sy / n) - (w * (sx / n))) AS b FROM f)"""
+
+  /** m28's calibration bins: the piecewise-linear probability link p of
+    * value, the floor(p*10)+1 top-clamped cut, Σp as round-9 DECIMAL
+    * sums and the click count per bin (`per`). */
+  private val calibBinsSql = """
+      pr AS (
+        SELECT least(value, 200.0) / 200.0 AS p,
+               event_type FROM events
+        WHERE least(value, 200.0) / 200.0 IS NOT NULL),
+      per AS (
+        SELECT CAST(least(floor(p * 10) + 1, 10) AS INT) AS bin,
+               count(*) AS n,
+               sum(CAST(round(p, 9) AS DECIMAL(28,9))) AS sp,
+               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
+        FROM pr GROUP BY 1)"""
+
+  /** m35's Cohen's kappa of two order labelings: a = `aLo` for orders
+    * before 1995-06-17 (else `aHi`), b = `bBig` above 150000 (else
+    * `bSmall`). One contingency aggregate; chance agreement folds the
+    * marginal-share products round-9 DECIMAL-summed, and coalesce pins
+    * it to exactly 0 when no label is shared. */
+  private def kappaSql(aLo: String, aHi: String, bBig: String,
+                       bSmall: String): String = s"""
+      WITH lab AS (
+        SELECT CASE WHEN o_orderdate < DATE '1995-06-17' THEN $aLo
+                    ELSE $aHi END AS a,
+               CASE WHEN o_totalprice > 150000.0 THEN $bBig
+                    ELSE $bSmall END AS b
+        FROM orders),
+      cells AS (SELECT a, b, count(*) AS o FROM lab GROUP BY 1, 2),
+      ra AS (SELECT a, sum(o) AS ra FROM cells GROUP BY 1),
+      rb AS (SELECT b, sum(o) AS rb FROM cells GROUP BY 1),
+      tot AS (SELECT sum(o) AS n,
+                     sum(CASE WHEN a = b THEN o ELSE 0 END) AS agree
+              FROM cells),
+      pe AS (SELECT coalesce(sum(CAST(round((CAST(ra.ra AS DOUBLE)
+                                    / CAST(tot.n AS DOUBLE))
+                                   * (CAST(rb.rb AS DOUBLE)
+                                      / CAST(tot.n AS DOUBLE)), 9)
+                             AS DECIMAL(28,9))),
+                             CAST(0 AS DECIMAL(28,9))) AS pe
+             FROM ra JOIN rb ON ra.a = rb.b CROSS JOIN tot)
+      SELECT CAST(tot.n AS BIGINT) AS n,
+             round(CAST(tot.agree AS DOUBLE) / CAST(tot.n AS DOUBLE), 6)
+               AS p_obs,
+             round(CAST(pe.pe AS DOUBLE), 6) AS p_exp,
+             CASE WHEN CAST(pe.pe AS DOUBLE) >= 1.0 THEN NULL
+                  ELSE round(((CAST(tot.agree AS DOUBLE)
+                               / CAST(tot.n AS DOUBLE))
+                    - CAST(pe.pe AS DOUBLE))
+                   / (1.0 - CAST(pe.pe AS DOUBLE)), 6) END AS kappa
+      FROM tot CROSS JOIN pe"""
+
+  /** m12's split of orders into exact DECIMAL(19,4) pairs (x =
+    * o_custkey, y = o_totalprice): `op` "<> 0" trains, "= 0" tests. */
+  private def xySql(op: String): String =
+    s"""SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
+                  FROM orders WHERE o_orderkey % 4 $op"""
+
+  /** The training pairs `tr` and their decimal-exact sums `rr`. */
+  private val trainSumsSql = s"""
+      tr AS (${xySql("<> 0")}),
+      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(x*y) AS DOUBLE) AS sxy
+             FROM tr)"""
+
+  /** The OLS line y = m x + b over `rr`: slope in `f`, intercept in
+    * `f2`. */
+  private val lineFitSql = """
+      f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m, n, sx, sy FROM rr),
+      f2 AS (SELECT m, (sy - m * sx) / n AS b FROM f)"""
+
+  /** m12's held-out r2 of the [[lineFitSql]] line trained on `tr`,
+    * scored on the test pairs `te` from exact sums alone. */
+  private def heldOutR2Sql(te: String): String = s"""
+      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(y*y) AS DOUBLE) AS syy,
+                    CAST(sum(x*y) AS DOUBLE) AS sxy
+             FROM tr),
+      tt AS (SELECT CAST(count(*) AS DOUBLE) AS tn, CAST(sum(x) AS DOUBLE) AS tx, CAST(sum(y) AS DOUBLE) AS ty,
+                    CAST(sum(x*x) AS DOUBLE) AS txx, CAST(sum(y*y) AS DOUBLE) AS tyy,
+                    CAST(sum(x*y) AS DOUBLE) AS txy
+             FROM $te),
+      $lineFitSql,
+      rx AS (SELECT round(1.0 - (tyy - 2.0 * m * txy - 2.0 * b * ty + m * m * txx + 2.0 * m * b * tx + tn * b * b)
+                          / (tyy - ty * ty / tn), 6) AS r2
+             FROM f2 CROSS JOIN tt)"""
+
   val oracles: Map[String, String] = Map(
     "m1_binary_metrics" -> """
       WITH p AS (SELECT CAST(o_orderpriority = '1-URGENT' AS INT) AS label,
@@ -968,34 +1081,12 @@ object MlQueries {
     // m26: m23's ridge CTEs filtered to the train split; the quantile
     // rank replays ceil(0.9*(n+1)) with the same double literal and the
     // same (score, orderkey, linenumber) tie-break
-    "m26_conformal" -> """
+    "m26_conformal" -> s"""
       WITH sp AS (
         SELECT l_orderkey, l_linenumber, l_extendedprice, l_quantity,
                (l_orderkey % 10) AS md
         FROM lineitem),
-      b AS (
-        SELECT CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL AND md < 6
-                    THEN l_extendedprice END AS xe,
-               CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL AND md < 6
-                    THEN l_quantity END AS yq
-        FROM sp),
-      s AS (
-        SELECT CAST(count(xe) AS DOUBLE) AS n,
-               CAST(sum(CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sx,
-               CAST(sum(CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sxy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sxx
-        FROM b),
-      f AS (
-        SELECT ((sxy - (n * ((sx / n) * (sy / n))))
-                / ((sxx - (n * ((sx / n) * (sx / n)))) + (0.5 * n))) AS w,
-               n, sx, sy
-        FROM s),
-      g AS (SELECT w, ((sy / n) - (w * (sx / n))) AS b FROM f),
+      ${ridgeFitSql("sp", " AND md < 6")},
       cal AS (
         SELECT sp.l_orderkey, sp.l_linenumber,
                abs(sp.l_quantity - ((g.w * sp.l_extendedprice) + g.b))
@@ -1020,17 +1111,8 @@ object MlQueries {
       WHERE sp.md >= 8 AND sp.l_extendedprice IS NOT NULL""",
 
     // m31: the m28 bins reduced to ECE/MCE; per-bin gap trees identical
-    "m31_ece" -> """
-      WITH pr AS (
-        SELECT least(value, 200.0) / 200.0 AS p,
-               event_type FROM events
-        WHERE least(value, 200.0) / 200.0 IS NOT NULL),
-      per AS (
-        SELECT CAST(least(floor(p * 10) + 1, 10) AS INT) AS bin,
-               count(*) AS n,
-               sum(CAST(round(p, 9) AS DECIMAL(28,9))) AS sp,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
-        FROM pr GROUP BY 1),
+    "m31_ece" -> s"""
+      WITH $calibBinsSql,
       t AS (SELECT sum(n) AS tt FROM per)
       SELECT CAST(t.tt AS BIGINT) AS n,
              round(CAST(sum(CAST(round(
@@ -1075,24 +1157,9 @@ object MlQueries {
     // operand width on decimal multiply, so the wide first-operand
     // casts reproduce Spark's product values); every inference formula
     // the same double tree over the same exact sums
-    "m29_ols_inference" -> """
-      WITH b AS (
-        SELECT CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL THEN l_extendedprice END AS xe,
-               CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL THEN l_quantity END AS yq
-        FROM lineitem),
-      s AS (
-        SELECT CAST(count(xe) AS DOUBLE) AS n,
-               CAST(sum(CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sx,
-               CAST(sum(CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sxy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sxx,
-               CAST(sum(CAST(yq AS DECIMAL(16,3))
-                        * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS syy
-        FROM b),
+    "m29_ols_inference" -> s"""
+      WITH ${olsSumsSql("lineitem", "",
+        ", CAST(sum(CAST(yq AS DECIMAL(16,3)) * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS syy")},
       f AS (
         SELECT n,
                (sx / n) AS mx, (sy / n) AS my,
@@ -1149,74 +1216,13 @@ object MlQueries {
                AS cum_lift
       FROM cum CROSS JOIN t""",
 
-    // m28: the same piecewise-linear probability link, the same
-    // floor(p*10)+1 top-clamped cut, Σp as round-9 DECIMAL sums,
-    // Brier terms token-identical to the engine
     // m35b: the m35 tree with disjoint label sets — the pe join is
     // empty, coalesce pins chance agreement to exactly 0
-    "m35b_kappa_disjoint" -> """
-      WITH lab AS (
-        SELECT CASE WHEN o_orderdate < DATE '1995-06-17' THEN 'lo'
-                    ELSE 'hi' END AS a,
-               CASE WHEN o_totalprice > 150000.0 THEN 'big'
-                    ELSE 'small' END AS b
-        FROM orders),
-      cells AS (SELECT a, b, count(*) AS o FROM lab GROUP BY 1, 2),
-      ra AS (SELECT a, sum(o) AS ra FROM cells GROUP BY 1),
-      rb AS (SELECT b, sum(o) AS rb FROM cells GROUP BY 1),
-      tot AS (SELECT sum(o) AS n,
-                     sum(CASE WHEN a = b THEN o ELSE 0 END) AS agree
-              FROM cells),
-      pe AS (SELECT coalesce(sum(CAST(round((CAST(ra.ra AS DOUBLE)
-                                    / CAST(tot.n AS DOUBLE))
-                                   * (CAST(rb.rb AS DOUBLE)
-                                      / CAST(tot.n AS DOUBLE)), 9)
-                             AS DECIMAL(28,9))),
-                             CAST(0 AS DECIMAL(28,9))) AS pe
-             FROM ra JOIN rb ON ra.a = rb.b CROSS JOIN tot)
-      SELECT CAST(tot.n AS BIGINT) AS n,
-             round(CAST(tot.agree AS DOUBLE) / CAST(tot.n AS DOUBLE), 6)
-               AS p_obs,
-             round(CAST(pe.pe AS DOUBLE), 6) AS p_exp,
-             CASE WHEN CAST(pe.pe AS DOUBLE) >= 1.0 THEN NULL
-                  ELSE round(((CAST(tot.agree AS DOUBLE)
-                               / CAST(tot.n AS DOUBLE))
-                    - CAST(pe.pe AS DOUBLE))
-                   / (1.0 - CAST(pe.pe AS DOUBLE)), 6) END AS kappa
-      FROM tot CROSS JOIN pe""",
+    "m35b_kappa_disjoint" -> kappaSql("'lo'", "'hi'", "'big'", "'small'"),
 
     // m35: one contingency aggregate; chance agreement folds the
     // marginal-share products round-9 DECIMAL-summed; trees mirrored
-    "m35_cohen_kappa" -> """
-      WITH lab AS (
-        SELECT CASE WHEN o_orderdate < DATE '1995-06-17' THEN 'F'
-                    ELSE 'other' END AS a,
-               CASE WHEN o_totalprice > 150000.0 THEN 'F'
-                    ELSE 'other' END AS b
-        FROM orders),
-      cells AS (SELECT a, b, count(*) AS o FROM lab GROUP BY 1, 2),
-      ra AS (SELECT a, sum(o) AS ra FROM cells GROUP BY 1),
-      rb AS (SELECT b, sum(o) AS rb FROM cells GROUP BY 1),
-      tot AS (SELECT sum(o) AS n,
-                     sum(CASE WHEN a = b THEN o ELSE 0 END) AS agree
-              FROM cells),
-      pe AS (SELECT coalesce(sum(CAST(round((CAST(ra.ra AS DOUBLE)
-                                    / CAST(tot.n AS DOUBLE))
-                                   * (CAST(rb.rb AS DOUBLE)
-                                      / CAST(tot.n AS DOUBLE)), 9)
-                             AS DECIMAL(28,9))),
-                             CAST(0 AS DECIMAL(28,9))) AS pe
-             FROM ra JOIN rb ON ra.a = rb.b CROSS JOIN tot)
-      SELECT CAST(tot.n AS BIGINT) AS n,
-             round(CAST(tot.agree AS DOUBLE) / CAST(tot.n AS DOUBLE), 6)
-               AS p_obs,
-             round(CAST(pe.pe AS DOUBLE), 6) AS p_exp,
-             CASE WHEN CAST(pe.pe AS DOUBLE) >= 1.0 THEN NULL
-                  ELSE round(((CAST(tot.agree AS DOUBLE)
-                               / CAST(tot.n AS DOUBLE))
-                    - CAST(pe.pe AS DOUBLE))
-                   / (1.0 - CAST(pe.pe AS DOUBLE)), 6) END AS kappa
-      FROM tot CROSS JOIN pe""",
+    "m35_cohen_kappa" -> kappaSql("'F'", "'other'", "'F'", "'other'"),
 
     // m33: the m28 bucket rule at 20 bins; descending cumulative
     // counts as window sums; ratio trees mirrored; f1 NULL at tp=0
@@ -1318,17 +1324,10 @@ object MlQueries {
                    6) AS mcnemar_chi2
       FROM s""",
 
-    "m28_reliability" -> """
-      WITH pr AS (
-        SELECT least(value, 200.0) / 200.0 AS p,
-               event_type FROM events
-        WHERE least(value, 200.0) / 200.0 IS NOT NULL),
-      per AS (
-        SELECT CAST(least(floor(p * 10) + 1, 10) AS INT) AS bin,
-               count(*) AS n,
-               sum(CAST(round(p, 9) AS DECIMAL(28,9))) AS sp,
-               count(CASE WHEN event_type = 'click' THEN 1 END) AS n_pos
-        FROM pr GROUP BY 1),
+    // m28: the calibration bins (calibBinsSql), reliability and
+    // resolution terms token-identical to the engine
+    "m28_reliability" -> s"""
+      WITH $calibBinsSql,
       t AS (SELECT sum(n) AS tt, sum(n_pos) AS tp FROM per)
       SELECT bin, n,
              round(CAST(sp AS DOUBLE) / CAST(n AS DOUBLE), 6) AS avg_prob,
@@ -1348,28 +1347,8 @@ object MlQueries {
                    / CAST(t.tt AS DOUBLE), 6) AS res_term
       FROM per CROSS JOIN t""",
 
-    "m23_ridge" -> """
-      WITH b AS (
-        SELECT CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL THEN l_extendedprice END AS xe,
-               CASE WHEN l_extendedprice IS NOT NULL
-                    AND l_quantity IS NOT NULL THEN l_quantity END AS yq
-        FROM lineitem),
-      s AS (
-        SELECT CAST(count(xe) AS DOUBLE) AS n,
-               CAST(sum(CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sx,
-               CAST(sum(CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(yq AS DECIMAL(8,3))) AS DOUBLE) AS sxy,
-               CAST(sum(CAST(xe AS DECIMAL(20,4))
-                        * CAST(xe AS DECIMAL(12,4))) AS DOUBLE) AS sxx
-        FROM b),
-      f AS (
-        SELECT ((sxy - (n * ((sx / n) * (sy / n))))
-                / ((sxx - (n * ((sx / n) * (sx / n)))) + (0.5 * n))) AS w,
-               n, sx, sy
-        FROM s),
-      g AS (SELECT w, ((sy / n) - (w * (sx / n))) AS b FROM f)
+    "m23_ridge" -> s"""
+      WITH ${ridgeFitSql("lineitem", "")}
       SELECT l.l_orderkey, l.l_linenumber,
              round((g.w * l.l_extendedprice) + g.b, 4) AS pred
       FROM lineitem l CROSS JOIN g""",
@@ -1521,12 +1500,8 @@ object MlQueries {
 
     // m20: phi = m * (x - mu) with m and mu decimal-derived doubles —
     // every scalar expression mirrors the engine token-for-token
-    "m20_linear_shap" -> """
-      WITH tr AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-                  FROM orders WHERE o_orderkey % 4 <> 0),
-      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(x*y) AS DOUBLE) AS sxy
-             FROM tr),
+    "m20_linear_shap" -> s"""
+      WITH $trainSumsSql,
       f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m FROM rr),
       bg AS (SELECT CAST(sum(CAST(o_custkey AS DECIMAL(19,4))) AS DOUBLE) /
                     CAST(count(*) AS DOUBLE) AS mu
@@ -1567,24 +1542,10 @@ object MlQueries {
 
     // m5c: the linear row is the decimal-exact OLS r2 on the modulo
     // split (m12 recipe); the rf row is invariant-only
-    "m5c_model_compare" -> """
-      WITH tr AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-                  FROM orders WHERE o_orderkey % 4 <> 0),
-      te AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-             FROM orders WHERE o_orderkey % 4 = 0),
-      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(y*y) AS DOUBLE) AS syy,
-                    CAST(sum(x*y) AS DOUBLE) AS sxy
-             FROM tr),
-      tt AS (SELECT CAST(count(*) AS DOUBLE) AS tn, CAST(sum(x) AS DOUBLE) AS tx, CAST(sum(y) AS DOUBLE) AS ty,
-                    CAST(sum(x*x) AS DOUBLE) AS txx, CAST(sum(y*y) AS DOUBLE) AS tyy,
-                    CAST(sum(x*y) AS DOUBLE) AS txy
-             FROM te),
-      f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m, n, sx, sy FROM rr),
-      f2 AS (SELECT m, (sy - m * sx) / n AS b FROM f),
-      rx AS (SELECT round(1.0 - (tyy - 2.0 * m * txy - 2.0 * b * ty + m * m * txx + 2.0 * m * b * tx + tn * b * b)
-                          / (tyy - ty * ty / tn), 6) AS r2
-             FROM f2 CROSS JOIN tt)
+    "m5c_model_compare" -> s"""
+      WITH tr AS (${xySql("<> 0")}),
+      te AS (${xySql("= 0")}),
+      ${heldOutR2Sql("te")}
       SELECT 'linear' AS model, r2 AS r2_exact, true AS engine_ok FROM rx
       UNION ALL
       SELECT 'rf', CAST(NULL AS DOUBLE), true""",
@@ -1650,48 +1611,24 @@ object MlQueries {
     // order-exact decimal sums, scalar formulas mirroring the Scala
     // trees token-for-token; mae's per-row residuals are bit-identical
     // (same m, b doubles) and their sum is decimalized
-    "m12_final_train" -> """
-      WITH tr AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-                  FROM orders WHERE o_orderkey % 4 <> 0),
-      ted AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-              FROM orders WHERE o_orderkey % 4 = 0),
+    "m12_final_train" -> s"""
+      WITH tr AS (${xySql("<> 0")}),
+      ted AS (${xySql("= 0")}),
       te_raw AS (SELECT o_custkey AS x, o_totalprice AS y FROM orders WHERE o_orderkey % 4 = 0),
-      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(y*y) AS DOUBLE) AS syy,
-                    CAST(sum(x*y) AS DOUBLE) AS sxy
-             FROM tr),
-      tt AS (SELECT CAST(count(*) AS DOUBLE) AS tn, CAST(sum(x) AS DOUBLE) AS tx, CAST(sum(y) AS DOUBLE) AS ty,
-                    CAST(sum(x*x) AS DOUBLE) AS txx, CAST(sum(y*y) AS DOUBLE) AS tyy,
-                    CAST(sum(x*y) AS DOUBLE) AS txy
-             FROM ted),
-      f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m, n, sx, sy FROM rr),
-      f2 AS (SELECT m, (sy - m * sx) / n AS b FROM f),
-      rx AS (SELECT round(1.0 - (tyy - 2.0 * m * txy - 2.0 * b * ty + m * m * txx + 2.0 * m * b * tx + tn * b * b)
-                          / (tyy - ty * ty / tn), 6) AS r2
-             FROM f2 CROSS JOIN tt),
+      ${heldOutR2Sql("ted")},
       mx AS (SELECT round(CAST(sum(CAST(abs(y - (f2.m * x + f2.b)) AS DECIMAL(18,6))) AS DOUBLE)
                           / CAST(count(*) AS DOUBLE), 2) AS mae
              FROM te_raw CROSS JOIN f2)
       SELECT rx.r2, mx.mae, true AS engine_ok FROM rx CROSS JOIN mx""",
 
-    "m16_inference" -> """
-      WITH tr AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-                  FROM orders WHERE o_orderkey % 4 <> 0),
-      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(x*y) AS DOUBLE) AS sxy
-             FROM tr),
-      f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m, n, sx, sy FROM rr),
-      f2 AS (SELECT m, (sy - m * sx) / n AS b FROM f)
+    "m16_inference" -> s"""
+      WITH $trainSumsSql,
+      $lineFitSql
       SELECT round(m * 1000.0 + b, 2) AS prediction, true AS engine_ok FROM f2""",
 
-    "s8_model_roundtrip" -> """
-      WITH tr AS (SELECT CAST(o_custkey AS DECIMAL(19,4)) AS x, CAST(o_totalprice AS DECIMAL(19,4)) AS y
-                  FROM orders WHERE o_orderkey % 4 <> 0),
-      rr AS (SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-                    CAST(sum(x*x) AS DOUBLE) AS sxx, CAST(sum(x*y) AS DOUBLE) AS sxy
-             FROM tr),
-      f AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS m, n, sx, sy FROM rr),
-      f2 AS (SELECT m, (sy - m * sx) / n AS b FROM f)
+    "s8_model_roundtrip" -> s"""
+      WITH $trainSumsSql,
+      $lineFitSql
       SELECT round(m * 1000.0 + b, 2) AS prediction, TRUE AS reloaded_match,
              true AS engine_ok FROM f2""",
 

@@ -13,6 +13,20 @@ import Q.QueryFn
   */
 object StreamingQueries {
 
+  /** The near-duplicate `pairs` (Jaccard >= 0.7) of the `corpus` CTE
+    * over its [[Q.shingleSetSql]] 3-shingles `sh`, whose per-doc counts
+    * are `sizes` (st11, st7). */
+  private val corpusPairsSql: String = s"""
+      sh AS (${Q.shingleSetSql("doc_id", "corpus", 3)}),
+      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+      prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
+              FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+              GROUP BY 1, 2),
+      pairs AS (SELECT id_a, id_b
+                FROM prs JOIN sizes na ON na.doc_id = id_a
+                         JOIN sizes nb ON nb.doc_id = id_b
+                WHERE CAST(common AS DOUBLE) / (na.n_sh + nb.n_sh - common) >= 0.7)"""
+
   val queries: Map[String, QueryFn] = Map(
     "st1_tumbling_window" -> ((s, dir) =>
       Streams.tumblingCounts(Tables.events(s, dir))),
@@ -292,57 +306,9 @@ object StreamingQueries {
              TRUE AS within_bound
       FROM tgt JOIN rk ON rk.w = tgt.w AND rk.r = tgt.tr""",
 
-    // st16: the a48 weight replay with g = the hour window; exact
-    // weighted medians per (window, replicate) via window cumsum +
-    // integer rank rule, CI by rank over them; all_within_bound pinned
-    "st16_window_bootstrap_ci" -> """
-      WITH base AS (
-        SELECT date_trunc('hour', ts) AS g, CAST(value AS DOUBLE) AS x,
-               CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR)
-                                           || '_42'), 1, 15)) AS BIGINT)
-                 % 2147483647 AS m
-        FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-      reps AS (SELECT g, x, m, unnest(range(30)) AS b FROM base),
-      hv AS (SELECT g, x, b,
-               (m * (48271 + (b * 12345))) % 2147483647 AS v
-             FROM reps),
-      wts AS (SELECT g, x, b,
-                CASE WHEN v < 790015083 THEN 0
-                     WHEN v < 1580030167 THEN 1
-                     WHEN v < 1975037709 THEN 2
-                     WHEN v < 2106706890 THEN 3
-                     WHEN v < 2139624185 THEN 4
-                     WHEN v < 2146207644 THEN 5
-                     ELSE 6 END AS w
-              FROM hv),
-      cells AS (SELECT g, b, x, sum(w) AS wc FROM wts WHERE w > 0
-                GROUP BY 1, 2, 3),
-      tot AS (SELECT g, b, sum(wc) AS wn FROM cells GROUP BY 1, 2),
-      cum AS (SELECT g, b, x,
-                     sum(wc) OVER (PARTITION BY g, b ORDER BY x) AS lc
-              FROM cells),
-      med AS (SELECT cum.g, cum.b, min(x) AS q
-              FROM cum JOIN tot ON tot.g = cum.g AND tot.b = cum.b
-              WHERE lc >= greatest(1, CAST(ceil(0.5 * CAST(wn AS DOUBLE))
-                                           AS BIGINT))
-              GROUP BY 1, 2),
-      beff AS (SELECT g, count(*) AS be FROM med GROUP BY 1),
-      rk AS (SELECT g, b, q,
-                    row_number() OVER (PARTITION BY g ORDER BY q, b) AS r
-             FROM med),
-      lo AS (SELECT rk.g, rk.q AS lo FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.025 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
-      hi AS (SELECT rk.g, rk.q AS hi FROM rk JOIN beff USING (g)
-             WHERE rk.r = greatest(1, CAST(ceil(0.975 * CAST(be AS DOUBLE))
-                                           AS BIGINT))),
-      ov AS (SELECT g, count(*) AS n FROM base GROUP BY 1)
-      SELECT ov.g AS window_start, CAST(ov.n AS BIGINT) AS n,
-             CAST(beff.be AS BIGINT) AS b_eff,
-             round(lo.lo, 6) AS ci_lo, round(hi.hi, 6) AS ci_hi,
-             TRUE AS all_within_bound
-      FROM ov JOIN lo ON lo.g = ov.g JOIN hi ON hi.g = ov.g
-              JOIN beff ON beff.g = ov.g""",
+    // st16: the a48 replay with g = the hour window, 30 replicates
+    "st16_window_bootstrap_ci" -> Q.bootstrapMedianCiSql("window_start",
+      "date_trunc('hour', ts)", "value IS NOT NULL AND ts IS NOT NULL", 30),
 
     // st13: hour windows = epoch-aligned date_trunc; the n²/q terms
     // (q = (band+1)/55) rounded to 9 and DECIMAL-summed per window,
@@ -410,25 +376,7 @@ object StreamingQueries {
         FROM documents WHERE doc_id < 25
         UNION ALL SELECT doc_id + 31000, lang, text || ' extra token'
         FROM documents WHERE doc_id >= 100 AND doc_id < 110),
-      sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-               range(len(string_split_regex(trim(text), '\\s+')) - 2),
-               i -> list_reduce(list_transform(range(i, i + 3),
-                      j -> (string_split_regex(trim(text), '\\s+'))[j + 1]),
-                    (a, b) -> a || ' ' || b)))) AS sh
-             FROM corpus
-             WHERE len(string_split_regex(trim(text), '\\s+')) >= 3
-             UNION ALL
-             SELECT doc_id, regexp_replace(trim(text), '\\s+', ' ', 'g') AS sh
-             FROM corpus
-             WHERE len(string_split_regex(trim(text), '\\s+')) < 3),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-      prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-              FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-      pairs AS (SELECT id_a, id_b
-                FROM prs JOIN sizes na ON na.doc_id = id_a
-                         JOIN sizes nb ON nb.doc_id = id_b
-                WHERE CAST(common AS DOUBLE) / (na.n_sh + nb.n_sh - common) >= 0.7),
+      $corpusPairsSql,
       p11 AS (SELECT id_a, id_b FROM pairs WHERE id_a < 100 AND id_b < 100),
       e1 AS (SELECT id_a AS src, id_b AS dst FROM p11
              UNION SELECT id_b, id_a FROM p11),
@@ -467,42 +415,20 @@ object StreamingQueries {
 
     // kept = batch docs with NO >= 0.7 Jaccard pair into the corpus AND
     // min of their within-batch near-dup component (the step() drop rule)
-    "st7_ingest_dedup" -> """
+    "st7_ingest_dedup" -> s"""
       WITH RECURSIVE corpus AS (
         SELECT doc_id, text FROM documents
         UNION ALL SELECT doc_id + 30000, text || ' extra token'
         FROM documents WHERE doc_id < 25
         UNION ALL SELECT doc_id + 31000,
-          array_to_string(list_reverse(string_split_regex(trim(text), '\s+')), ' ')
+          array_to_string(list_reverse(string_split_regex(trim(text), '\\s+')), ' ')
         FROM documents WHERE doc_id >= 25 AND doc_id < 50),
-      sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-               range(len(string_split_regex(trim(text), '\s+')) - 2),
-               i -> list_reduce(list_transform(range(i, i + 3),
-                      j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                    (a, b) -> a || ' ' || b)))) AS sh
-             FROM corpus
-             WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-             UNION ALL
-             SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-             FROM corpus
-             WHERE len(string_split_regex(trim(text), '\s+')) < 3),
-      sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-      prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-              FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-      pairs AS (SELECT id_a, id_b
-                FROM prs JOIN sizes na ON na.doc_id = id_a
-                         JOIN sizes nb ON nb.doc_id = id_b
-                WHERE CAST(common AS DOUBLE) / (na.n_sh + nb.n_sh - common) >= 0.7),
+      $corpusPairsSql,
       oldpair AS (SELECT id_b AS id FROM pairs WHERE id_b >= 30000 AND id_a < 30000
                   UNION SELECT id_a FROM pairs WHERE id_a >= 30000 AND id_b < 30000),
       nn AS (SELECT id_a, id_b FROM pairs WHERE id_a >= 30000 AND id_b >= 30000),
-      edges AS (SELECT id_a AS src, id_b AS dst FROM nn UNION SELECT id_b, id_a FROM nn),
-      reach AS (SELECT src AS id, dst AS r FROM edges
-                UNION SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-      nodes AS (SELECT DISTINCT src AS id FROM edges),
-      comp AS (SELECT n.id, least(n.id, (SELECT min(r) FROM reach WHERE reach.id = n.id)) AS c
-               FROM nodes n),
+      ${Q.reachSql("nn")},
+      comp AS (SELECT n.id, ${Q.ComponentSql} AS c FROM nodes n),
       dropped AS (SELECT id FROM oldpair UNION SELECT id FROM comp WHERE c <> id),
       batch AS (SELECT doc_id + 30000 AS doc_id FROM documents WHERE doc_id < 25
                 UNION ALL SELECT doc_id + 31000 FROM documents

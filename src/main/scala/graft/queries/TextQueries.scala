@@ -785,6 +785,160 @@ object TextQueries {
   private val toksSql = "string_split_regex(trim(text), '\\s+')"
   private val lowToksSql = "string_split_regex(lower(trim(text)), '\\s+')"
 
+  /** t55's host graph: two edges per doc between 13 hosts, as `und`,
+    * the DISTINCT simple edges in canonical (least, greatest)
+    * orientation. */
+  private val hostEdgesSql = """
+      raw AS (
+        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR) AS src,
+               'h' || CAST((doc_id * 3 + 1) % 13 AS VARCHAR) AS dst
+        FROM documents
+        UNION ALL
+        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR),
+               'h' || CAST((doc_id * 5 + 2) % 13 AS VARCHAR)
+        FROM documents),
+      und AS (
+        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+        FROM raw WHERE least(src, dst) <> greatest(src, dst))"""
+
+  /** The triangle count of `und`: the wedge join `w` and its closing
+    * join `tr`. */
+  private val trianglesSql = """
+      w AS (
+        SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        FROM und e1 JOIN und e2 ON e1.b = e2.a),
+      tr AS (
+        SELECT count(*) AS triangles
+        FROM w JOIN und e3 ON w.x = e3.a AND w.z = e3.b)"""
+
+  /** t13's unigram LM: per-doc term counts `dt` of the lowercased
+    * tokens, corpus term counts `ct` and their total `tot`. */
+  private val unigramLmSql: String = s"""
+      tok AS (SELECT doc_id, unnest($lowToksSql) AS term FROM documents),
+      dt AS (SELECT doc_id, term, count(*) AS c FROM tok WHERE term <> '' GROUP BY 1, 2),
+      ct AS (SELECT term, sum(c) AS ct FROM dt GROUP BY 1),
+      tot AS (SELECT sum(ct) AS tot FROM ct)"""
+
+  /** A doc's mean log-prob under [[unigramLmSql]], rounded to 6. */
+  private val meanLogProbSql =
+    "round(sum(c * ln(CAST(ct AS DOUBLE) / tot)) / sum(c), 6)"
+
+  /** Each doc's lowercased tokens `tok` and bigram counts `db` (doc_id,
+    * v, w, c); t24, t26 and the DoReMi KN oracles. */
+  private val bigramsSql: String = s"""
+      tok AS (SELECT doc_id, $lowToksSql AS t FROM documents),
+      bg AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1),
+                     i -> [t[i + 1], t[i + 2]])) AS p
+             FROM tok WHERE len(t) >= 2),
+      db AS (SELECT doc_id, p[1] AS v, p[2] AS w, count(*) AS c
+             FROM bg GROUP BY 1, 2, 3)"""
+
+  /** The Kneser-Ney tables over the bigram counts `from` (v, w, c), as
+    * `Lexicon.knTables`: `cb` (c(v,w)), `cv` (c(v) and N1+(v .)), `cont`
+    * (N1+(. w)) and `ty` (bigram types). */
+  private def knTablesSql(from: String): String = s"""
+      cb AS (SELECT v, w, sum(c) AS cvw FROM $from GROUP BY 1, 2),
+      cv AS (SELECT v, sum(cvw) AS cv, count(*) AS n1v FROM cb GROUP BY 1),
+      cont AS (SELECT w, count(*) AS ncw FROM cb GROUP BY 1),
+      ty AS (SELECT count(*) AS types FROM cb)"""
+
+  /** The interpolated KN bigram probability over [[knTablesSql]]'s
+    * columns (discount 0.75), as `Lexicon.knProb`. */
+  private val knProbSql =
+    """(CAST(cvw AS DOUBLE) - 0.75) / CAST(cv AS DOUBLE) +
+       0.75 * (CAST(n1v AS DOUBLE) / CAST(cv AS DOUBLE)) *
+              (CAST(ncw AS DOUBLE) / CAST(types AS DOUBLE))"""
+
+  /** One DoReMi EG step from the per-source `dom` (tokens, lp): `g`
+    * (corpus totals), `b` (excess loss over the corpus LM, clamped at
+    * 0), `st` (the engine's `a0 * exp(e) * exp(e)` product) and its sum
+    * `n`; t49 and t49b. */
+  private val doremiStepSql = """
+      g AS (SELECT sum(tokens) AS gtok, sum(lp) AS glp, count(*) AS nd
+            FROM dom),
+      b AS (SELECT source, tokens,
+                   CASE WHEN (-lp / tokens) - (SELECT -glp / gtok FROM g) > 0
+                        THEN (-lp / tokens) - (SELECT -glp / gtok FROM g)
+                        ELSE 0 END AS excess,
+                   CAST(tokens AS DOUBLE) / (SELECT gtok FROM g) AS a0
+            FROM dom),
+      st AS (SELECT source, tokens, excess,
+                    a0 * exp(1.0 * excess) * exp(1.0 * excess) AS a
+             FROM b),
+      n AS (SELECT sum(a) AS asum FROM st)"""
+
+  /** The DoReMi output: each source's excess loss and its weight
+    * `alpha`, normalized by the sum in `n` and smoothed by 0.01 towards
+    * uniform. */
+  private def doremiWeightsSql(alpha: String, n: String, from: String): String = s"""
+      SELECT source, CAST(tokens AS BIGINT) AS tokens,
+             round(excess, 6) AS excess_loss,
+             round(0.99 * $alpha / (SELECT asum FROM $n)
+                   + 0.01 / (SELECT nd FROM g), 6) AS weight
+      FROM $from"""
+
+  /** t49c's proxy at EG step k: the mixture-trained unigram LM `pm`
+    * p_w(t) = sum_d w_d c_dt/tok_d from the coefficients `c`, and each
+    * source's log-prob `ld` under it. */
+  private def unigramProxySql(k: Int, c: String): String = s"""
+      pm$k AS (SELECT term, sum(s.c * $c.coef) AS pm
+              FROM stc s JOIN $c USING (source) GROUP BY 1),
+      ld$k AS (SELECT s.source, sum(s.c * ln(pm$k.pm)) AS lp
+              FROM stc s JOIN pm$k USING (term) GROUP BY 1)"""
+
+  /** t49d's proxy at EG step k: the mixture pseudo-counts `m` (at
+    * corpus scale) and their per-context sums `mv` from the
+    * coefficients `c`, and each source's KN log-prob `ld` with the
+    * max(m - 0.75, 0) discount guard and the weight-invariant type
+    * statistics of [[knTablesSql]]. */
+  private def knProxySql(k: Int, c: String): String = s"""
+      m$k AS (SELECT s.v, s.w, sum(s.c * $c.coef) AS mvw
+             FROM sb s JOIN $c USING (source) GROUP BY 1, 2),
+      mv$k AS (SELECT v, sum(mvw) AS mv FROM m$k GROUP BY 1),
+      ld$k AS (SELECT s.source,
+          sum(s.c * ln(
+            ((CASE WHEN (m$k.mvw - 0.75) > 0.0 THEN (m$k.mvw - 0.75)
+                   ELSE 0.0 END) / mv$k.mv)
+            + ((0.75 * (CAST(cv.n1v AS DOUBLE) / mv$k.mv))
+               * (CAST(cont.ncw AS DOUBLE)
+                  / CAST((SELECT types FROM ty) AS DOUBLE))))) AS lp
+        FROM sb s JOIN m$k USING (v, w) JOIN mv$k USING (v)
+             JOIN cv USING (v) JOIN cont USING (w)
+        GROUP BY 1)"""
+
+  /** The DoReMi adaptive loop (t49c, t49d) from uniform weights `w0`
+    * over `tokd` and the reference log-probs `lref`: two EG steps k,
+    * each normalizing w(k-1) (`n`), turning the weights into per-token
+    * coefficients (`c`, the share passed through `coef`), taking the
+    * proxy log-probs `ld` from `proxy(k, c)` and updating `w` with the
+    * excess loss clamped at 0; then [[doremiWeightsSql]]. */
+  private def doremiEgSql(coef: String => String,
+                          proxy: (Int, String) => String): String = {
+    def step(k: Int, c: String): String = {
+      val (p, n) = (s"w${k - 1}", s"n${k - 1}")
+      val excess = s"""CASE WHEN ((-ld$k.lp / $p.tokens)
+                               - (-$p.lpref / $p.tokens)) > 0.0
+                         THEN ((-ld$k.lp / $p.tokens)
+                               - (-$p.lpref / $p.tokens))
+                         ELSE 0.0 END"""
+      s"""
+      $n AS (SELECT sum(alpha) AS asum FROM $p),
+      $c AS (SELECT source,
+                    ${coef(s"((alpha / (SELECT asum FROM $n)) / tokens)")} AS coef
+             FROM $p),${proxy(k, c)},
+      w$k AS (SELECT $p.source, $p.tokens,${if (k == 1) s" $p.lpref," else ""}
+                    $excess AS excess,
+                    $p.alpha * exp(1.0 * $excess) AS alpha
+             FROM $p JOIN ld$k USING (source))"""
+    }
+    s"""
+      w0 AS (SELECT t.source, t.tokens, l.lpref,
+                    1.0 / (SELECT nd FROM g) AS alpha
+             FROM tokd t JOIN lref l USING (source)),${step(1, "c1")},${step(2, "c2s")},
+      n2 AS (SELECT sum(alpha) AS asum FROM w2)
+      ${doremiWeightsSql("alpha", "n2", "w2")}"""
+  }
+
   private def hitsSql(words: Seq[String]): String = {
     val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
     s"len(list_filter($lowToksSql, x -> list_contains($lst, x)))"
@@ -980,33 +1134,15 @@ object TextQueries {
              lower(regexp_extract(href, '^[^:/?#]+://([^/?#:]*)', 1)) AS host
       FROM l WHERE regexp_matches(href, '(?i)^https?://')""",
 
-    // integer-token PageRank, 3 iterations unrolled; '//' is DuckDB's
-    // floor division == Spark's `div` on the all-positive token counts,
-    // and integer sums are order-independent, so the replay is exact
     // t56: wedges = sum C(deg,2) over the canonical edge list,
     // triangles as in t55, coefficient = 3T/W
-    "t56_clustering" -> """
-      WITH raw AS (
-        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR) AS src,
-               'h' || CAST((doc_id * 3 + 1) % 13 AS VARCHAR) AS dst
-        FROM documents
-        UNION ALL
-        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR),
-               'h' || CAST((doc_id * 5 + 2) % 13 AS VARCHAR)
-        FROM documents),
-      und AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM raw WHERE least(src, dst) <> greatest(src, dst)),
+    "t56_clustering" -> s"""
+      WITH $hostEdgesSql,
       deg AS (
         SELECT v, count(*) AS d FROM
           (SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
       wg AS (SELECT CAST(sum((d * (d - 1)) // 2) AS BIGINT) AS wedges FROM deg),
-      w AS (
-        SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM und e1 JOIN und e2 ON e1.b = e2.a),
-      tr AS (
-        SELECT count(*) AS triangles
-        FROM w JOIN und e3 ON w.x = e3.a AND w.z = e3.b)
+      $trianglesSql
       SELECT wg.wedges, tr.triangles,
              round((3.0 * CAST(tr.triangles AS DOUBLE))
                    / CAST(wg.wedges AS DOUBLE), 6) AS coefficient
@@ -1014,30 +1150,18 @@ object TextQueries {
 
     // t55: same doc_id edge fixture; canonical (least, greatest)
     // orientation, DISTINCT simple edges, wedge join + closing join
-    "t55_triangles" -> """
-      WITH raw AS (
-        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR) AS src,
-               'h' || CAST((doc_id * 3 + 1) % 13 AS VARCHAR) AS dst
-        FROM documents
-        UNION ALL
-        SELECT 'h' || CAST(doc_id % 13 AS VARCHAR),
-               'h' || CAST((doc_id * 5 + 2) % 13 AS VARCHAR)
-        FROM documents),
-      und AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM raw WHERE least(src, dst) <> greatest(src, dst)),
-      w AS (
-        SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM und e1 JOIN und e2 ON e1.b = e2.a),
-      tr AS (
-        SELECT count(*) AS triangles
-        FROM w JOIN und e3 ON w.x = e3.a AND w.z = e3.b),
+    "t55_triangles" -> s"""
+      WITH $hostEdgesSql,
+      $trianglesSql,
       nn AS (SELECT count(*) AS n_nodes FROM
                (SELECT a AS v FROM und UNION SELECT b FROM und)),
       ne AS (SELECT count(*) AS n_edges FROM und)
       SELECT nn.n_nodes, ne.n_edges, tr.triangles
       FROM nn CROSS JOIN ne CROSS JOIN tr""",
 
+    // integer-token PageRank, 3 iterations unrolled; '//' is DuckDB's
+    // floor division == Spark's `div` on the all-positive token counts,
+    // and integer sums are order-independent, so the replay is exact
     "t48_host_rank" -> """
       WITH e AS (
         SELECT 'h' || (doc_id % 17) AS src,
@@ -1084,34 +1208,15 @@ object TextQueries {
     // sums (per-domain partials then across domains), the same
     // `a0 * exp(e) * exp(e)` product, one final normalize + smooth
     "t49_doremi_weights" -> s"""
-      WITH tok AS (SELECT doc_id, unnest($lowToksSql) AS term FROM documents),
-      dt AS (SELECT doc_id, term, count(*) AS c FROM tok WHERE term <> ''
-             GROUP BY 1, 2),
-      ct AS (SELECT term, sum(c) AS ct FROM dt GROUP BY 1),
-      tot AS (SELECT sum(ct) AS tot FROM ct),
+      WITH $unigramLmSql,
       dom AS (SELECT d.source, sum(dt.c) AS tokens,
                      sum(dt.c * ln(CAST(ct.ct AS DOUBLE)
                                    / (SELECT tot FROM tot))) AS lp
               FROM dt JOIN ct USING (term) JOIN documents d USING (doc_id)
               GROUP BY 1),
-      g AS (SELECT sum(tokens) AS gtok, sum(lp) AS glp, count(*) AS nd
-            FROM dom),
-      b AS (SELECT source, tokens,
-                   CASE WHEN (-lp / tokens) - (SELECT -glp / gtok FROM g) > 0
-                        THEN (-lp / tokens) - (SELECT -glp / gtok FROM g)
-                        ELSE 0 END AS excess,
-                   CAST(tokens AS DOUBLE) / (SELECT gtok FROM g) AS a0
-            FROM dom),
-      st AS (SELECT source, tokens, excess,
-                    a0 * exp(1.0 * excess) * exp(1.0 * excess) AS a
-             FROM b),
-      n AS (SELECT sum(a) AS asum FROM st)
+      $doremiStepSql
       -- CAST tokens: DuckDB HUGEINT SUM vs engine int64 (see t48)
-      SELECT source, CAST(tokens AS BIGINT) AS tokens,
-             round(excess, 6) AS excess_loss,
-             round(0.99 * a / (SELECT asum FROM n)
-                   + 0.01 / (SELECT nd FROM g), 6) AS weight
-      FROM st""",
+      ${doremiWeightsSql("a", "n", "st")}""",
 
     // t49c: the adaptive loop unrolled — alpha_0 uniform, reference =
     // corpus unigram LM (fixed), per-step proxy = the mixture-trained
@@ -1131,57 +1236,7 @@ object TextQueries {
                       sum(s.c * ln(CAST(c2.ct AS DOUBLE)
                                    / (SELECT gtok FROM g))) AS lpref
                FROM stc s JOIN ct c2 USING (term) GROUP BY 1),
-      w0 AS (SELECT t.source, t.tokens, l.lpref,
-                    1.0 / (SELECT nd FROM g) AS alpha
-             FROM tokd t JOIN lref l USING (source)),
-      n0 AS (SELECT sum(alpha) AS asum FROM w0),
-      c1 AS (SELECT source,
-                    ((alpha / (SELECT asum FROM n0)) / tokens) AS coef
-             FROM w0),
-      pm1 AS (SELECT term, sum(s.c * c1.coef) AS pm
-              FROM stc s JOIN c1 USING (source) GROUP BY 1),
-      ld1 AS (SELECT s.source, sum(s.c * ln(pm1.pm)) AS lp
-              FROM stc s JOIN pm1 USING (term) GROUP BY 1),
-      w1 AS (SELECT w0.source, w0.tokens, w0.lpref,
-                    CASE WHEN ((-ld1.lp / w0.tokens)
-                               - (-w0.lpref / w0.tokens)) > 0.0
-                         THEN ((-ld1.lp / w0.tokens)
-                               - (-w0.lpref / w0.tokens))
-                         ELSE 0.0 END AS excess,
-                    w0.alpha * exp(1.0 *
-                      CASE WHEN ((-ld1.lp / w0.tokens)
-                                 - (-w0.lpref / w0.tokens)) > 0.0
-                           THEN ((-ld1.lp / w0.tokens)
-                                 - (-w0.lpref / w0.tokens))
-                           ELSE 0.0 END) AS alpha
-             FROM w0 JOIN ld1 USING (source)),
-      n1 AS (SELECT sum(alpha) AS asum FROM w1),
-      c2s AS (SELECT source,
-                     ((alpha / (SELECT asum FROM n1)) / tokens) AS coef
-              FROM w1),
-      pm2 AS (SELECT term, sum(s.c * c2s.coef) AS pm
-              FROM stc s JOIN c2s USING (source) GROUP BY 1),
-      ld2 AS (SELECT s.source, sum(s.c * ln(pm2.pm)) AS lp
-              FROM stc s JOIN pm2 USING (term) GROUP BY 1),
-      w2 AS (SELECT w1.source, w1.tokens,
-                    CASE WHEN ((-ld2.lp / w1.tokens)
-                               - (-w1.lpref / w1.tokens)) > 0.0
-                         THEN ((-ld2.lp / w1.tokens)
-                               - (-w1.lpref / w1.tokens))
-                         ELSE 0.0 END AS excess,
-                    w1.alpha * exp(1.0 *
-                      CASE WHEN ((-ld2.lp / w1.tokens)
-                                 - (-w1.lpref / w1.tokens)) > 0.0
-                           THEN ((-ld2.lp / w1.tokens)
-                                 - (-w1.lpref / w1.tokens))
-                           ELSE 0.0 END) AS alpha
-             FROM w1 JOIN ld2 USING (source)),
-      n2 AS (SELECT sum(alpha) AS asum FROM w2)
-      SELECT source, CAST(tokens AS BIGINT) AS tokens,
-             round(excess, 6) AS excess_loss,
-             round(0.99 * alpha / (SELECT asum FROM n2)
-                   + 0.01 / (SELECT nd FROM g), 6) AS weight
-      FROM w2""",
+      ${doremiEgSql(identity, unigramProxySql)}""",
 
     // t60: the t49 term-count CTE + closed-form NB — per-term weights
     // and the prior mirror the engine's double trees; per-doc sums are
@@ -1229,19 +1284,11 @@ object TextQueries {
     // weight-invariant type statistics shared across steps; every float
     // tree mirrors the engine's parenthesization
     "t49d_doremi_kn_adaptive" -> s"""
-      WITH tok AS (SELECT doc_id, $lowToksSql AS t FROM documents),
-      bg AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1),
-                     i -> [t[i + 1], t[i + 2]])) AS p
-             FROM tok WHERE len(t) >= 2),
-      db AS (SELECT doc_id, p[1] AS v, p[2] AS w, count(*) AS c
-             FROM bg GROUP BY 1, 2, 3),
+      WITH $bigramsSql,
       sb AS (SELECT d.source, db.v, db.w, sum(db.c) AS c
              FROM db JOIN documents d USING (doc_id) GROUP BY 1, 2, 3),
       tokd AS (SELECT source, sum(c) AS tokens FROM sb GROUP BY 1),
-      cb AS (SELECT v, w, sum(c) AS cvw FROM sb GROUP BY 1, 2),
-      cv AS (SELECT v, sum(cvw) AS cv, count(*) AS n1v FROM cb GROUP BY 1),
-      cont AS (SELECT w, count(*) AS ncw FROM cb GROUP BY 1),
-      ty AS (SELECT count(*) AS types FROM cb),
+      ${knTablesSql("sb")},
       g AS (SELECT sum(tokens) AS gtok, count(*) AS nd FROM tokd),
       lref AS (SELECT s.source,
           sum(s.c * ln(
@@ -1252,118 +1299,21 @@ object TextQueries {
         FROM sb s JOIN cb USING (v, w) JOIN cv USING (v)
              JOIN cont USING (w)
         GROUP BY 1),
-      w0 AS (SELECT t.source, t.tokens, l.lpref,
-                    1.0 / (SELECT nd FROM g) AS alpha
-             FROM tokd t JOIN lref l USING (source)),
-      n0 AS (SELECT sum(alpha) AS asum FROM w0),
-      c1 AS (SELECT source,
-                    (((alpha / (SELECT asum FROM n0)) / tokens)
-                     * (SELECT gtok FROM g)) AS coef
-             FROM w0),
-      m1 AS (SELECT s.v, s.w, sum(s.c * c1.coef) AS mvw
-             FROM sb s JOIN c1 USING (source) GROUP BY 1, 2),
-      mv1 AS (SELECT v, sum(mvw) AS mv FROM m1 GROUP BY 1),
-      ld1 AS (SELECT s.source,
-          sum(s.c * ln(
-            ((CASE WHEN (m1.mvw - 0.75) > 0.0 THEN (m1.mvw - 0.75)
-                   ELSE 0.0 END) / mv1.mv)
-            + ((0.75 * (CAST(cv.n1v AS DOUBLE) / mv1.mv))
-               * (CAST(cont.ncw AS DOUBLE)
-                  / CAST((SELECT types FROM ty) AS DOUBLE))))) AS lp
-        FROM sb s JOIN m1 USING (v, w) JOIN mv1 USING (v)
-             JOIN cv USING (v) JOIN cont USING (w)
-        GROUP BY 1),
-      w1 AS (SELECT w0.source, w0.tokens, w0.lpref,
-                    CASE WHEN ((-ld1.lp / w0.tokens)
-                               - (-w0.lpref / w0.tokens)) > 0.0
-                         THEN ((-ld1.lp / w0.tokens)
-                               - (-w0.lpref / w0.tokens))
-                         ELSE 0.0 END AS excess,
-                    w0.alpha * exp(1.0 *
-                      CASE WHEN ((-ld1.lp / w0.tokens)
-                                 - (-w0.lpref / w0.tokens)) > 0.0
-                           THEN ((-ld1.lp / w0.tokens)
-                                 - (-w0.lpref / w0.tokens))
-                           ELSE 0.0 END) AS alpha
-             FROM w0 JOIN ld1 USING (source)),
-      n1 AS (SELECT sum(alpha) AS asum FROM w1),
-      c2s AS (SELECT source,
-                     (((alpha / (SELECT asum FROM n1)) / tokens)
-                      * (SELECT gtok FROM g)) AS coef
-              FROM w1),
-      m2 AS (SELECT s.v, s.w, sum(s.c * c2s.coef) AS mvw
-             FROM sb s JOIN c2s USING (source) GROUP BY 1, 2),
-      mv2 AS (SELECT v, sum(mvw) AS mv FROM m2 GROUP BY 1),
-      ld2 AS (SELECT s.source,
-          sum(s.c * ln(
-            ((CASE WHEN (m2.mvw - 0.75) > 0.0 THEN (m2.mvw - 0.75)
-                   ELSE 0.0 END) / mv2.mv)
-            + ((0.75 * (CAST(cv.n1v AS DOUBLE) / mv2.mv))
-               * (CAST(cont.ncw AS DOUBLE)
-                  / CAST((SELECT types FROM ty) AS DOUBLE))))) AS lp
-        FROM sb s JOIN m2 USING (v, w) JOIN mv2 USING (v)
-             JOIN cv USING (v) JOIN cont USING (w)
-        GROUP BY 1),
-      w2 AS (SELECT w1.source, w1.tokens,
-                    CASE WHEN ((-ld2.lp / w1.tokens)
-                               - (-w1.lpref / w1.tokens)) > 0.0
-                         THEN ((-ld2.lp / w1.tokens)
-                               - (-w1.lpref / w1.tokens))
-                         ELSE 0.0 END AS excess,
-                    w1.alpha * exp(1.0 *
-                      CASE WHEN ((-ld2.lp / w1.tokens)
-                                 - (-w1.lpref / w1.tokens)) > 0.0
-                           THEN ((-ld2.lp / w1.tokens)
-                                 - (-w1.lpref / w1.tokens))
-                           ELSE 0.0 END) AS alpha
-             FROM w1 JOIN ld2 USING (source)),
-      n2 AS (SELECT sum(alpha) AS asum FROM w2)
-      SELECT source, CAST(tokens AS BIGINT) AS tokens,
-             round(excess, 6) AS excess_loss,
-             round(0.99 * alpha / (SELECT asum FROM n2)
-                   + 0.01 / (SELECT nd FROM g), 6) AS weight
-      FROM w2""",
+      ${doremiEgSql(share => s"($share * (SELECT gtok FROM g))", knProxySql)}""",
 
     // t49b: the t26 Kneser-Ney statistics (integer aggregates over the
     // bigram-type table) rolled up per SOURCE, then the t49 EG trees
     "t49b_doremi_kn" -> s"""
-      WITH tok AS (SELECT doc_id, $lowToksSql AS t FROM documents),
-      bg AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1),
-                     i -> [t[i + 1], t[i + 2]])) AS p
-             FROM tok WHERE len(t) >= 2),
-      db AS (SELECT doc_id, p[1] AS v, p[2] AS w, count(*) AS c
-             FROM bg GROUP BY 1, 2, 3),
-      cb AS (SELECT v, w, sum(c) AS cvw FROM db GROUP BY 1, 2),
-      cv AS (SELECT v, sum(cvw) AS cv, count(*) AS n1v FROM cb GROUP BY 1),
-      cont AS (SELECT w, count(*) AS ncw FROM cb GROUP BY 1),
-      ty AS (SELECT count(*) AS types FROM cb),
+      WITH $bigramsSql,
+      ${knTablesSql("db")},
       dom AS (SELECT d.source, sum(db.c) AS tokens,
-                     sum(db.c * ln(
-                       (CAST(cvw AS DOUBLE) - 0.75) / CAST(cv AS DOUBLE) +
-                       0.75 * (CAST(n1v AS DOUBLE) / CAST(cv AS DOUBLE)) *
-                              (CAST(ncw AS DOUBLE) / CAST(types AS DOUBLE))))
-                       AS lp
+                     sum(db.c * ln($knProbSql)) AS lp
               FROM db JOIN cb USING (v, w) JOIN cv USING (v)
                    JOIN cont USING (w) CROSS JOIN ty
                    JOIN documents d USING (doc_id)
               GROUP BY 1),
-      g AS (SELECT sum(tokens) AS gtok, sum(lp) AS glp, count(*) AS nd
-            FROM dom),
-      b AS (SELECT source, tokens,
-                   CASE WHEN (-lp / tokens) - (SELECT -glp / gtok FROM g) > 0
-                        THEN (-lp / tokens) - (SELECT -glp / gtok FROM g)
-                        ELSE 0 END AS excess,
-                   CAST(tokens AS DOUBLE) / (SELECT gtok FROM g) AS a0
-            FROM dom),
-      st AS (SELECT source, tokens, excess,
-                    a0 * exp(1.0 * excess) * exp(1.0 * excess) AS a
-             FROM b),
-      n AS (SELECT sum(a) AS asum FROM st)
-      SELECT source, CAST(tokens AS BIGINT) AS tokens,
-             round(excess, 6) AS excess_loss,
-             round(0.99 * a / (SELECT asum FROM n)
-                   + 0.01 / (SELECT nd FROM g), 6) AS weight
-      FROM st""",
+      $doremiStepSql
+      ${doremiWeightsSql("a", "n", "st")}""",
 
     // identical code-point ranges (shared \x{...} syntax — no \p{script}
     // classes, whose tables drift with Unicode versions); dominant =
@@ -1715,18 +1665,8 @@ object TextQueries {
 
     // distinct 3-gram shingles per doc (short-doc branch: whole text is
     // the single shingle), df=1 share rounded to 6
-    "t39_novelty" -> """
-      WITH sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             range(len(string_split_regex(trim(text), '\s+')) - 2),
-             i -> list_reduce(list_transform(range(i, i + 3),
-                    j -> (string_split_regex(trim(text), '\s+'))[j + 1]),
-                  (a, b) -> a || ' ' || b)))) AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) >= 3
-           UNION ALL
-           SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS sh
-           FROM documents
-           WHERE len(string_split_regex(trim(text), '\s+')) < 3),
+    "t39_novelty" -> s"""
+      WITH sh AS (${Q.shingleSetSql("doc_id", "documents", 3)}),
       df AS (SELECT sh, count(*) AS d FROM sh GROUP BY 1)
       SELECT doc_id, count(*) AS n_shingles,
              round(avg(CASE WHEN d = 1 THEN 1.0 ELSE 0.0 END), 6) AS novelty
@@ -1972,12 +1912,9 @@ object TextQueries {
       QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY bm25 DESC, term) <= 3""",
 
     "t13_lm_score" -> s"""
-      WITH tok AS (SELECT doc_id, unnest($lowToksSql) AS term FROM documents),
-      dt AS (SELECT doc_id, term, count(*) AS c FROM tok WHERE term <> '' GROUP BY 1, 2),
-      ct AS (SELECT term, sum(c) AS ct FROM dt GROUP BY 1),
-      tot AS (SELECT sum(ct) AS tot FROM ct)
+      WITH $unigramLmSql
       SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-             round(sum(c * ln(CAST(ct AS DOUBLE) / tot)) / sum(c), 6) AS mean_logprob
+             $meanLogProbSql AS mean_logprob
       FROM dt JOIN ct USING (term) CROSS JOIN tot
       GROUP BY doc_id""",
 
@@ -2017,12 +1954,8 @@ object TextQueries {
     // t28: rank on the ROUNDED score (t12 rule) + integer third
     // boundaries (3*rk <= n) — no ntile() ambiguity across engines
     "t28_perplexity_buckets" -> s"""
-      WITH tok AS (SELECT doc_id, unnest($lowToksSql) AS term FROM documents),
-      dt AS (SELECT doc_id, term, count(*) AS c FROM tok WHERE term <> '' GROUP BY 1, 2),
-      ct AS (SELECT term, sum(c) AS ct FROM dt GROUP BY 1),
-      tot AS (SELECT sum(ct) AS tot FROM ct),
-      lm AS (SELECT doc_id,
-               round(sum(c * ln(CAST(ct AS DOUBLE) / tot)) / sum(c), 6) AS mean_logprob
+      WITH $unigramLmSql,
+      lm AS (SELECT doc_id, $meanLogProbSql AS mean_logprob
              FROM dt JOIN ct USING (term) CROSS JOIN tot GROUP BY doc_id),
       r AS (SELECT d.doc_id, d.source, lm.mean_logprob,
               row_number() OVER (PARTITION BY d.source
@@ -2067,12 +2000,8 @@ object TextQueries {
 
     // t36: t28's buckets + the t19 seeded-md5 order within each stage
     "t36_curriculum" -> s"""
-      WITH tok AS (SELECT doc_id, unnest($lowToksSql) AS term FROM documents),
-      dt AS (SELECT doc_id, term, count(*) AS c FROM tok WHERE term <> '' GROUP BY 1, 2),
-      ct AS (SELECT term, sum(c) AS ct FROM dt GROUP BY 1),
-      tot AS (SELECT sum(ct) AS tot FROM ct),
-      lm AS (SELECT doc_id,
-               round(sum(c * ln(CAST(ct AS DOUBLE) / tot)) / sum(c), 6) AS mean_logprob
+      WITH $unigramLmSql,
+      lm AS (SELECT doc_id, $meanLogProbSql AS mean_logprob
              FROM dt JOIN ct USING (term) CROSS JOIN tot GROUP BY doc_id),
       r AS (SELECT d.doc_id, d.source,
               row_number() OVER (PARTITION BY d.source
@@ -2110,32 +2039,16 @@ object TextQueries {
       SELECT doc_id, source FROM r JOIN q USING (source) WHERE rk <= q""",
 
     "t26_bigram_kn" -> s"""
-      WITH tok AS (SELECT doc_id, $lowToksSql AS t FROM documents),
-      bg AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1),
-                     i -> [t[i + 1], t[i + 2]])) AS p
-             FROM tok WHERE len(t) >= 2),
-      db AS (SELECT doc_id, p[1] AS v, p[2] AS w, count(*) AS c
-             FROM bg GROUP BY 1, 2, 3),
-      cb AS (SELECT v, w, sum(c) AS cvw FROM db GROUP BY 1, 2),
-      cv AS (SELECT v, sum(cvw) AS cv, count(*) AS n1v FROM cb GROUP BY 1),
-      cont AS (SELECT w, count(*) AS ncw FROM cb GROUP BY 1),
-      ty AS (SELECT count(*) AS types FROM cb)
+      WITH $bigramsSql,
+      ${knTablesSql("db")}
       SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-             round(sum(c * ln((CAST(cvw AS DOUBLE) - 0.75) / CAST(cv AS DOUBLE) +
-                              0.75 * (CAST(n1v AS DOUBLE) / CAST(cv AS DOUBLE)) *
-                                     (CAST(ncw AS DOUBLE) / CAST(types AS DOUBLE)))) /
-                   sum(c), 6) AS mean_logprob
+             round(sum(c * ln($knProbSql)) / sum(c), 6) AS mean_logprob
       FROM db JOIN cb USING (v, w) JOIN cv USING (v) JOIN cont USING (w)
            CROSS JOIN ty
       GROUP BY doc_id""",
 
     "t24_bigram_lm" -> s"""
-      WITH tok AS (SELECT doc_id, $lowToksSql AS t FROM documents),
-      bg AS (SELECT doc_id, unnest(list_transform(range(len(t) - 1),
-                     i -> [t[i + 1], t[i + 2]])) AS p
-             FROM tok WHERE len(t) >= 2),
-      db AS (SELECT doc_id, p[1] AS v, p[2] AS w, count(*) AS c
-             FROM bg GROUP BY 1, 2, 3),
+      WITH $bigramsSql,
       cb AS (SELECT v, w, sum(c) AS cvw FROM db GROUP BY 1, 2),
       cv AS (SELECT v, sum(cvw) AS cv FROM cb GROUP BY 1),
       un AS (SELECT doc_id, unnest(t) AS w FROM tok),

@@ -65,6 +65,25 @@ class DsirSpec extends SparkSpec {
     assert(streamed == batch, "stream and batch scores must be bit-identical")
   }
 
+  test("scoreMapOnly tokenizes as featureRows: tab and newline edges, inner tabs") {
+    import spark.implicits._
+    val target = Seq((100L, "alpha beta gamma"), (101L, "beta\tgamma delta"))
+      .toDF("doc_id", "text")
+    val raw = Seq(
+      (1L, "\tAlpha beta gamma\n"),
+      (2L, "\t\tbeta\tgamma"),
+      (3L, "delta alpha\n\n"),
+      (4L, "  beta gamma  ")).toDF("doc_id", "text")
+    val table = Dsir.logRatioTable(raw, target, "text", "doc_id")
+    val mapOnly = Dsir.scoreMapOnly(raw, "text", "doc_id", table)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val agg = Dsir.importanceWeights(raw, target, "text", "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(mapOnly.keySet == agg.keySet)
+    for ((id, w) <- agg)
+      assert(math.abs(mapOnly(id) - w) < 1e-6, s"doc $id: ${mapOnly(id)} vs $w")
+  }
+
   test("selectTopK: deterministic k rows, descending rounded weights") {
     import spark.implicits._
     val target = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")

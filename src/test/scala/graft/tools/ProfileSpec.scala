@@ -31,12 +31,21 @@ class ProfileSpec extends SparkSpec {
       assert(count(first, key) == count(second, key), s"$key: $first vs $second")
   }
 
+  private def assertEqualPlans(q: String): Unit = {
+    val Seq(a, b) = Seq("plan1", "plan2").map(Profile.record(spark, sf, q, _, Set("plan")))
+    for (key <- Seq("plan_initial", "plan_final"))
+      assert(a(key) == b(key), s"$key:\n${a(key)}\nvs\n${b(key)}")
+  }
+
   test("--plan records of two runs print equal plans") {
     // expression ids, plan ids and codegen ids differ between the runs;
     // the printed plans must not
-    val Seq(a, b) = Seq("plan1", "plan2").map(Profile.record(spark, sf, query, _, Set("plan")))
-    for (key <- Seq("plan_initial", "plan_final"))
-      assert(a(key) == b(key), s"$key:\n${a(key)}\nvs\n${b(key)}")
+    assertEqualPlans(query)
+  }
+
+  test("--plan records of two q16 runs print equal plans") {
+    // both plans print the names of the bucketed tables q16 writes
+    assertEqualPlans("q16_bucketed_join")
   }
 
   test("a re-run compiles no class after more than 100 others compiled") {
